@@ -658,17 +658,15 @@ def ann_recall(spark, sf_dir: str, n_queries: int = 50) -> dict:
     (approximate by construction), so quality is surfaced here where
     the judge can trend it round-over-round.
 
-    - ivf_* (the documented SEARCH-regime default): recall@3 and
-      recall@10 vs brute-force cosine on the natural embeddings, each
-      with its scanned corpus fraction (nprobe*n_assign/n_centroids).
-      The natural corpus is near-orthogonal — the hard regime where
+    - ivf_*index*: recall@3 and recall@10 vs brute-force cosine on
+      the natural embeddings, through the persisted index the
+      declared x2b/x2d queries search (plain and JL-preranked), with
+      the scanned corpus fraction (nprobe*n_assign/n_centroids). The
+      natural corpus is near-orthogonal — the hard regime where
       recall tracks scan coverage; clustered corpora buy more recall
-      per scanned byte.
-    - lsh_*: the dedup-regime index on the same task (kept for trend;
-      weak here by design — sign-LSH concentrates cos->1 pairs only).
-    - *_planted_hit_rate: fraction of planted true near-duplicates
-      (cosine ~0.9999) retrieved at rank 1 — the regime ANN dedup
-      actually targets.
+      per scanned byte. The planted near-duplicate regime is pinned
+      by tests/test_ann_recall.py.
+    - ivfpq_*: the compressed persisted index (L2 metric).
     """
     from pyspark.sql import functions as F
 
@@ -678,9 +676,6 @@ def ann_recall(spark, sf_dir: str, n_queries: int = 50) -> dict:
         N_ASSIGN,
         N_CENTROIDS,
         NPROBE,
-        ann_topk_ivf,
-        ann_topk_ivf_prerank,
-        ann_topk_lsh,
         cosine_topk,
         ivf_index_for,
         search_ivf_index,
@@ -703,19 +698,13 @@ def ann_recall(spark, sf_dir: str, n_queries: int = 50) -> dict:
 
     n_corpus = emb.count()
     coverage = NPROBE * N_ASSIGN / N_CENTROIDS
-    # measured at sf0.1 (r4 grid): recall@3 0.90 at 0.17 effective vs
-    # plain IVF 1.00 at 0.25 — two points on the recall/cost curve
-    proj_dim, rerank = 24, 150
+    proj_dim = 24
     out = {
         "n_queries": n_queries,
         "ivf_scan_fraction": round(coverage, 4),
-        "ivf_scan_fraction_single_assign": round(NPROBE / N_CENTROIDS, 4),
-        # JL pre-rank (VERDICT r3 #5): full-dim-equivalent work per
-        # query = probed coverage at proj_dim cost + the exact rerank
-        "ivf_prerank_effective_scan_fraction": round(
-            coverage * proj_dim / EMB_DIM + rerank / n_corpus, 4
-        ),
-        # the declared x2b path (persisted index, rerank=250 default)
+        # the declared x2b path (persisted index, rerank=250 default):
+        # full-dim-equivalent work per query = probed coverage at
+        # proj_dim cost + the exact rerank
         "ivf_prerank_index_effective_scan_fraction": round(
             coverage * proj_dim / EMB_DIM + 250 / n_corpus, 4
         ),
@@ -725,9 +714,6 @@ def ann_recall(spark, sf_dir: str, n_queries: int = 50) -> dict:
             (r["q_id"], r["vec_id"])
             for r in cosine_topk(queries, emb, k=k).collect()
         }
-        out[f"ivf_recall_at_{k}"] = _recall(
-            ann_topk_ivf(emb, qids, k=k), exact
-        )
         # the declared x2d/x2b path: search over the PERSISTED index
         # (k-means-refined quantizer, partition-pruned scan)
         out[f"ivf_index_recall_at_{k}"] = _recall(
@@ -736,48 +722,6 @@ def ann_recall(spark, sf_dir: str, n_queries: int = 50) -> dict:
         out[f"ivf_prerank_index_recall_at_{k}"] = _recall(
             search_ivf_index_prerank(index, q_batch, k=k), exact
         )
-        out[f"ivf_recall_at_{k}_single_assign"] = _recall(
-            ann_topk_ivf(emb, qids, k=k, n_assign=1), exact
-        )
-        out[f"ivf_prerank_recall_at_{k}"] = _recall(
-            ann_topk_ivf_prerank(
-                emb, qids, k=k, proj_dim=proj_dim, rerank=rerank
-            ),
-            exact,
-        )
-        if k == 3:
-            out["lsh_recall_at_3"] = _recall(
-                ann_topk_lsh(emb, qids), exact
-            )
-            out["lsh_multiprobe_recall_at_3"] = _recall(
-                ann_topk_lsh(emb, qids, multi_probe=1), exact
-            )
-
-    # planted near-duplicates: perturb one coordinate by 1%
-    offset = 1_000_000
-    n_planted = n_queries
-    dups = emb.filter(F.col("vec_id") < n_planted).select(
-        (F.col("vec_id") + offset).alias("vec_id"),
-        F.transform(
-            "embedding", lambda x, i: F.when(i == 0, x * 1.01).otherwise(x)
-        ).alias("embedding"),
-        "label",
-    )
-    planted = emb.unionByName(dups)
-    pq = planted.select("vec_id").filter(F.col("vec_id") >= offset)
-
-    def _hit_rate(df) -> float:
-        hits = sum(
-            1
-            for r in df.collect()
-            if r["vec_id"] == r["q_id"] - offset and r["rank"] == 1
-        )
-        return round(hits / n_planted, 4)
-
-    out["lsh_planted_hit_rate"] = _hit_rate(
-        ann_topk_lsh(planted, pq, k=1, multi_probe=1)
-    )
-    out["ivf_planted_hit_rate"] = _hit_rate(ann_topk_ivf(planted, pq, k=1))
 
     # IVF-PQ (r4 s3): the compressed persisted index — L2 metric, so
     # ground truth is exact L2 top-10 (rerank over the full corpus),
@@ -1160,7 +1104,7 @@ def main() -> None:
     # publish the resolved input dir so the session factory's
     # bytes-derived shuffle-partition default (r19, VERDICT r18 #4)
     # sees it even when the driver relied on the default path
-    os.environ.setdefault("SPARK_GRAFT_SF_DIR", sf_dir)
+    os.environ["SPARK_GRAFT_SF_DIR"] = sf_dir
     run_ticks = _cpu_ticks()
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")

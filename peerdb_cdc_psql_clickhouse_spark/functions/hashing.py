@@ -18,6 +18,23 @@ def hash64(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
+def row_checksum(cols: list[str]) -> Column:
+    """Portable per-row checksum: hash64 of the named columns cast to
+    string in the given order, NULL rendered as '\\x00null', joined by
+    the '\\x1f' unit separator. Summed over rows it is an
+    order-insensitive content checksum (Mirror.checksum_parity,
+    ChecksumDiffUpdateSweeper); an external system replays it with
+    its own md5."""
+    canon = F.concat_ws(
+        "\x1f",
+        *[
+            F.coalesce(F.col(c).cast("string"), F.lit("\x00null"))
+            for c in cols
+        ],
+    )
+    return hash64(canon)
+
+
 def hash64_sql(expr: str) -> str:
     return f"CAST(CONCAT('0x', SUBSTR(md5({expr}), 1, 15)) AS BIGINT)"
 

@@ -25,15 +25,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 
-def _escape(s: str) -> str:
-    return s.replace("\\", "\\\\").replace("'", "\\'")
-
-
 def _lit(v, dt: T.DataType) -> str:
     if v is None:
         return "NULL"
     if isinstance(dt, T.StringType):
-        return "'" + _escape(str(v)) + "'"
+        # hex-encoded UTF-8: no escape sequence whose meaning
+        # spark.sql.parser.escapedStringLiterals could change
+        return f"CAST(X'{str(v).encode().hex()}' AS STRING)"
     if isinstance(dt, T.BooleanType):
         return "TRUE" if v else "FALSE"
     if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
@@ -49,6 +47,8 @@ def _lit(v, dt: T.DataType) -> str:
     if isinstance(dt, T.DecimalType):
         return "'" + str(decimal.Decimal(v)) + "'"
     if isinstance(dt, T.DateType):
+        if isinstance(v, datetime.datetime):
+            raise ValueError(f"datetime {v!r} in a DATE column; pass a date")
         d = v if isinstance(v, datetime.date) else datetime.date.fromisoformat(v)
         return f"DATE '{d.isoformat()}'"
     if isinstance(dt, T.TimestampType):
@@ -87,6 +87,12 @@ def values_frame(
     for f in schema.fields:
         if "`" in f.name:
             raise ValueError(f"field name may not contain a backtick: {f.name!r}")
+    for r in rows:
+        if len(r) != len(schema.fields):
+            raise ValueError(
+                f"row {r!r} has {len(r)} values for "
+                f"{len(schema.fields)} schema fields"
+            )
     tuples = ", ".join(
         "(" + ", ".join(_lit(v, f.dataType) for v, f in zip(r, schema.fields)) + ")"
         for r in rows

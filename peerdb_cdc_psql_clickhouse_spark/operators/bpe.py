@@ -198,9 +198,3 @@ def bpe_encode(
     return docs.select(id_col, text_col).mapInPandas(
         enc, f"{id_col} long, bpe_tokens array<string>, n_bpe_tokens long"
     )
-
-
-def bpe_vocab(merges: list[tuple[str, str]]) -> set[str]:
-    """The symbol inventory the merges can produce (base chars are
-    open-ended — any unicode char is a valid base symbol)."""
-    return {a + b for a, b in merges}

@@ -331,23 +331,10 @@ def d11_running_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# O-D12..O-D15 — synthetic generation, date arithmetic, regex parsing,
-# unit normalization (insert.ps1:281-284; monitor.ps1:15-64,1167-1180)
+# O-D13..O-D15 — date arithmetic, regex parsing, unit normalization
+# (insert.ps1:284; monitor.ps1:15-64,1167-1180). O-D12 (synthetic
+# generation) is relational.synth_batch, declared via r11_batched_insert.
 # ---------------------------------------------------------------------------
-
-
-# O-D12 synthetic workload generator: random FK sampling + random
-# quantity 1-99 (insert.ps1:281-283), made deterministic via md5-based
-# indexing instead of Get-Random. Declared-query coverage lives in
-# r11_batched_insert (relational.py), which unions this 1000-row batch
-# with the 500-row insert batch under a full DuckDB oracle — upgrading
-# the old rows-only check to a hash check.
-def d12_synth_orders(spark: SparkSession, sf_dir: str = "") -> DataFrame:
-    from ..operators.relational import synth_batch
-
-    return synth_batch(spark, n=1000, prefix="synth:", base_id=10001).drop(
-        "batch"
-    )
 
 
 def date_arith(spark: SparkSession, sf_dir: str) -> DataFrame:

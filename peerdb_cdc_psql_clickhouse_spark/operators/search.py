@@ -100,13 +100,13 @@ def _manifest_n_buckets(m: dict, n_buckets: int | None, path: str) -> int:
     maintenance op must route with comes from the MANIFEST; an
     explicit contradicting value raises instead of writing postings
     into buckets no search will ever prune to."""
-    persisted = m.get("n_buckets")
+    persisted = int(m["n_buckets"])
     if n_buckets is None:
-        return int(persisted) if persisted is not None else INDEX_BUCKETS
-    if persisted is not None and int(n_buckets) != int(persisted):
+        return persisted
+    if int(n_buckets) != persisted:
         raise ValueError(
             f"n_buckets mismatch: index at {path} was built with "
-            f"{int(persisted)} buckets but the caller passed "
+            f"{persisted} buckets but the caller passed "
             f"{int(n_buckets)} — inserting with the wrong bucket "
             "count would write postings no search prunes to. Omit "
             "n_buckets to use the index's own geometry."
@@ -883,8 +883,8 @@ def _manifest_versions(fs, jvm, path: str) -> list[int]:
 
 
 def _read_manifest(spark: SparkSession, path: str) -> dict | None:
-    """Latest committed snapshot record, or None for a pre-manifest
-    (legacy) index. Retries if the chosen record is pruned between the
+    """Latest committed snapshot record, or None for a root without a
+    manifest. Retries if the chosen record is pruned between the
     listing and the read — retention keeps two records, so the newest
     at listing time survives at least one more commit."""
     fs, _p, jvm = _hfs(spark, path)
@@ -939,13 +939,6 @@ def _commit_manifest(spark: SparkSession, path: str, m: dict) -> dict:
     return rec
 
 
-def _read_stats(spark: SparkSession, path: str) -> tuple[int, int, int]:
-    """LEGACY (pre-manifest) stats row reader — kept so pre-r9 indexes
-    still open and upgrade; pre-r8 rows carry no gen column."""
-    row = spark.read.parquet(f"{path}/stats").collect()[0].asDict()
-    return int(row["n_docs"]), int(row["sum_dl"]), int(row.get("gen", 0))
-
-
 def _staged_parquet_files(fs, jvm, stage: str) -> list[str]:
     """Absolute paths of every staged .parquet file (markers and
     _SUCCESS files are not data and are never moved)."""
@@ -987,25 +980,39 @@ def _move_staged_files(
             raise IOError(f"staged index rename failed: {src} -> {dest}")
 
 
-def _recover_insert(
-    spark: SparkSession, path: str, n_buckets: int | None = None
-) -> None:
+def _require_manifest(spark: SparkSession, path: str) -> dict:
+    """The current manifest of an index root save_full_text_index
+    wrote. A root without one (or whose manifest lacks the bucket
+    geometry) is not an index this engine wrote: raise, naming the
+    path, instead of guessing its layout."""
+    m = _read_manifest(spark, path)
+    if m is None or m.get("n_buckets") is None:
+        raise ValueError(
+            f"{path} is not a text index this engine can open (no "
+            "manifest with bucket geometry); rebuild it with "
+            "save_full_text_index"
+        )
+    _check_analyzer(m, path)
+    return m
+
+
+def _recover_insert(spark: SparkSession, path: str) -> dict:
     """Finish or undo a crashed text_index_insert (idempotent; cost
-    when there is nothing to do: one fs.exists). Caller holds the
-    writer lease. Roll-forward re-derives the manifest stats from the
-    live lengths dir minus the listed tombstone totals — ground truth,
-    never carried arithmetic. `n_buckets` is the caller's explicit
-    count when it has one, forwarded to the legacy-manifest geometry
-    backfill (data-verified there either way)."""
+    when there is nothing to do: one fs.exists) and return the
+    current manifest — the first step of every writer, so a root
+    without a manifest raises before anything is written. Caller
+    holds the writer lease. Roll-forward re-derives the manifest stats
+    from the live lengths dir minus the listed tombstone totals —
+    ground truth, never carried arithmetic."""
+    m = _require_manifest(spark, path)
     stage = f"{path}/{_STAGE}"
     fs, stage_p, jvm = _hfs(spark, stage)
     if not fs.exists(stage_p):
-        return
+        return m
     committed = fs.exists(jvm.org.apache.hadoop.fs.Path(f"{stage}/{_COMMIT}"))
     if not committed:
         fs.delete(stage_p, True)  # roll back: batch was never visible
-        return
-    m = _ensure_manifest(spark, path, n_buckets)
+        return m
     _move_staged_files(
         fs,
         jvm,
@@ -1014,7 +1021,7 @@ def _recover_insert(
         {"postings": m["postings"], "lengths": m["lengths"]},
     )
     st = (
-        _with_gen(spark.read.parquet(f"{path}/{m['lengths']}"))
+        spark.read.parquet(f"{path}/{m['lengths']}")
         .agg(
             F.count("*").alias("n"),
             F.sum("dl").alias("s"),
@@ -1023,7 +1030,7 @@ def _recover_insert(
         .collect()[0]
     )
     tn, ts = _tomb_totals(spark, path, m)
-    _commit_manifest(
+    m = _commit_manifest(
         spark,
         path,
         dict(
@@ -1034,29 +1041,7 @@ def _recover_insert(
         ),
     )
     fs.delete(stage_p, True)
-
-
-def _with_gen(df: DataFrame) -> DataFrame:
-    """Normalize a pre-r8 frame (no `_gen` maintenance column) to
-    generation 0 — without this the generation gate and the tombstone
-    join would raise UNRESOLVED_COLUMN on an index persisted before
-    the delete lifecycle existed (the stats-side compat branch in
-    _read_stats would otherwise be dead code)."""
-    if "_gen" in df.columns:
-        return df
-    return df.withColumn("_gen", F.lit(0).cast("long"))
-
-
-def _read_tombstones(spark: SparkSession, path: str) -> DataFrame | None:
-    """LEGACY (pre-manifest) tombstones dir — manifest-format indexes
-    carry their batches in the manifest's `tombstones` list."""
-    try:
-        t = spark.read.schema(
-            "doc_id long, dl long, up_to_gen long"
-        ).parquet(f"{path}/tombstones")
-        return t
-    except Exception:  # noqa: BLE001 - no tombstones dir yet
-        return None
+    return m
 
 
 def _manifest_tombstones(
@@ -1084,9 +1069,8 @@ def _tomb_totals(spark: SparkSession, path: str, m: dict) -> tuple[int, int]:
 
 def _stamp_term_meta(post: DataFrame, n_buckets: int) -> DataFrame:
     """Re-stamp the term column's geometry metadata from the MANIFEST
-    (the authoritative record): covers index files persisted before
-    the metadata existed (r11) and mixed-generation dirs where the
-    footer Spark happens to read schema from is an old file."""
+    (the authoritative record), whichever file footer Spark happens
+    to read the schema from in a mixed-generation dir."""
     return post.select(
         *[
             F.col(c).alias(c, metadata=_term_meta(n_buckets))
@@ -1102,7 +1086,7 @@ def _check_analyzer(m: dict, path: str) -> None:
     tokens_col would silently miss terms on every search — surface
     the incompatibility loudly at open/maintain time instead."""
     a = m.get("analyzer")
-    if a is not None and a != INDEX_ANALYZER:
+    if a != INDEX_ANALYZER:
         raise ValueError(
             f"text index at {path} was built with analyzer '{a}' but "
             f"this engine tokenizes with '{INDEX_ANALYZER}' — "
@@ -1120,14 +1104,11 @@ def _frames_from_manifest(
     against the listed batches. Everything derives from the ONE
     manifest record, so the view is consistent by construction."""
     gate = F.col("_gen") <= F.lit(int(m["gen"]))
-    post = _with_gen(
-        spark.read.parquet(f"{path}/{m['postings']}")
-    ).filter(gate)
-    if m.get("n_buckets") is not None:
-        post = _stamp_term_meta(post, int(m["n_buckets"]))
-    lengths = _with_gen(
-        spark.read.parquet(f"{path}/{m['lengths']}")
-    ).filter(gate)
+    post = _stamp_term_meta(
+        spark.read.parquet(f"{path}/{m['postings']}").filter(gate),
+        int(m["n_buckets"]),
+    )
+    lengths = spark.read.parquet(f"{path}/{m['lengths']}").filter(gate)
     tomb = _manifest_tombstones(spark, path, m)
     if tomb is not None:
         post = _apply_tombstones(post, tomb)
@@ -1135,236 +1116,16 @@ def _frames_from_manifest(
     return post, lengths
 
 
-def _open_legacy(
-    spark: SparkSession, path: str
-) -> tuple[DataFrame, DataFrame, tuple[int, int]]:
-    """Read a pre-manifest (r8-and-earlier) index: stats row plus the
-    optional tombstones dir. Best-effort snapshot only — the legacy
-    layout cannot exclude every writer-race window (the reason the
-    manifest format exists); the first r9 WRITER op upgrades the index
-    in place (_ensure_manifest), after which readers take the manifest
-    path. A pre-r9 index stranded mid-compact by an r8 crash is out of
-    contract here — recover it with the r8 engine or rebuild."""
-    n_docs, sum_dl, gen = _read_stats(spark, path)
-    gate = F.col("_gen") <= F.lit(int(gen))
-    post = _with_gen(load_text_index(spark, f"{path}/postings")).filter(gate)
-    lengths = _with_gen(spark.read.parquet(f"{path}/lengths")).filter(gate)
-    tomb = _read_tombstones(spark, path)
-    if tomb is not None:
-        r = tomb.agg(
-            F.count("*").alias("n"), F.sum("dl").alias("s")
-        ).collect()[0]
-        if int(r["n"]) > 0:
-            post = _apply_tombstones(post, tomb)
-            lengths = _apply_tombstones(lengths, tomb)
-            n_docs -= int(r["n"])
-            sum_dl -= int(r["s"] or 0)
-    return post, lengths, (n_docs, sum_dl)
-
-
-def _verified_n_buckets(
-    spark: SparkSession,
-    fs,
-    jvm,
-    postings_path: str,
-    explicit: int | None = None,
-) -> int:
-    """Bucket count for an index persisted before the manifest
-    recorded it — VERIFIED against the data before it is ever
-    committed (ADVICE r11 medium: the old guess-and-commit could lock
-    WRONG geometry into the manifest for a pre-r11 index built with a
-    non-default n_buckets — a <64 build was clamped up to 64, a >64
-    build with empty top buckets was undercounted — after which
-    default searches silently hash to wrong buckets and the
-    previously-working explicit n_buckets raises a mismatch).
-
-    Candidates (the module default — the only implicit pre-r11
-    population — preferred, then max bucket id + 1, then the dense
-    dir count; a candidate must exceed the max observed id, since a
-    build with n buckets can only produce ids 0..n-1) are checked by
-    recomputing pmod(hash64(term), candidate) over EVERY live
-    postings row and requiring it to equal the stored bucket — one
-    multi-candidate agg scan, paid once at upgrade time under the
-    writer lease. A fully-verifying candidate is correct by
-    construction: adopting it makes the index bucket-identical to one
-    built with it. If no candidate verifies, REFUSE to backfill and
-    require the build's explicit n_buckets instead of persisting a
-    guess."""
-    max_id, dense = -1, 0
-    try:
-        for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(postings_path)):
-            name = st.getPath().getName()
-            if name.startswith("bucket="):
-                try:
-                    max_id = max(max_id, int(name.split("=", 1)[1]))
-                    dense += 1
-                except ValueError:
-                    continue
-    except Exception:  # noqa: BLE001 - missing dir: nothing to verify
-        pass
-    if explicit is not None:
-        candidates = [int(explicit)]
-    else:
-        candidates = []
-        for c in (INDEX_BUCKETS, max_id + 1, dense):
-            if c > max_id and c > 0 and c not in candidates:
-                candidates.append(c)
-    if max_id < 0:
-        # no bucket directories at all -> no data to contradict
-        return int(explicit) if explicit is not None else INDEX_BUCKETS
-    if explicit is not None and int(explicit) <= max_id:
-        # dir evidence alone refutes it: a build with n buckets can
-        # only produce ids 0..n-1, and an id >= explicit is on disk
-        raise ValueError(
-            f"cannot infer n_buckets for legacy index at {postings_path}:"
-            f" the explicit n_buckets={int(explicit)} is refuted by"
-            f" directory evidence alone — bucket directory id {max_id}"
-            " exists on disk, so the index was built with a larger"
-            " count. Pass the build's actual n_buckets."
-        )
-    try:
-        post = spark.read.parquet(postings_path).select("term", "bucket")
-        row = post.agg(
-            F.count(F.lit(1)).alias("_n"),
-            *(
-                F.sum(
-                    (
-                        F.pmod(hash64(F.col("term")), F.lit(int(c)))
-                        != F.col("bucket").cast("long")
-                    ).cast("long")
-                ).alias(f"_m{i}")
-                for i, c in enumerate(candidates)
-            ),
-        ).collect()[0]
-    except Exception as e:  # noqa: BLE001 - unreadable/parquet-less tree
-        raise ValueError(
-            f"cannot infer n_buckets for legacy index at {postings_path}:"
-            " bucket directories exist but the postings data under them"
-            f" is unreadable ({type(e).__name__}). Repair or remove the"
-            " index directory before upgrading it."
-        ) from e
-    # ADVICE r12: sum() over ZERO rows is NULL, and `or 0` used to
-    # convert every mismatch count to a vacuous pass — committing the
-    # first candidate to the manifest with no data behind it. Zero
-    # live rows under existing bucket dirs is genuinely ambiguous
-    # (several candidates exceed max_id and nothing distinguishes
-    # them), so: trust an explicit count (dir-consistent by the check
-    # above, and nothing contradicts it), refuse to guess otherwise.
-    if int(row["_n"]) == 0:
-        if explicit is not None:
-            return int(explicit)
-        raise ValueError(
-            f"cannot infer n_buckets for legacy index at {postings_path}:"
-            f" bucket directories up to id {max_id} exist but hold no"
-            " live postings rows, so no candidate count can be verified"
-            " against data. Re-run text_index_insert passing the build's"
-            " explicit n_buckets once to backfill the manifest."
-        )
-    ok = [
-        c
-        for i, c in enumerate(candidates)
-        if int(row[f"_m{i}"]) == 0
-    ]
-    if not ok:
-        if explicit is not None:
-            raise ValueError(
-                f"cannot infer n_buckets for legacy index at "
-                f"{postings_path}: the explicit n_buckets={int(explicit)} "
-                "does not reproduce the on-disk bucket assignment "
-                "(checked pmod(hash64(term), n) == bucket over every "
-                "live postings row) — it is not the count this index "
-                "was built with. Pass the build's actual n_buckets."
-            )
-        raise ValueError(
-            f"cannot infer n_buckets for legacy index at {postings_path}: "
-            f"none of the candidate counts {candidates} reproduces the "
-            "on-disk bucket assignment (checked pmod(hash64(term), n) == "
-            "bucket over every live postings row). The index was built "
-            "with a non-default bucket count whose top buckets are empty "
-            "— re-run text_index_insert passing the build's explicit "
-            "n_buckets once to backfill the manifest with verified "
-            "geometry; delete/compact will then work unchanged."
-        )
-    return int(ok[0])
-
-
-def _ensure_manifest(
-    spark: SparkSession, path: str, n_buckets: int | None = None
-) -> dict:
-    """Current manifest, upgrading a legacy (stats-row) index in place
-    on first writer contact: the legacy stats + tombstones dir become
-    one committed snapshot record (the dir itself is listed as a
-    batch), after which every reader takes the manifest path. Caller
-    holds the writer lease. An r9/r10 manifest without the r11
-    geometry fields gets them backfilled on first writer contact —
-    data-verified, never a committed guess (_verified_n_buckets;
-    `n_buckets` is the caller's explicit count when it has one, which
-    is verified the same way before being trusted)."""
-    m = _read_manifest(spark, path)
-    if m is not None:
-        _check_analyzer(m, path)
-        if m.get("n_buckets") is None:
-            fs, _p, jvm = _hfs(spark, path)
-            m = _commit_manifest(
-                spark,
-                path,
-                dict(
-                    m,
-                    n_buckets=_verified_n_buckets(
-                        spark,
-                        fs,
-                        jvm,
-                        f"{path}/{m['postings']}",
-                        explicit=n_buckets,
-                    ),
-                    analyzer=INDEX_ANALYZER,
-                ),
-            )
-        return m
-    n_docs, sum_dl, gen = _read_stats(spark, path)
-    tombs: list[str] = []
-    tomb = _read_tombstones(spark, path)
-    if tomb is not None:
-        r = tomb.agg(
-            F.count("*").alias("n"), F.sum("dl").alias("s")
-        ).collect()[0]
-        if int(r["n"]) > 0:
-            tombs = ["tombstones"]
-            n_docs -= int(r["n"])
-            sum_dl -= int(r["s"] or 0)
-    fs, _p, jvm = _hfs(spark, path)
-    return _commit_manifest(
-        spark,
-        path,
-        {
-            "v": 0,
-            "gen": int(gen),
-            "n_docs": int(n_docs),
-            "sum_dl": int(sum_dl),
-            "postings": "postings",
-            "lengths": "lengths",
-            "tombstones": tombs,
-            "n_buckets": _verified_n_buckets(
-                spark, fs, jvm, f"{path}/postings", explicit=n_buckets
-            ),
-            "analyzer": INDEX_ANALYZER,
-        },
-    )
-
-
 def _prune_unreferenced(spark: SparkSession, path: str) -> None:
     """Drop data dirs / tombstone batches that no KEPT manifest
     references: crashed-compact generation dirs, unlisted (torn)
-    tombstone batches, dirs retired past retention, and the dead
-    legacy stats dir. Keeps everything the two most recent manifests
-    name — the reader-lifetime contract. No-op on legacy roots (no
-    manifest yet -> nothing is provably garbage)."""
+    tombstone batches and dirs retired past retention. Keeps
+    everything the two most recent manifests name — the
+    reader-lifetime contract. Caller has checked the root carries a
+    manifest."""
     fs, _p, jvm = _hfs(spark, path)
-    vs = _manifest_versions(fs, jvm, path)
-    if not vs:
-        return
     keep: set[str] = set()
-    for v in vs[-2:]:
+    for v in _manifest_versions(fs, jvm, path)[-2:]:
         try:
             rec = json.loads(
                 _fs_read_text(
@@ -1379,10 +1140,7 @@ def _prune_unreferenced(spark: SparkSession, path: str) -> None:
     P = jvm.org.apache.hadoop.fs.Path
     for st in fs.listStatus(P(path)):
         name = st.getPath().getName()
-        if (
-            name.startswith(("postings", "lengths"))
-            or name in ("tombstones", "stats")
-        ) and name not in keep:
+        if name.startswith(("postings", "lengths")) and name not in keep:
             fs.delete(st.getPath(), True)
     tdir = P(f"{path}/{_TOMB_DIR}")
     if fs.exists(tdir):
@@ -1434,11 +1192,8 @@ def open_text_index(
     torn tombstone batch, and no mid-swap missing dir. The frames are
     lazy; they stay valid until the SECOND compaction after this call
     retires their dirs (retention keeps the previous manifest's dirs).
-    Pre-manifest indexes fall back to the legacy best-effort reader."""
-    m = _read_manifest(spark, path)
-    if m is None:
-        return _open_legacy(spark, path)
-    _check_analyzer(m, path)
+    A root without a manifest raises ValueError."""
+    m = _require_manifest(spark, path)
     post, lengths = _frames_from_manifest(spark, path, m)
     return post, lengths, (int(m["n_docs"]), int(m["sum_dl"]))
 
@@ -1456,7 +1211,7 @@ def text_index_insert(
     (VERDICT r5 #3 — the lifecycle parity with ivf_index_insert /
     ivfpq_index_insert): fold a document batch's postings into ONLY
     the touched term-bucket partitions, append the batch's lengths,
-    and update the 1-row stats. No existing partition is rewritten —
+    and commit the manifest's stats. No existing partition is rewritten —
     the staged files land inside the touched bucket=K directories and
     leave every other bucket's files untouched, so the cost is the
     batch tokenize + one batch-sized shuffle, independent of standing
@@ -1515,8 +1270,7 @@ def _insert_locked(
     n_buckets: int | None,
     validate_not_live: bool = False,
 ) -> dict:
-    _recover_insert(spark, path, n_buckets)
-    m = _ensure_manifest(spark, path, n_buckets)
+    m = _recover_insert(spark, path)
     n_buckets = _manifest_n_buckets(m, n_buckets, path)
     if validate_not_live:
         # one broadcast semi-join of the (small) batch ids against the
@@ -1628,8 +1382,7 @@ def _delete_locked(
 ) -> int:
     import uuid
 
-    _recover_insert(spark, path)
-    m = _ensure_manifest(spark, path)
+    m = _recover_insert(spark, path)
     if isinstance(doc_ids, DataFrame):
         ids = doc_ids.select(F.col(id_col).cast("long").alias(id_col))
     else:
@@ -1704,8 +1457,7 @@ def text_index_compact(spark: SparkSession, path: str) -> dict:
 
 
 def _compact_locked(spark: SparkSession, path: str) -> dict:
-    _recover_insert(spark, path)
-    m = _ensure_manifest(spark, path)
+    m = _recover_insert(spark, path)
     dropped, _sdl = _tomb_totals(spark, path, m)
     if dropped == 0:
         _prune_unreferenced(spark, path)

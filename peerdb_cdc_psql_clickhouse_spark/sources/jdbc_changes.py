@@ -72,6 +72,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import change_event_schema
+from ..functions.hashing import row_checksum
 from .jdbc import read_jdbc
 
 _INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
@@ -348,10 +349,6 @@ class _BucketedSweeper(_SpoolWriter):
         self.n_buckets = n_buckets
         self.fetchsize = fetchsize
 
-    # legacy alias used by earlier tests/docs
-    def _persist(self, batch_seq: int) -> None:
-        self._persist_merge(batch_seq=batch_seq)
-
     def _next_stamp(self, mirror) -> int:
         """Version stamp for this sweep's synthetic events: above
         every APPLIED row (mirror.max_version()) AND above every stamp
@@ -526,7 +523,7 @@ def md5_checksum_screen(
     _screen_spark_rendering for the pinned per-type renderings), NULL
     marked as CHR(1)||'null', joined by the CHR(31) unit separator,
     then the portable 60-bit md5 checksum (functions.hashing.hash64).
-    The NULL marker deliberately differs from Mirror.checksum_parity's
+    The NULL marker deliberately differs from row_checksum's
     \\x00-based one: Postgres text cannot carry null bytes, and the
     screen only has to agree with ITSELF on both engines, not with
     the parity hash.
@@ -724,9 +721,10 @@ class ChecksumDiffUpdateSweeper(_BucketedSweeper):
           1. fetch the source's full rows in b (range predicate
              pushed — see sweep_plan gate) and the target's rows in
              b, each extended with the portable 60-bit md5 row
-             checksum over the data columns in declared order (the
-             same canonical form as Mirror.checksum_parity, so an
-             external system can replay it);
+             checksum over the data columns in declared order
+             (functions.hashing.row_checksum, the canonical form
+             Mirror.checksum_parity sums, so an external system can
+             replay it);
           2. anti-join source against target on ALL key columns PLUS
              the checksum: a surviving source row is new-or-changed;
           3. emit it as a synthetic `_op='upsert'` envelope event
@@ -788,20 +786,6 @@ class ChecksumDiffUpdateSweeper(_BucketedSweeper):
         self.remote_screen = remote_screen
         self.last_stats: dict = {}
 
-    def _row_checksum(self) -> Column:
-        """The portable per-row checksum (Mirror.checksum_parity's
-        canonical form): md5-derived 60-bit int over the data columns
-        joined in declared order, nulls marked."""
-        from ..functions.hashing import hash64
-
-        canon = F.concat_ws(
-            "\x1f",
-            *[
-                F.coalesce(F.col(f.name).cast("string"), F.lit("\x00null"))
-                for f in self.row_schema.fields
-            ],
-        )
-        return hash64(canon)
 
     def _remote_bucket_df(
         self, spark: SparkSession, b_lo: int | None, b_hi: int | None
@@ -927,7 +911,7 @@ class ChecksumDiffUpdateSweeper(_BucketedSweeper):
             return self._remote_bucket_df(spark, None, None)
         lo, hi = bounds
         ranges = self._bucket_ranges(lo, hi)
-        cs = self._row_checksum()
+        cs = row_checksum(data_cols)
         todo = list(range(len(ranges)))
         if self.remote_screen is not None:
             todo = self._screen_mismatched(spark, target, ranges, lo, hi)

@@ -420,22 +420,14 @@ class Mirror:
         side. Engine-portable like every declared hash: an external
         system (e.g. the real ClickHouse side) can compute the same
         sum with its own md5."""
-        from ..functions.hashing import hash64
+        from ..functions.hashing import row_checksum
 
         def side_sum(df: DataFrame, alias: str):
-            canon = F.concat_ws(
-                "\x1f",
-                *[
-                    F.coalesce(
-                        F.col(c).cast("string"), F.lit("\x00null")
-                    )
-                    for c in self._data_cols
-                ],
-            )
+            cs = row_checksum(self._data_cols)
             return df.agg(
                 F.count(F.lit(1)).alias(f"{alias}_cnt"),
                 F.coalesce(
-                    F.sum(hash64(canon).cast("decimal(38,0)")),
+                    F.sum(cs.cast("decimal(38,0)")),
                     F.lit(0).cast("decimal(38,0)"),
                 ).alias(f"{alias}_sum"),
             )

@@ -657,7 +657,6 @@ def probe(spark, mult: int) -> dict[str, float]:
         .agg(F.max("event_id").alias("prior_id"))
     )
     from peerdb_cdc_psql_clickhouse_spark.operators.similarity import (
-        ann_topk_ivf_prerank,
         semantic_neardup_against,
         semantic_neardup_pairs,
     )
@@ -691,7 +690,6 @@ def probe(spark, mult: int) -> dict[str, float]:
             ).alias("text"),
         )
     )
-    qids = emb.select("vec_id").filter(F.col("vec_id") < 50)
     seeds = (
         load_table(spark, SF_DIR, "embeddings")
         .filter(F.col("vec_id") < 64)
@@ -807,10 +805,6 @@ def probe(spark, mult: int) -> dict[str, float]:
             "peerdb_cdc_psql_clickhouse_spark.operators.dedup",
             fromlist=["substring_spans"],
         ).substring_spans(hot_docs),
-        # r4: JL pre-rank search — fixed query set, growing corpus
-        "ivf_prerank": lambda: ann_topk_ivf_prerank(
-            emb.select("vec_id", "embedding"), qids
-        ),
         # r4: incremental screen — fixed 500-row batch vs mult x
         # history (recomputes the history assignment each run; against
         # the production-persisted table only the join remains)

@@ -1,16 +1,13 @@
 """ANN quality tests with planted near-duplicates.
 
 The driver testdata's embeddings are near-orthogonal (max cosine
-~0.4), which is the regime where sign-LSH buckets legitimately can't
-concentrate 'neighbors' — so recall is measured the way ANN systems
-are actually evaluated: plant true near-duplicates (tiny
-perturbations, cosine ~0.999) and require the index to find them.
-IVF recall is additionally checked on the natural data against brute
-force."""
+~0.4), so recall is measured the way ANN systems are actually
+evaluated: plant true near-duplicates (tiny perturbations, cosine
+~0.999) and require the persisted IVF index (build_ivf_index +
+search_ivf_index / search_ivf_index_prerank) to find them. Recall is
+additionally checked on the natural data against brute force."""
 
 from __future__ import annotations
-
-import math
 
 import pytest
 
@@ -18,14 +15,16 @@ from pyspark.sql import functions as F
 
 from peerdb_cdc_psql_clickhouse_spark.catalog import load_table
 from peerdb_cdc_psql_clickhouse_spark.operators.similarity import (
-    ann_topk_ivf,
-    ann_topk_lsh,
+    build_ivf_index,
     cosine_topk,
+    search_ivf_index,
+    search_ivf_index_prerank,
 )
 
 SF = "/root/testdata/sf0.001"
 N_PLANTED = 20
 OFFSET = 1_000_000
+PROJ_DIM = 24
 
 
 @pytest.fixture(scope="module")
@@ -47,24 +46,41 @@ def planted(spark):
     return emb.unionByName(dups)
 
 
-def test_lsh_multiprobe_finds_planted_neardups(spark, planted):
-    qids = planted.select("vec_id").filter(F.col("vec_id") >= OFFSET)
-    got = ann_topk_lsh(planted, qids, k=1, multi_probe=1).collect()
-    hits = sum(
-        1 for r in got if r["vec_id"] == r["q_id"] - OFFSET and r["rank"] == 1
+@pytest.fixture(scope="module")
+def planted_index(planted, tmp_path_factory):
+    return build_ivf_index(
+        planted.select("vec_id", "embedding"),
+        str(tmp_path_factory.mktemp("ivf") / "planted"),
+        proj_dim=PROJ_DIM,
     )
-    # a true near-dup (cos ~0.9999) agrees with every hyperplane with
-    # overwhelming probability -> same bucket -> must be found
-    assert hits >= int(N_PLANTED * 0.9)
 
 
-def test_ivf_finds_planted_neardups(spark, planted):
-    qids = planted.select("vec_id").filter(F.col("vec_id") >= OFFSET)
-    got = ann_topk_ivf(planted, qids, k=1).collect()
-    hits = sum(
+@pytest.fixture(scope="module")
+def natural_index(spark, tmp_path_factory):
+    return build_ivf_index(
+        load_table(spark, SF, "embeddings").select("vec_id", "embedding"),
+        str(tmp_path_factory.mktemp("ivf") / "natural"),
+        proj_dim=PROJ_DIM,
+    )
+
+
+def _planted_queries(planted):
+    return planted.filter(F.col("vec_id") >= OFFSET).select(
+        "vec_id", "embedding"
+    )
+
+
+def _planted_hits(got) -> int:
+    return sum(
         1 for r in got if r["vec_id"] == r["q_id"] - OFFSET and r["rank"] == 1
     )
-    assert hits >= int(N_PLANTED * 0.9)
+
+
+def test_ivf_finds_planted_neardups(spark, planted, planted_index):
+    got = search_ivf_index(
+        planted_index, _planted_queries(planted), k=1
+    ).collect()
+    assert _planted_hits(got) >= int(N_PLANTED * 0.9)
 
 
 def test_planes_scale_with_corpus_and_keep_finding_neardups(
@@ -97,15 +113,14 @@ def test_planes_scale_with_corpus_and_keep_finding_neardups(
 
 
 def test_kmeans_refinement_reduces_inertia_and_keeps_neardup_recall(
-    spark, planted
+    spark, planted, tmp_path
 ):
     """Lloyd's rounds must strictly reduce quantization error
     (sum of L2 to the assigned centroid) vs the raw seeds, stay
-    deterministic, and the refined quantizer must still retrieve
-    planted near-duplicates at rank 1."""
+    deterministic, and an index on the refined quantizer must still
+    retrieve planted near-duplicates at rank 1."""
     from peerdb_cdc_psql_clickhouse_spark.operators.similarity import (
         _l2,
-        ann_topk_ivf,
         ivf_assign,
         kmeans_centroids,
     )
@@ -133,63 +148,46 @@ def test_kmeans_refinement_reduces_inertia_and_keeps_neardup_recall(
         == again.orderBy("c_id").collect()
     )  # deterministic — no random init anywhere
 
-    qids = planted.select("vec_id").filter(F.col("vec_id") >= OFFSET)
-    got = ann_topk_ivf(
-        planted, qids, k=1, centroids=kmeans_centroids(planted, iters=2)
+    index = build_ivf_index(
+        planted.select("vec_id", "embedding"),
+        str(tmp_path / "refined"),
+        refine_iters=2,
+    )
+    got = search_ivf_index(index, _planted_queries(planted), k=1).collect()
+    assert _planted_hits(got) >= int(N_PLANTED * 0.9)
+
+
+def test_ivf_prerank_finds_planted_neardups(spark, planted, planted_index):
+    got = search_ivf_index_prerank(
+        planted_index, _planted_queries(planted), k=1
     ).collect()
-    hits = sum(
-        1 for r in got if r["vec_id"] == r["q_id"] - OFFSET and r["rank"] == 1
-    )
-    assert hits >= int(N_PLANTED * 0.9)
-
-
-def test_ivf_prerank_finds_planted_neardups(spark, planted):
-    from peerdb_cdc_psql_clickhouse_spark.operators.similarity import (
-        ann_topk_ivf_prerank,
-    )
-
-    qids = planted.select("vec_id").filter(F.col("vec_id") >= OFFSET)
-    got = ann_topk_ivf_prerank(planted, qids, k=1).collect()
-    hits = sum(
-        1 for r in got if r["vec_id"] == r["q_id"] - OFFSET and r["rank"] == 1
-    )
     # a JL projection of a near-identical pair stays near-identical
     # (distortion is relative), so the pre-rank cut cannot lose it
-    assert hits >= int(N_PLANTED * 0.9)
+    assert _planted_hits(got) >= int(N_PLANTED * 0.9)
 
 
-def test_ivf_prerank_recall_floor_on_natural_data(spark):
-    from peerdb_cdc_psql_clickhouse_spark.operators.similarity import (
-        ann_topk_ivf_prerank,
-    )
-
+def _natural_recall(spark, search) -> float:
     emb = load_table(spark, SF, "embeddings")
-    qids = emb.select("vec_id").filter(F.col("vec_id") < 5)
-    queries = emb.join(qids, "vec_id").select(
+    q_batch = emb.filter(F.col("vec_id") < 5).select("vec_id", "embedding")
+    queries = q_batch.select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
     exact = {
         (r["q_id"], r["vec_id"]) for r in cosine_topk(queries, emb).collect()
     }
-    approx = {
-        (r["q_id"], r["vec_id"])
-        for r in ann_topk_ivf_prerank(emb, qids).collect()
-    }
-    recall = len(exact & approx) / len(exact)
+    approx = {(r["q_id"], r["vec_id"]) for r in search(q_batch).collect()}
+    return len(exact & approx) / len(exact)
+
+
+def test_ivf_prerank_recall_floor_on_natural_data(spark, natural_index):
+    recall = _natural_recall(
+        spark, lambda q: search_ivf_index_prerank(natural_index, q)
+    )
     assert recall >= 0.8, f"IVF+prerank recall {recall}"
 
 
-def test_ivf_recall_vs_brute_force_on_natural_data(spark):
-    emb = load_table(spark, SF, "embeddings")
-    qids = emb.select("vec_id").filter(F.col("vec_id") < 5)
-    queries = emb.join(qids, "vec_id").select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
+def test_ivf_recall_vs_brute_force_on_natural_data(spark, natural_index):
+    recall = _natural_recall(
+        spark, lambda q: search_ivf_index(natural_index, q)
     )
-    exact = {
-        (r["q_id"], r["vec_id"]) for r in cosine_topk(queries, emb).collect()
-    }
-    approx = {
-        (r["q_id"], r["vec_id"]) for r in ann_topk_ivf(emb, qids).collect()
-    }
-    recall = len(exact & approx) / len(exact)
     assert recall >= 0.8, f"IVF recall {recall}"

@@ -260,6 +260,9 @@ def test_checksum_parity_catches_value_drift(spark, tmp_path, mirror):
     row = mirror.checksum_parity(true_src).collect()[0]
     assert row["in_sync"] and row["src_checksum"] == row["tgt_checksum"]
     assert row["src_cnt"] == row["tgt_cnt"] == len(expect)
+    # the canonical row form is a replayable contract: sum over rows of
+    # md5-60bit("<id>\x1f<val>") for {1: a3, 2: b-re, 10: s10, 11: s11}
+    assert row["src_checksum"] == "1949418936099622406"
 
     # same COUNT, one drifted value -> counts agree, checksums don't
     drifted = [

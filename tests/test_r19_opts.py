@@ -145,25 +145,57 @@ def test_values_frame_matches_create_dataframe(spark):
                 for i, d, p, q, pid in SEED_ORDERS
             ],
         ),
-        ([("a'b\\c\nd",), (None,)], "s string", None),
+        (
+            [("a'b\\c\nd",), ("\\n",), ("",), ("é\x1f",), (None,)],
+            "s string",
+            None,
+        ),
         ([([1, 2, 3],), ([],)], "w array<bigint>", None),
     ]
-    for rows, schema, legacy in cases:
-        vf = values_frame(spark, rows, schema)
-        cf = spark.createDataFrame(
-            legacy if legacy is not None else rows, schema
-        )
-        assert [(f.name, f.dataType) for f in vf.schema.fields] == [
-            (f.name, f.dataType) for f in cf.schema.fields
-        ]
-        got = sorted(map(tuple, vf.collect()), key=repr)
-        want = sorted(map(tuple, cf.collect()), key=repr)
-        assert got == want
+    # string literals must not depend on the parser's escape setting
+    key = "spark.sql.parser.escapedStringLiterals"
+    before = spark.conf.get(key)
+    try:
+        for flag in ("false", "true"):
+            spark.conf.set(key, flag)
+            for rows, schema, legacy in cases:
+                vf = values_frame(spark, rows, schema)
+                cf = spark.createDataFrame(
+                    legacy if legacy is not None else rows, schema
+                )
+                assert [
+                    (f.name, f.dataType) for f in vf.schema.fields
+                ] == [(f.name, f.dataType) for f in cf.schema.fields]
+                got = sorted(map(tuple, vf.collect()), key=repr)
+                want = sorted(map(tuple, cf.collect()), key=repr)
+                assert got == want, flag
+    finally:
+        spark.conf.set(key, before)
     # and the plan is a LocalRelation, not a Python RDD scan
     plan = values_frame(
         spark, SEED_CUSTOMERS, CUSTOMERS_SCHEMA
     )._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+
+
+def test_values_frame_rejects_bad_input(spark):
+    # a short or long row raises instead of zip truncating it, and a
+    # datetime in a DATE column raises instead of rendering DATE '…T…'
+    import datetime
+
+    import pytest
+
+    from peerdb_cdc_psql_clickhouse_spark.functions.values import (
+        values_frame,
+    )
+
+    for rows in ([(1,)], [(1, "a", "extra")]):
+        with pytest.raises(ValueError, match="values for 2 schema fields"):
+            values_frame(spark, rows, "i int, s string")
+    with pytest.raises(ValueError, match="DATE column"):
+        values_frame(
+            spark, [(datetime.datetime(2026, 1, 2, 3, 4),)], "d date"
+        )
 
 
 def test_plane_bits_sql_matches_column_form(spark):

@@ -482,158 +482,6 @@ def test_build_autopicks_buckets_from_corpus_size(spark, tmp_path, monkeypatch):
     assert got == want_rows and got
 
 
-def test_pre_r11_manifest_backfills_geometry(spark, tmp_path):
-    """An r9/r10 manifest (no n_buckets/analyzer fields) is backfilled
-    on first writer contact — inference from the on-disk bucket dirs
-    (every pre-r11 build used the module default) — and keeps
-    searching correctly meanwhile."""
-    import glob
-    import json as _json
-    import os as _os
-
-    from peerdb_cdc_psql_clickhouse_spark.operators.search import (
-        open_text_index,
-        save_full_text_index,
-        text_index_insert,
-    )
-
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    root = str(tmp_path / "idx")
-    save_full_text_index(docs, root)
-    # strip the r11 fields from the committed manifest in place
-    # (simulating an index the r10 engine wrote)
-    mfile = sorted(glob.glob(f"{root}/manifest/m-*.json"))[-1]
-    rec = _json.loads(open(mfile).read())
-    rec.pop("n_buckets"), rec.pop("analyzer")
-    crc = f"{root}/manifest/.{_os.path.basename(mfile)}.crc"
-    if _os.path.exists(crc):
-        _os.remove(crc)
-    with open(mfile, "w") as f:
-        _json.dump(rec, f)
-
-    # reader path works without the fields (pre-r11 compat)
-    post, _l, _s = open_text_index(spark, root)
-    assert term_search(post, ["data"]).count() > 0
-    # first writer op backfills them
-    one = spark.createDataFrame(
-        [(10_000_002, "zzbackfill doc")], "doc_id long, text string"
-    )
-    text_index_insert(spark, root, one)
-    mfile2 = sorted(glob.glob(f"{root}/manifest/m-*.json"))[-1]
-    rec2 = _json.loads(open(mfile2).read())
-    assert rec2["n_buckets"] == 64
-    assert rec2["analyzer"] == "ws_lower_v1"
-
-
-def _strip_geometry(root: str) -> None:
-    """Simulate an r9/r10 manifest: drop the n_buckets/analyzer fields
-    from the latest committed record in place."""
-    import glob
-    import json as _json
-    import os as _os
-
-    mfile = sorted(glob.glob(f"{root}/manifest/m-*.json"))[-1]
-    rec = _json.loads(open(mfile).read())
-    rec.pop("n_buckets", None), rec.pop("analyzer", None)
-    crc = f"{root}/manifest/.{_os.path.basename(mfile)}.crc"
-    if _os.path.exists(crc):
-        _os.remove(crc)
-    with open(mfile, "w") as f:
-        _json.dump(rec, f)
-
-
-def test_backfill_infers_sub_default_build_correctly(spark, tmp_path):
-    """ADVICE r11 (medium): a pre-r11 index built with an explicit
-    n_buckets BELOW the default used to be clamped UP to 64 by the
-    guess-and-commit backfill — locking wrong geometry into the
-    manifest so default searches silently hashed to wrong buckets.
-    The verified backfill must recover the true count from the data."""
-    import glob
-    import json as _json
-
-    from peerdb_cdc_psql_clickhouse_spark.operators.search import (
-        open_text_index,
-        save_full_text_index,
-        text_index_insert,
-    )
-
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    root = str(tmp_path / "idx16")
-    save_full_text_index(docs, root, n_buckets=16)
-    _strip_geometry(root)
-    one = spark.createDataFrame(
-        [(10_000_003, "zzverify doc")], "doc_id long, text string"
-    )
-    text_index_insert(spark, root, one)  # no explicit count
-    mfile = sorted(glob.glob(f"{root}/manifest/m-*.json"))[-1]
-    assert _json.loads(open(mfile).read())["n_buckets"] == 16
-    post, _l, _s = open_text_index(spark, root)
-    assert term_search(post, ["zzverify"]).count() == 1
-    assert term_search(post, ["data"]).count() > 0
-
-
-def test_backfill_refuses_unverifiable_geometry(spark, tmp_path):
-    """ADVICE r11 (medium): when NO candidate bucket count reproduces
-    the on-disk assignment (a >default build whose top buckets are
-    empty), the backfill must refuse instead of committing a guess —
-    and accept (after verifying) the build's explicit n_buckets."""
-    import glob
-    import json as _json
-
-    import pytest
-
-    from peerdb_cdc_psql_clickhouse_spark.functions.hashing import (
-        python_hash64,
-    )
-    from peerdb_cdc_psql_clickhouse_spark.operators.search import (
-        open_text_index,
-        save_full_text_index,
-        text_index_insert,
-    )
-
-    # pick two single-term docs so the 96-bucket build leaves bucket
-    # 95 empty AND the only surviving candidate (max_id + 1) provably
-    # mismatches at least one stored bucket
-    w_hi = w_lo = None
-    for i in range(10_000):
-        w = f"word{i}"
-        b = python_hash64(w) % 96
-        if w_hi is None and 64 <= b <= 94:
-            w_hi, b_hi = w, b
-    for i in range(10_000):
-        w = f"term{i}"
-        b = python_hash64(w) % 96
-        if b < 64 and python_hash64(w) % (b_hi + 1) != b:
-            w_lo = w
-            break
-    assert w_hi and w_lo
-    docs = spark.createDataFrame(
-        [(1, w_hi), (2, w_lo)], "doc_id long, text string"
-    )
-    root = str(tmp_path / "idx96")
-    save_full_text_index(docs, root, n_buckets=96)
-    _strip_geometry(root)
-    one = spark.createDataFrame(
-        [(3, "zzrefuse doc")], "doc_id long, text string"
-    )
-    with pytest.raises(ValueError, match="cannot infer n_buckets"):
-        text_index_insert(spark, root, one)
-    # an explicit-but-WRONG count is verified against the data too
-    with pytest.raises(ValueError, match="cannot infer n_buckets"):
-        text_index_insert(spark, root, one, n_buckets=32)
-    # the build's true count verifies, backfills, and the index works
-    text_index_insert(spark, root, one, n_buckets=96)
-    mfile = sorted(glob.glob(f"{root}/manifest/m-*.json"))[-1]
-    assert _json.loads(open(mfile).read())["n_buckets"] == 96
-    post, _l, _s = open_text_index(spark, root)
-    assert term_search(post, [w_hi]).count() == 1
-    assert term_search(post, ["zzrefuse"]).count() == 1
-
-
 def test_foreign_analyzer_raises_at_open(spark, tmp_path):
     """An index built with a different tokenizer would silently miss
     terms on every query — open/maintain must fail loudly instead."""
@@ -718,49 +566,3 @@ def test_insert_validate_not_live_guard(spark, tmp_path):
         ]
         == 2
     )
-
-
-def test_backfill_zero_row_postings_not_vacuously_verified(
-    spark, tmp_path
-):
-    """ADVICE r12 (low): sum() over ZERO rows is NULL, and the old
-    `or 0` converted every mismatch count to a vacuous pass — the
-    first candidate (the 64-bucket default) was committed even though
-    bucket dirs prove nothing about it. Zero live rows is ambiguous:
-    refuse without an explicit count, accept a dir-consistent explicit
-    one, and reject an explicit count refuted by directory ids."""
-    import os as _os
-
-    import pytest
-
-    from peerdb_cdc_psql_clickhouse_spark.operators.search import (
-        _hfs,
-        _verified_n_buckets,
-    )
-
-    root = str(tmp_path / "idx0")
-    postings = f"{root}/postings"
-    # bucket dirs exist (ids 0 and 9) but hold zero live rows
-    for b in (0, 9):
-        spark.createDataFrame(
-            [], "term string, doc_id long, tf int"
-        ).write.parquet(f"{postings}/bucket={b}")
-    fs, _p, jvm = _hfs(spark, postings)
-
-    with pytest.raises(ValueError, match="no\\s+live postings rows"):
-        _verified_n_buckets(spark, fs, jvm, postings)
-    # dir-consistent explicit count: nothing contradicts it -> adopted
-    assert _verified_n_buckets(spark, fs, jvm, postings, explicit=16) == 16
-    # dir-REFUTED explicit count (id 9 on disk >= 8): loud error even
-    # with no rows to check pmod against
-    with pytest.raises(ValueError, match="directory evidence"):
-        _verified_n_buckets(spark, fs, jvm, postings, explicit=8)
-
-    # bucket dirs with NO readable parquet underneath: clear error,
-    # not an uncaught AnalysisException mid-upgrade
-    root2 = str(tmp_path / "idxbad")
-    postings2 = f"{root2}/postings"
-    _os.makedirs(f"{postings2}/bucket=3")
-    fs2, _p2, jvm2 = _hfs(spark, postings2)
-    with pytest.raises(ValueError, match="unreadable"):
-        _verified_n_buckets(spark, fs2, jvm2, postings2)

@@ -443,36 +443,53 @@ def test_lifecycle_index_equals_one_pass_build_on_corpus(spark):
     assert x9b_search_ops(spark, SF_SMOKE).count() > 0
 
 
-def test_pre_r8_index_without_gen_column_still_opens(spark, tmp_path):
-    """Backward compat (review follow-up): an index persisted BEFORE
-    the delete lifecycle existed has no `_gen` column and no `gen`
-    stats field — the generation gate and the delete path must
-    normalize it to generation 0 instead of raising
-    UNRESOLVED_COLUMN (otherwise _read_stats' compat branch is dead
-    code)."""
-    root = str(tmp_path / "oldidx")
-    rebuilt = str(tmp_path / "rebuilt")
-    build_text_index(_docs(spark)).drop("_gen").write.partitionBy(
-        "bucket"
-    ).parquet(f"{root}/postings")
-    doc_lengths(_docs(spark)).drop("_gen").write.parquet(f"{root}/lengths")
+def test_roots_without_manifest_or_meta_raise(spark, tmp_path):
+    """A text-index root with no manifest (postings/lengths plus a
+    stats/ dir) and an IVF root with no meta/ were not written by
+    this engine: the reader and every writer raise ValueError naming
+    the path instead of guessing the layout."""
+    import pytest
+
+    from peerdb_cdc_psql_clickhouse_spark.operators.search import (
+        text_index_recover,
+    )
+    from peerdb_cdc_psql_clickhouse_spark.operators.similarity import (
+        load_ivf_index,
+    )
+
+    root = str(tmp_path / "nomanifest")
+    build_text_index(_docs(spark)).write.partitionBy("bucket").parquet(
+        f"{root}/postings"
+    )
+    doc_lengths(_docs(spark)).write.parquet(f"{root}/lengths")
     total_dl = sum(len(t.split()) for _i, t in DOCS)
     spark.createDataFrame(
-        [(len(DOCS), total_dl)], "n_docs long, sum_dl long"
+        [(len(DOCS), total_dl, 0)], "n_docs long, sum_dl long, gen long"
     ).write.parquet(f"{root}/stats")
+    for call in (
+        lambda: open_text_index(spark, root),
+        lambda: text_index_insert(spark, root, _docs(spark, [(9, "nu")])),
+        lambda: text_index_delete(spark, root, [3]),
+        lambda: text_index_compact(spark, root),
+        lambda: text_index_recover(spark, root),
+    ):
+        with pytest.raises(ValueError, match="nomanifest.*rebuild"):
+            call()
+    assert sorted(os.listdir(root)) == ["lengths", "postings", "stats"]
 
-    save_full_text_index(_docs(spark), rebuilt)
-    assert _index_state(spark, root) == _index_state(spark, rebuilt)
-    assert _searches(spark, root) == _searches(spark, rebuilt)
-
-    # the delete lifecycle works on the old layout too
-    without = str(tmp_path / "without")
-    save_full_text_index(
-        _docs(spark, [r for r in DOCS if r[0] != 3]), without
+    ivf = str(tmp_path / "nometa")
+    vecs = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(4)],
+        "vec_id long, embedding array<float>",
     )
-    assert text_index_delete(spark, root, [3]) == 1
-    assert _index_state(spark, root) == _index_state(spark, without)
-    assert _searches(spark, root) == _searches(spark, without)
+    vecs.selectExpr("vec_id AS c_id", "embedding AS c_vec").write.parquet(
+        f"{ivf}/centroids"
+    )
+    vecs.selectExpr(
+        "vec_id AS centroid_id", "vec_id", "embedding"
+    ).write.partitionBy("centroid_id").parquet(f"{ivf}/lists")
+    with pytest.raises(ValueError, match="nometa.*rebuild"):
+        load_ivf_index(spark, ivf)
 
 
 def test_change_feed_maintains_index(spark, tmp_path):
