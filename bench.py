@@ -11,13 +11,17 @@ serialization.
 
 from __future__ import annotations
 
+import itertools
 import json
 import math
 import os
+import statistics
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from pyspark.sql import DataFrame
 
 from peerdb_cdc_psql_clickhouse_spark.registry import all_queries
 from peerdb_cdc_psql_clickhouse_spark.session import get_spark
@@ -345,28 +349,69 @@ def materialize_scaled(
         out.write.mode("overwrite").parquet(f"{out_dir}/{name}.parquet")
 
 
-def inventory(spark, sf_dir: str, names=None) -> tuple[dict, dict]:
-    """Run every declared query at sf_dir with the noop sink (full
-    computation, no driver collect); each query measured standalone
-    (its persisted frames dropped after). `names` restricts the pass
-    to a subset (the adaptive re-run path). Returns (timings,
-    errors)."""
-    queries = all_queries()
-    if names is not None:
-        queries = {n: queries[n] for n in names}
-    timings: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    for name in sorted(queries):
-        t0 = time.perf_counter()
-        try:
-            queries[name].build(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            timings[name] = round(time.perf_counter() - t0, 3)
-        except Exception as e:  # noqa: BLE001 - isolate per-query faults
-            errors[name] = f"{type(e).__name__}: {e}"[:200]
+_GROUP_SEQ = itertools.count()
+
+
+def timed(spark, build, label: str) -> dict:
+    """The one timing harness: run `build` and return its record.
+    - build_s: the `build()` call — plan construction (py4j and any
+      driver-side work, including jobs the builder launches itself);
+    - exec_s: the returned DataFrame run into the noop sink (full
+      computation, no driver collect). When `build` returns anything
+      else it was an action that already ran: the result is kept as
+      `value` and exec_s is 0;
+    - s: one clock from before build to after the sink;
+    - jobs: Spark jobs the call launched, counted through its own job
+      group on the status tracker (no extra job);
+    - error: "Type: message" when the call raised (no timings then).
+    The persist cache is cleared after every call, so each call
+    measures standalone."""
+    sc = spark.sparkContext
+    group = f"{label}#{next(_GROUP_SEQ)}"
+    sc.setJobGroup(group, label)
+    rec: dict = {}
+    t0 = time.perf_counter()
+    try:
+        out = build()
+        t1 = time.perf_counter()
+        if isinstance(out, DataFrame):
+            out.write.format("noop").mode("overwrite").save()
+        else:
+            rec["value"] = out
+        t2 = time.perf_counter()
+        rec["build_s"] = round(t1 - t0, 3)
+        rec["exec_s"] = round(t2 - t1, 3)
+        rec["s"] = round(t2 - t0, 3)
+    except Exception as e:  # noqa: BLE001 - isolate per-call faults
+        rec["error"] = f"{type(e).__name__}: {e}"[:200]
+    finally:
+        sc.setJobGroup(None, None)
         spark.catalog.clearCache()
-    return timings, errors
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    rec["jobs"] = len(sc.statusTracker().getJobIdsForGroup(group))
+    return rec
+
+
+def inventory(spark, sf_dir: str, names=None) -> dict[str, dict]:
+    """Run every declared query at sf_dir through `timed`, each
+    measured standalone. `names` restricts the pass to a subset (the
+    adaptive re-run path). Returns {query: timed record}."""
+    queries = all_queries()
+    return {
+        name: timed(
+            spark, lambda q=queries[name]: q.build(spark, sf_dir), name
+        )
+        for name in sorted(names if names is not None else queries)
+    }
+
+
+def _split(records: dict[str, dict]) -> tuple[dict, dict]:
+    """(seconds, errors) of an inventory pass."""
+    return (
+        {q: r["s"] for q, r in records.items() if "error" not in r},
+        {q: r["error"] for q, r in records.items() if "error" in r},
+    )
 
 
 ADAPTIVE_SPREAD_CAP = 0.3
@@ -375,7 +420,7 @@ ADAPTIVE_MAX_ITERS = 7
 
 def inventory_repeated(
     spark, sf_dir: str, iters: int = 3, max_iters: int | None = None
-) -> tuple[dict, dict, dict, dict]:
+) -> tuple[dict, dict, dict, dict, dict]:
     """The 1× inventory run `iters` times, reported as per-query
     MEDIANS (VERDICT r7 #9: two consecutive rounds of ±25% shared-box
     noise with zero query-code change made single-shot timings unable
@@ -385,7 +430,7 @@ def inventory_repeated(
     (VERDICT r8 #7: uniform median-of-3 left rel_spread_p90 at 0.56 —
     unable to resolve <1.5× changes; more samples exactly where the
     noise is sharpens the median at bounded extra cost). Returns
-    (medians, spreads, runs, errors):
+    (medians, spreads, runs, errors, layers):
     - medians[q]: median seconds over the runs that succeeded;
     - spreads[q]: relative spread (max-min)/median — the per-query
       dispersion the round-over-round comparison needs to judge
@@ -394,49 +439,62 @@ def inventory_repeated(
       len(runs[q]) shows how many samples each query needed);
     - errors[q]: first error message for queries that failed EVERY
       iteration (a query that succeeded at least once reports its
-      median and no error).
+      median and no error);
+    - layers: {"query_build_s", "query_exec_s"} medians and
+      "query_jobs" (max over runs — a warm plan-build cache can make
+      a later run launch fewer jobs than the first) per query.
 
     max_iters caps the adaptive re-sampling depth (default
     ADAPTIVE_MAX_ITERS) — the scaled leg uses a lower cap because
     each of its passes costs mult× a 1× pass.
     """
-    import statistics
-
     if max_iters is None:
         max_iters = ADAPTIVE_MAX_ITERS
-    runs: dict[str, list[float]] = {}
+    recs: dict[str, list[dict]] = {}
     first_err: dict[str, str] = {}
 
     def _spread(ts: list[float]) -> float:
         return (max(ts) - min(ts)) / max(statistics.median(ts), 1e-6)
 
+    def _record(records: dict[str, dict]) -> None:
+        for q, r in records.items():
+            if "error" in r:
+                first_err.setdefault(q, r["error"])
+            else:
+                recs.setdefault(q, []).append(r)
+
     for _ in range(max(1, iters)):
-        timings, errors = inventory(spark, sf_dir)
-        for q, t in timings.items():
-            runs.setdefault(q, []).append(t)
-        for q, e in errors.items():
-            first_err.setdefault(q, e)
+        _record(inventory(spark, sf_dir))
     # adaptive passes: re-sample only the still-noisy queries
     for _ in range(max_iters - max(1, iters)):
         noisy = sorted(
             q
-            for q, ts in runs.items()
-            if len(ts) < max_iters
-            and _spread(ts) > ADAPTIVE_SPREAD_CAP
+            for q, rs in recs.items()
+            if len(rs) < max_iters
+            and _spread([r["s"] for r in rs]) > ADAPTIVE_SPREAD_CAP
         )
         if not noisy:
             break
-        timings, _errs = inventory(spark, sf_dir, names=noisy)
-        for q, t in timings.items():
-            runs.setdefault(q, []).append(t)
-    medians = {
-        q: round(statistics.median(ts), 3) for q, ts in sorted(runs.items())
-    }
-    spreads = {
-        q: round(_spread(ts), 2) for q, ts in sorted(runs.items())
-    }
+        _record(inventory(spark, sf_dir, names=noisy))
+    runs = {q: [r["s"] for r in rs] for q, rs in sorted(recs.items())}
+
+    def _med(field: str) -> dict:
+        return {
+            q: round(statistics.median(r[field] for r in rs), 3)
+            for q, rs in sorted(recs.items())
+        }
+
+    medians = _med("s")
+    spreads = {q: round(_spread(ts), 2) for q, ts in runs.items()}
     errors = {q: e for q, e in first_err.items() if q not in runs}
-    return medians, spreads, runs, errors
+    layers = {
+        "query_build_s": _med("build_s"),
+        "query_exec_s": _med("exec_s"),
+        "query_jobs": {
+            q: max(r["jobs"] for r in rs) for q, rs in sorted(recs.items())
+        },
+    }
+    return medians, spreads, runs, errors, layers
 
 
 SCALED_ITERS = 3
@@ -573,7 +631,7 @@ def scaled_inventory(
             text_build = text_index_build_seconds(spark, work)
             anngt_build = ann_groundtruth_build_seconds(spark, work)
             dupcl_build = dup_clusters_build_seconds(spark, work)
-            timings, spreads, runs, errors = inventory_repeated(
+            timings, spreads, runs, errors, layers = inventory_repeated(
                 spark,
                 work,
                 iters=int(
@@ -593,6 +651,7 @@ def scaled_inventory(
             "query_samples": {
                 q: len(ts) for q, ts in sorted(runs.items())
             },
+            **layers,
             **scaled_ratio_summary(timings, timings_1x, mult),
             **({"errors": errors} if errors else {}),
         }
@@ -638,8 +697,8 @@ def extended_dedup_scaled(spark, sf_dir: str, timings_1x: dict) -> dict | None:
         )
         spark.catalog.clearCache()
         with _leg_shuffle_partitions(spark, work):
-            timings, errors = inventory(
-                spark, work, names=EXTENDED_SCALE_QUERIES
+            timings, errors = _split(
+                inventory(spark, work, names=EXTENDED_SCALE_QUERIES)
             )
         return {
             "mult": mult,
@@ -851,8 +910,8 @@ def extended_ops(spark, sf_dir: str) -> dict:
     """Wall seconds for the beyond-the-registry training-data ops
     (pytest-verified; the 50-slot declared surface is full): substring
     spans, SemDeDup, epoch shuffle, LM perplexity scoring, and the
-    cheap corpus-report sections. Full computation via the noop sink,
-    like inventory()."""
+    cheap corpus-report sections, each through `timed` like
+    inventory(); a failed op is listed under "errors"."""
     from peerdb_cdc_psql_clickhouse_spark.catalog import load_table
     from peerdb_cdc_psql_clickhouse_spark.operators.dedup import (
         substring_spans,
@@ -939,13 +998,10 @@ def extended_ops(spark, sf_dir: str) -> dict:
         "quality_train_filter": quality_pipeline,
         "pq_train_search": pq_pipeline,
     }
-    out = {}
-    for name, build in jobs.items():
-        t0 = time.perf_counter()
-        build().write.format("noop").mode("overwrite").save()
-        out[name] = round(time.perf_counter() - t0, 3)
-        spark.catalog.clearCache()
-    return out
+    out, errors = _split(
+        {name: timed(spark, build, name) for name, build in jobs.items()}
+    )
+    return {**out, **({"errors": errors} if errors else {})}
 
 
 def _cpu_ticks() -> tuple[int, int] | None:
@@ -1108,7 +1164,6 @@ def main() -> None:
     run_ticks = _cpu_ticks()
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
-    queries = all_queries()
 
     # JVM/codegen warmup on a trivial plan
     spark.range(1000).selectExpr("sum(id)").write.format("noop").mode(
@@ -1119,15 +1174,7 @@ def main() -> None:
     # so whole-stage-codegen compilation is excluded from the timed
     # sf0.1 pass (standard JIT-warmup practice; compile cost is
     # per-plan, not per-byte, so it vanishes at real scale anyway)
-    warm_dir = "/root/testdata/sf0.001"
-    for name in sorted(queries):
-        try:
-            queries[name].build(spark, warm_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        except Exception:  # noqa: BLE001 - warmup is best-effort
-            pass
-    spark.catalog.clearCache()  # drop warmup persists (reuse() frames)
+    inventory(spark, "/root/testdata/sf0.001")  # best-effort; discarded
 
     # one-time persisted-index builds for this corpus, timed
     # separately (the x2b/x2d inventory entries are pure IVF-index
@@ -1192,7 +1239,7 @@ def main() -> None:
         decision = steal_gate(steal_pcts, max_attempts=gate_attempts)
         if not decision["retry"]:
             break
-    timings, spreads, runs, errors = attempts[decision["pick"]]
+    timings, spreads, runs, errors, layers = attempts[decision["pick"]]
     inventory_steal_pct = steal_pcts[decision["pick"]]
     steal_certified = decision["certified"]
 
@@ -1264,6 +1311,9 @@ def main() -> None:
         # whose n differs, instead of reading the regime change as a
         # regression.
         "query_samples": {q: len(ts) for q, ts in sorted(runs.items())},
+        # per-query layers of the median: plan build vs noop-sink
+        # execution, and Spark jobs launched (max over runs)
+        **layers,
         # r17: directly-measured hypervisor steal (see _cpu_ticks) —
         # the window-quality datum three rounds of noise attribution
         # were missing. inventory_* covers just the timed inventory

@@ -63,8 +63,8 @@ def _term_meta(n_buckets: int) -> dict:
 
 
 def _index_n_buckets(index: DataFrame) -> int | None:
-    """The bucket count a postings frame was built with, or None for
-    a pre-r11 frame (no metadata)."""
+    """The bucket count a postings frame was built with, or None when
+    the frame carries no geometry metadata."""
     try:
         v = index.schema["term"].metadata.get("index_n_buckets")
         return None if v is None else int(v)
@@ -76,15 +76,18 @@ def _resolve_n_buckets(index: DataFrame, n_buckets: int | None) -> int:
     """The n_buckets a search must prune with (VERDICT r10 #2: a
     caller hashing with a different bucket count than the index was
     built with maps terms to directories that don't exist and gets
-    silently EMPTY postings, not an error). Default (None) reads the
-    frame's own persisted geometry; an explicit value that
-    contradicts it raises loudly. Pre-r11 frames carry no metadata —
-    they were all built with the module default, which is the
-    fallback."""
+    silently EMPTY postings, not an error). The frame's own geometry
+    (stamped by build_text_index and open_text_index) is the only
+    source: a frame without it raises, and an explicit value that
+    contradicts it raises."""
     persisted = _index_n_buckets(index)
-    if n_buckets is None:
-        return persisted if persisted is not None else INDEX_BUCKETS
-    if persisted is not None and int(n_buckets) != persisted:
+    if persisted is None:
+        raise ValueError(
+            "postings frame carries no index_n_buckets metadata on its "
+            "term column — search a frame from build_text_index or "
+            "open_text_index, whose geometry is stamped"
+        )
+    if n_buckets is not None and int(n_buckets) != persisted:
         raise ValueError(
             f"n_buckets mismatch: this index was built with "
             f"{persisted} buckets but the caller passed "
@@ -92,7 +95,7 @@ def _resolve_n_buckets(index: DataFrame, n_buckets: int | None) -> int:
             "count would silently return empty postings. Omit "
             "n_buckets to use the index's own geometry."
         )
-    return int(n_buckets)
+    return persisted
 
 
 def _manifest_n_buckets(m: dict, n_buckets: int | None, path: str) -> int:
@@ -312,9 +315,9 @@ def bm25_search(
     path — else from one agg over the lengths table; avgdl = exact
     integer sum / count either way, so the scalar is bit-identical
     across engines. dl per matched doc is read off the postings
-    themselves when the index carries the denormalized `dl` column
-    (build_text_index r5); only a pre-r5 index falls back to the
-    per-query lengths join. Ties break on doc_id ascending.
+    themselves (the denormalized `dl` column build_text_index
+    stamps); postings without it raise. Ties break on doc_id
+    ascending.
     Determinism: each term contribution is fixed-point rounded to 6
     decimals and summed as DECIMAL — order-insensitive exact
     addition, so the score survives any partial-agg order AND
@@ -333,16 +336,18 @@ def bm25_search(
     n_docs, sum_dl = stats
     avgdl = sum_dl / n_docs  # exact ints -> one IEEE div
 
-    has_dl = "dl" in index.columns
+    if "dl" not in index.columns:
+        raise ValueError(
+            "postings carry no `dl` column — search a frame from "
+            "build_text_index or open_text_index"
+        )
     post = _pruned(index, terms, _resolve_n_buckets(index, n_buckets)).select(
-        id_col, "term", "tf", *(["dl"] if has_dl else [])
+        id_col, "term", "tf", "dl"
     )
     df_tbl = post.groupBy("term").agg(
         F.count("*").cast("long").alias("df")
     )
     joined = post.join(F.broadcast(df_tbl), "term")
-    if not has_dl:
-        joined = joined.join(lengths, id_col)
     idf = F.log(
         (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
         + 1.0
@@ -1835,7 +1840,7 @@ def text_index_lifecycle_for(
                 spark,
                 build,
                 docs.filter(churn).select(
-                    F.lit("upsert").alias("_op"),
+                    F.lit("update").alias("_op"),
                     F.lit(1).cast("long").alias("_version"),
                     F.current_timestamp().alias("_ts"),
                     "doc_id",

@@ -42,7 +42,7 @@ cannot see:
 - SnapshotDiffDeleteSweeper: hard DELETEs via per-bucket key
   anti-join;
 - ChecksumDiffUpdateSweeper: in-place UPDATEs (and missed INSERTs)
-  via per-bucket row-checksum diff, emitting synthetic upserts.
+  via per-bucket row-checksum diff, emitting synthetic updates.
 Running both against one mirror gives full INSERT/UPDATE/DELETE
 convergence for envelope-less tables — the reference's WAL-level
 visibility (README.md:265-273) re-expressed as bounded reconciliation
@@ -179,6 +179,34 @@ class _SpoolWriter:
             raise IOError(f"spool batch rename failed: {stage} -> {dest}")
         return k
 
+    def _stage_and_commit(
+        self,
+        spark: SparkSession,
+        events: DataFrame,
+        stage_name: str,
+        version_col: str = "_version",
+    ) -> tuple[int, int | None]:
+        """Write `events` to the hidden stage (envelope column order),
+        read back its count and max version in one aggregate, and
+        commit only a non-empty batch. The staged parquet is an
+        immutable snapshot, so both numbers describe exactly what was
+        committed. Returns (n, max_version); (0, None) when empty."""
+        stage = f"{self.spool_dir}/{stage_name}"
+        events.select(
+            *[f.name for f in self.schema.fields]
+        ).write.mode("overwrite").parquet(stage)
+        agg = (
+            spark.read.schema(self.schema)
+            .parquet(stage)
+            .agg(F.count(F.lit(1)).alias("n"), F.max(version_col).alias("hi"))
+            .collect()[0]
+        )
+        if agg["n"] == 0:
+            self._drop_stage(spark, stage)
+            return 0, None
+        self._commit_staged(spark, stage)
+        return int(agg["n"]), int(agg["hi"])
+
     def _drop_stage(self, spark: SparkSession, stage: str) -> None:
         fs, stage_p, _ = self._fs(spark, stage)
         fs.delete(stage_p, True)
@@ -261,25 +289,17 @@ class JdbcChangePoller(_SpoolWriter):
         Partial batch dirs are impossible by construction: a `_batch`
         dir only ever appears via an atomic rename of a fully-written
         stage."""
-        st = self.state()
-        stage = f"{self.spool_dir}/.poll_stage"
-        self._new_rows(spark, st["cursor"]).write.mode("overwrite").parquet(
-            stage
+        # the cursor comes from the staged snapshot (not a second
+        # remote query), so it is consistent under concurrent inserts
+        n, hi = self._stage_and_commit(
+            spark,
+            self._new_rows(spark, self.state()["cursor"]),
+            ".poll_stage",
+            self.version_col,
         )
-        # the staged parquet is an immutable snapshot — deriving the
-        # high-water mark from IT (not a second remote query) keeps the
-        # cursor consistent under concurrent source inserts
-        staged = spark.read.schema(self.schema).parquet(stage)
-        agg = staged.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max(self.version_col).alias("hi"),
-        ).collect()[0]
-        if agg["n"] == 0:
-            self._drop_stage(spark, stage)
-            return 0
-        self._commit_staged(spark, stage)
-        self._persist_merge(cursor=int(agg["hi"]))
-        return int(agg["n"])
+        if n:
+            self._persist_merge(cursor=hi)
+        return n
 
     def pump(self, spark: SparkSession, max_polls: int = 100) -> int:
         """Poll until idle (one empty poll) or max_polls. Returns total
@@ -452,23 +472,6 @@ class _BucketedSweeper(_SpoolWriter):
         remote scans; mirror the poller's poll_plan() gate)."""
         df = self._remote_bucket_df(spark, 0, 1)
         return df._jdf.queryExecution().executedPlan().toString()
-
-    def _stage_and_commit(
-        self, spark: SparkSession, events: DataFrame, stage_name: str
-    ) -> int:
-        """Write `events` (already in envelope column order) to the
-        hidden stage, count there, and commit only a non-empty batch.
-        Returns the event count."""
-        stage = f"{self.spool_dir}/{stage_name}"
-        events.select(
-            *[f.name for f in self.schema.fields]
-        ).write.mode("overwrite").parquet(stage)
-        n = spark.read.schema(self.schema).parquet(stage).count()
-        if n == 0:
-            self._drop_stage(spark, stage)
-            return 0
-        self._commit_staged(spark, stage)
-        return n
 
 
 def _screen_spark_rendering(f: T.StructField) -> Column:
@@ -704,7 +707,7 @@ class SnapshotDiffDeleteSweeper(_BucketedSweeper):
                 F.current_timestamp().alias("_ts"),
                 *data_cols,
             )
-            return self._stage_and_commit(spark, events, ".sweep_stage")
+            return self._stage_and_commit(spark, events, ".sweep_stage")[0]
         finally:
             target_keys.unpersist()
 
@@ -727,7 +730,7 @@ class ChecksumDiffUpdateSweeper(_BucketedSweeper):
              replay it);
           2. anti-join source against target on ALL key columns PLUS
              the checksum: a surviving source row is new-or-changed;
-          3. emit it as a synthetic `_op='upsert'` envelope event
+          3. emit it as a synthetic `_op='update'` envelope event
              (full row values), stamped by _next_stamp (ordered
              above applied rows and composed sweeps),
              into the same spool protocol — Mirror applies it through
@@ -937,19 +940,20 @@ class ChecksumDiffUpdateSweeper(_BucketedSweeper):
         self, spark: SparkSession, mirror, version: int | None = None
     ) -> int:
         """One sweep against `mirror`: spool one batch of synthetic
-        upsert events for new-or-changed source rows; returns how
-        many. No event, no batch dir."""
+        `update` events for new-or-changed source rows (apply is
+        max-version-wins, so an update of a key the target lacks
+        inserts it); returns how many. No event, no batch dir."""
         target = mirror.read_target().persist()
         try:
             changed = self.changed_rows(spark, target)
             if version is None:
                 version = self._next_stamp(mirror)
             events = changed.select(
-                F.lit("upsert").alias("_op"),
+                F.lit("update").alias("_op"),
                 F.lit(int(version)).cast("long").alias("_version"),
                 F.current_timestamp().alias("_ts"),
                 *[f.name for f in self.row_schema.fields],
             )
-            return self._stage_and_commit(spark, events, ".update_stage")
+            return self._stage_and_commit(spark, events, ".update_stage")[0]
         finally:
             target.unpersist()

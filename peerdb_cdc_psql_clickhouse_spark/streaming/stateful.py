@@ -33,32 +33,45 @@ STATE_SCHEMA = (
 )
 
 
+_EMPTY = (0, -1, 0, 0, 0)
+
+
+def _fold(counters: tuple, pdf: pd.DataFrame) -> tuple:
+    """Fold one batch of a key's change events into its counters
+    (n_ops, max_version, n_insert, n_update, n_delete)."""
+    n, mx, ni, nu, nd = counters
+    ops = pdf["_op"].value_counts()
+    return (
+        n + len(pdf),
+        max(mx, int(pdf["_version"].max())),
+        ni + int(ops.get("insert", 0)),
+        nu + int(ops.get("update", 0)),
+        nd + int(ops.get("delete", 0)),
+    )
+
+
+def _row(key: tuple[Any, ...], counters: tuple, **extra) -> pd.DataFrame:
+    """One output row: the key's counters plus any extra columns."""
+    names = ("n_ops", "max_version", "n_insert", "n_update", "n_delete")
+    return pd.DataFrame(
+        {
+            "entity_id": [key[0]],
+            **{c: [v] for c, v in zip(names, counters)},
+            **{c: [v] for c, v in extra.items()},
+        }
+    )
+
+
 def _update(
     key: tuple[Any, ...],
     pdfs: Iterator[pd.DataFrame],
     state: GroupState,
 ) -> Iterator[pd.DataFrame]:
-    n, mx, ni, nu, nd = (
-        state.get if state.exists else (0, -1, 0, 0, 0)
-    )
+    counters = tuple(state.get) if state.exists else _EMPTY
     for pdf in pdfs:
-        n += len(pdf)
-        mx = max(mx, int(pdf["_version"].max()))
-        ops = pdf["_op"].value_counts()
-        ni += int(ops.get("insert", 0))
-        nu += int(ops.get("update", 0))
-        nd += int(ops.get("delete", 0))
-    state.update((n, mx, ni, nu, nd))
-    yield pd.DataFrame(
-        {
-            "entity_id": [key[0]],
-            "n_ops": [n],
-            "max_version": [mx],
-            "n_insert": [ni],
-            "n_update": [nu],
-            "n_delete": [nd],
-        }
-    )
+        counters = _fold(counters, pdf)
+    state.update(counters)
+    yield _row(key, counters)
 
 
 try:  # Spark 4.x state API; fall back silently where absent
@@ -82,27 +95,13 @@ try:  # Spark 4.x state API; fall back silently where absent
             self._state = handle.getValueState("progress", STATE_SCHEMA)
 
         def handleInputRows(self, key, rows, timerValues):
-            n, mx, ni, nu, nd = (
-                self._state.get() if self._state.exists() else (0, -1, 0, 0, 0)
+            counters = (
+                tuple(self._state.get()) if self._state.exists() else _EMPTY
             )
             for pdf in rows:
-                n += len(pdf)
-                mx = max(mx, int(pdf["_version"].max()))
-                ops = pdf["_op"].value_counts()
-                ni += int(ops.get("insert", 0))
-                nu += int(ops.get("update", 0))
-                nd += int(ops.get("delete", 0))
-            self._state.update((n, mx, ni, nu, nd))
-            yield pd.DataFrame(
-                {
-                    "entity_id": [key[0]],
-                    "n_ops": [n],
-                    "max_version": [mx],
-                    "n_insert": [ni],
-                    "n_update": [nu],
-                    "n_delete": [nd],
-                }
-            )
+                counters = _fold(counters, pdf)
+            self._state.update(counters)
+            yield _row(key, counters)
 
         def close(self) -> None:
             pass
@@ -158,34 +157,17 @@ def entity_progress_with_eviction(
 
     def update(key, pdfs, state: GroupState):
         if state.hasTimedOut:
-            n, mx, ni, nu, nd = state.get
+            counters = tuple(state.get)
             state.remove()
-            yield pd.DataFrame(
-                {
-                    "entity_id": [key[0]],
-                    "n_ops": [n],
-                    "max_version": [mx],
-                    "n_insert": [ni],
-                    "n_update": [nu],
-                    "n_delete": [nd],
-                    "evicted": [True],
-                }
-            )
+            yield _row(key, counters, evicted=True)
             return
-        n, mx, ni, nu, nd = (
-            state.get if state.exists else (0, -1, 0, 0, 0)
-        )
+        counters = tuple(state.get) if state.exists else _EMPTY
         max_ts = None
         for pdf in pdfs:
-            n += len(pdf)
-            mx = max(mx, int(pdf["_version"].max()))
-            ops = pdf["_op"].value_counts()
-            ni += int(ops.get("insert", 0))
-            nu += int(ops.get("update", 0))
-            nd += int(ops.get("delete", 0))
+            counters = _fold(counters, pdf)
             bt = pdf[ts_col].max()
             max_ts = bt if max_ts is None else max(max_ts, bt)
-        state.update((n, mx, ni, nu, nd))
+        state.update(counters)
         # timeout fires when the WATERMARK passes this instant — idle
         # keys are reaped as event time advances, never by wall clock.
         # Clamp above the current watermark: a batch of very-late
@@ -194,17 +176,7 @@ def entity_progress_with_eviction(
         want = int(pd.Timestamp(max_ts).timestamp() * 1000) + idle_horizon_ms
         wm = state.getCurrentWatermarkMs()
         state.setTimeoutTimestamp(max(want, wm + 1))
-        yield pd.DataFrame(
-            {
-                "entity_id": [key[0]],
-                "n_ops": [n],
-                "max_version": [mx],
-                "n_insert": [ni],
-                "n_update": [nu],
-                "n_delete": [nd],
-                "evicted": [False],
-            }
-        )
+        yield _row(key, counters, evicted=False)
 
     return (
         changes.withWatermark(ts_col, watermark)

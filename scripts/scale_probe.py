@@ -1,430 +1,323 @@
-"""Scale probe: run the heavy operators on Nx self-unioned copies of
-the sf0.1 tables (ids offset per copy so keys stay distinct) and
-report wall time per scale. Linear-or-better growth here is the
-evidence that the operator graphs (row-local signatures, band/bucket
-equi-joins, single-shuffle apply) hold as data grows — the knob that
-matters at 100 TB, where parallelism comes from file splits instead
-of the fan_out rebalance used on this single-file testdata.
+"""Scale probe: run the operators whose scaling no declared query
+shows on mult× replicas of the testdata and report seconds per scale.
+Linear-or-better growth here is the evidence that the occupancy caps,
+the train-once/apply-everywhere ops and the index lifecycle hold as
+data grows.
+
+Replicas come from bench.materialize_scaled (ids offset per copy,
+bijective per-copy content transforms so the duplicate RATE stays
+constant; copies past 13 compose the second transform family, valid
+to 169 copies), and every call is timed through bench.timed. An
+operator a declared query already runs on the same table is measured
+by bench.py's 10x/50x legs, not here; what remains are the inputs no
+declared query has: planted hot mass (near-identical vectors,
+boilerplate shingles, one line in every doc), the seed quantizer,
+fixed 500-row batches against a growing standing set, the text-index
+lifecycle, and PQ/IVF-PQ.
 
 Usage: python scripts/scale_probe.py [multipliers...]   (default 1 4 10)
+Prints one JSON line per multiplier: {"mult", <probe>: median seconds
+or "ERR ...", "samples": per-sample seconds, "jobs": max Spark jobs}.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
+import statistics
 import sys
-import time
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bench import MAX_SCALE_MULT, materialize_scaled, timed
 from peerdb_cdc_psql_clickhouse_spark.catalog import load_table
-from peerdb_cdc_psql_clickhouse_spark.operators.cdc import latest_state
-from peerdb_cdc_psql_clickhouse_spark.operators.dedup import (
-    lsh_candidate_pairs,
-    minhash_signature,
-    simhash,
-)
-from peerdb_cdc_psql_clickhouse_spark.operators.similarity import (
-    cosine_neardup_pairs,
-)
 from peerdb_cdc_psql_clickhouse_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # Median-of-N sampling (VERDICT r11 #4: single-shot probes proved too
 # box-noisy to publish — the r11 10x leg measured simhash at 10.78 vs
-# 1.19 s across two byte-identical runs; the same medianing bench.py
-# got in r11 makes probe rows comparable round-over-round). Raw
-# per-sample lists ride the JSON under "samples".
+# 1.19 s across two byte-identical runs). Raw per-sample lists ride
+# the JSON under "samples".
 PROBE_SAMPLES = int(os.environ.get("PROBE_SAMPLES", "3"))
 
+# ids for planted rows and fixed batches: above every replica copy's
+# range (copies stride by 10^7, at most 169 of them)
+FREE_IDS = 10_000_000_000
 
-def _median(xs: list[float]) -> float:
-    s = sorted(xs)
-    n = len(s)
-    return round(
-        s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2.0, 2
+
+def _probe(spark, res: dict, name: str, calls) -> list[dict]:
+    """Time each call through bench.timed, stopping at the first
+    error. res[name] gets the median seconds (or "ERR ..."),
+    res["samples"][name] the per-sample seconds and res["jobs"][name]
+    the most jobs one call launched. Returns the records."""
+    recs = []
+    for call in calls:
+        recs.append(timed(spark, call, name))
+        if "error" in recs[-1]:
+            break
+    ok = [round(r["s"], 2) for r in recs if "error" not in r]
+    if ok:
+        res["samples"][name] = ok
+    res["jobs"][name] = max(r["jobs"] for r in recs)
+    last = recs[-1]
+    res[name] = (
+        f"ERR {last['error']}"
+        if "error" in last
+        else round(statistics.median(ok), 2)
     )
+    return recs
 
 
-def _timed(
-    res: dict,
-    samples: dict,
-    name: str,
-    fn,
-    n: int | None = None,
-    spark=None,
-) -> None:
-    """Record median-of-n wall for a REPEATABLE action (stateless job
-    or idempotent search). Clears the persist cache before EVERY
-    sample when `spark` is given: operators that reuse()/persist an
-    internal frame (substring_spans' shared shingles, SemDeDup's
-    keyed assignment) would otherwise serve samples 2..n from cache
-    and the median would publish a mostly-cached wall as the
-    operator's cost. On error: record the error string, keep any
-    completed samples."""
-    runs: list[float] = []
-    try:
-        for _ in range(n or PROBE_SAMPLES):
-            if spark is not None:
-                spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            fn()
-            runs.append(round(time.perf_counter() - t0, 2))
-        res[name] = _median(runs)
-        samples[name] = runs
-    except Exception as e:  # noqa: BLE001 - record per-job, keep probing
-        res[name] = f"ERR {type(e).__name__}: {str(e)[:160]}"
-        if runs:
-            samples[name] = runs
-
-
-def _timed_seq(res: dict, samples: dict, name: str, fns) -> None:
-    """Median over a SEQUENCE of one-shot actions (stateful lifecycle
-    ops: each sample is an independent batch against the same standing
-    index — the production contract — so the samples are comparable
-    without resetting state)."""
-    runs: list[float] = []
-    try:
-        for fn in fns:
-            t0 = time.perf_counter()
-            fn()
-            runs.append(round(time.perf_counter() - t0, 2))
-        res[name] = _median(runs)
-        samples[name] = runs
-    except Exception as e:  # noqa: BLE001
-        res[name] = f"ERR {type(e).__name__}: {str(e)[:160]}"
-        if runs:
-            samples[name] = runs
-
-
-def _timed_once(res: dict, name: str, fn):
-    """Single-shot timing for the honest O(corpus) ops (index builds,
-    compaction) where repeating would triple the dominant cost and the
-    claim is 'linear', not 'flat' — noise cannot flip it. Returns the
-    action's result (or None on error)."""
-    t0 = time.perf_counter()
-    try:
-        out = fn()
-    except Exception as e:  # noqa: BLE001
-        res[name] = f"ERR {type(e).__name__}: {str(e)[:160]}"
-        return None
-    res[name] = round(time.perf_counter() - t0, 2)
-    return out
-
-
-def _materialize(df: DataFrame, tag: str, mult: int) -> DataFrame:
-    """Write a lazy replica to parquet with split count >= cores and
-    read it back (VERDICT r5 #4/#5: the source tables are single
-    files, so a 10x union replica is a 10-partition corpus on a
-    32-core box — probe timings then measure the write layout, not
-    the operator; the 10x SemDeDup and quality-score outliers were
-    exactly this). Materializing also takes the replication
-    transforms (translate/zip_with) OUT of every timed plan: jobs
-    scan a real corpus, as they would in production."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from peerdb_cdc_psql_clickhouse_spark.plans.layout import fan_out
-
-    spark = df.sparkSession
-    path = tempfile.mkdtemp(prefix=f"probe_replica_{tag}_{mult}_")
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    # fan_out is the single shared split-count policy (bench.py's
-    # materialize_scaled goes through the same call) — tune it once,
-    # both measurement paths move together.
-    fan_out(df).write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
-
-
-def replicate(
-    df: DataFrame,
-    id_col: str,
-    n: int,
-    id_stride: int,
-    text_col: str | None = None,
-    emb_col: str | None = None,
-) -> DataFrame:
-    """N stacked copies with per-copy distinct ids. Content columns
-    are made copy-distinct too (text: bijective char rotation;
-    embeddings: cyclic coordinate shift — an orthogonal permutation,
-    so within-copy cosines are EXACTLY preserved while cross-copy
-    cosine of random vectors ~ 0) so the Nx corpus has Nx the DATA at
-    the same duplicate RATE — without this, dedup-family probes
-    measure quadratic growth in duplicate multiplicity, not the
-    operator's scaling (the bench.materialize_scaled lesson; a mere
-    1%-coordinate rescale left replicas at cos >= 0.9996, still
-    planted near-dups)."""
-    from bench import MAX_SCALE_MULT, _rot_text, _shift_embedding
-
-    if text_col is not None and n > MAX_SCALE_MULT:
-        raise ValueError(
-            f"n={n} exceeds {MAX_SCALE_MULT}: text rotation cycles to "
-            "identity and replicas regain verbatim duplicates"
-        )
-    out = df
-    for i in range(1, n):
-        c = df.withColumn(id_col, F.col(id_col) + i * id_stride)
-        if text_col is not None:
-            c = c.withColumn(text_col, _rot_text(F.col(text_col), i))
-        if emb_col is not None:
-            c = c.withColumn(emb_col, _shift_embedding(F.col(emb_col), i))
-        out = out.unionByName(c)
-    return out
-
-
-# Composed replicas (VERDICT r3 #8 — the 2-decade curve): one
-# bijective family caps at 13 copies, so compose TWO independent
-# families. r18: the transform family moved to bench.py (VERDICT r17
-# #3 promoted it into the bench's own extended scaled leg); this
-# wrapper keeps the probe's call shape.
-
-
-def replicate_composed(
-    df, id_col: str, n: int, id_stride: int,
-    text_col: str | None = None, emb_col: str | None = None,
-):
-    """n stacked copies via the composed transform families — valid to
-    13 x 13 = 169 copies at the same duplicate rate."""
-    from bench import MAX_COMPOSED_MULT, _copy_embedding, _copy_text
-
-    if n > MAX_COMPOSED_MULT:
-        raise ValueError(f"n={n} exceeds composed guard {MAX_COMPOSED_MULT}")
-    out = df
-    for c in range(1, n):
-        rep = df.withColumn(id_col, F.col(id_col) + c * id_stride)
-        if text_col is not None:
-            rep = rep.withColumn(text_col, _copy_text(F.col(text_col), c))
-        if emb_col is not None:
-            rep = rep.withColumn(
-                emb_col, _copy_embedding(F.col(emb_col), c)
-            )
-        out = out.unionByName(rep)
-    return out
-
-
-def probe_composed(spark, mult: int) -> dict[str, float]:
-    """The dedup-family heavy hitters on a composed-replica corpus —
-    run at mult ~100 for the measured 2-decade curve. SemDeDup runs in
-    its documented scale configuration: quantizer = offline prefix
-    seeds (16·mult cells, constant cell size), two-level assignment
-    (k → 2√k per-row work), occupancy cap on."""
-    from peerdb_cdc_psql_clickhouse_spark.operators.dedup import (
-        substring_spans,
-    )
-    from peerdb_cdc_psql_clickhouse_spark.operators.pipeline import (
-        shuffle_corpus,
-    )
-    from peerdb_cdc_psql_clickhouse_spark.operators.similarity import (
-        semantic_neardup_pairs,
-    )
-
-    docs = _materialize(
-        replicate_composed(
-            load_table(spark, SF_DIR, "documents").select(
-                "doc_id", "text"
-            ),
-            "doc_id", mult, 10_000_000, text_col="text",
-        ),
-        "cdocs", mult,
-    )
-    emb = _materialize(
-        replicate_composed(
-            load_table(spark, SF_DIR, "embeddings").select(
-                "vec_id", "embedding"
-            ),
-            "vec_id", mult, 10_000_000, emb_col="embedding",
-        ),
-        "cemb", mult,
-    )
-    ev = load_table(spark, SF_DIR, "events")
-    changes = _materialize(
-        replicate_composed(
-            ev.select(
-                (F.col("event_id") % 257).alias("entity_id"),
-                F.lit("update").alias("_op"),
-                F.col("event_id").alias("_version"),
-                F.col("ts").alias("_ts"),
-                F.col("value"),
-            ),
-            "_version", mult, 10_000_000,
-        ),
-        "cchanges", mult,
-    )
-    n_cells = 16 * mult
-    seeds = emb.filter(F.col("vec_id") < n_cells).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
-    from peerdb_cdc_psql_clickhouse_spark.operators.text import (
-        bloom_build,
-        bloom_contamination_flags,
-    )
-
-    hot_line = " ".join(f"bl{j}" for j in range(12))
-    line_docs = docs.select(
-        "doc_id",
-        F.concat(
-            F.lit("u"), F.col("doc_id").cast("string"), F.lit(" start\n"),
-            F.lit(hot_line), F.lit("\ntail "), F.col("text"),
-        ).alias("text"),
-    )
-    bloom = bloom_build(
-        spark.range(2000).select(
-            F.concat(F.lit("ref gram "), F.col("id").cast("string")).alias(
-                "gram"
-            )
-        ),
-        "gram",
-    )
+def probe(spark, mult: int) -> dict:
     from peerdb_cdc_psql_clickhouse_spark.operators.bpe import (
         bpe_encode,
         train_bpe,
+    )
+    from peerdb_cdc_psql_clickhouse_spark.operators.dedup import (
+        dup_clusters_star,
+        line_dedup_apply,
+        substring_spans,
+        winnow_edges,
     )
     from peerdb_cdc_psql_clickhouse_spark.operators.quality import (
         score_quality,
         train_quality_classifier,
     )
-    from peerdb_cdc_psql_clickhouse_spark.operators.sketches import (
-        heavy_hitters,
-    )
-    from peerdb_cdc_psql_clickhouse_spark.operators.text import doc_signals
-
-    docs_1x = load_table(spark, SF_DIR, "documents")
-    merges = train_bpe(docs_1x, n_merges=200)
-    q_model = train_quality_classifier(
-        doc_signals(docs_1x).withColumn(
-            "label",
-            (
-                (F.col("token_cnt") >= 40)
-                & (F.col("dup_ngram_frac") <= 0.05)
-            ).cast("int"),
-        ),
-        iters=6,
-        l2=0.01,
-        optimizer="newton",
-    )
-    jobs = {
-        "minhash_lsh": lambda: lsh_candidate_pairs(
-            minhash_signature(docs, "doc_id", "text"), "doc_id"
-        ),
-        "simhash": lambda: simhash(docs, "doc_id", "text"),
-        "cosine_neardup": lambda: cosine_neardup_pairs(emb),
-        "substring_spans": lambda: substring_spans(docs),
-        "semantic_capped_2lvl": lambda: semantic_neardup_pairs(
-            emb, centroids=seeds, two_level=True,
-            n_centroids=n_cells, max_cluster_size=256,
-        ),
-        "cdc_apply": lambda: latest_state(changes, ["entity_id"]),
-        "shuffle_corpus": lambda: shuffle_corpus(docs),
-        # r4 late: the line-dedup hot path and bloom screen on the
-        # composed corpus (hot line in EVERY doc grows with mult)
-        "line_dedup_hot": lambda: __import__(
-            "peerdb_cdc_psql_clickhouse_spark.operators.dedup",
-            fromlist=["line_dedup_apply"],
-        ).line_dedup_apply(line_docs),
-        "bloom_screen": lambda: bloom_contamination_flags(docs, bloom),
-        # r4 s3: train-once / apply-everywhere — 1x-trained artifacts,
-        # growing corpus; apply is map-only so per-row cost should be
-        # flat across the two decades
-        "bpe_encode": lambda: bpe_encode(docs, merges).select(
-            "doc_id", "n_bpe_tokens"
-        ),
-        # composed docs carry (doc_id, text) only; the signal battery
-        # passes `lang` through, so supply a literal for the probe
-        "quality_score": lambda: score_quality(
-            doc_signals(docs.withColumn("lang", F.lit("en"))), q_model
-        ).select("doc_id", "quality_score"),
-        "heavy_hitters_words": lambda: heavy_hitters(
-            docs.select(
-                F.explode(
-                    F.split(F.lower("text"), r"\s+")
-                ).alias("w")
-            ).filter(F.col("w") != ""),
-            "w",
-            25,
-        ),
-    }
-    res: dict = {}
-    samples: dict = {}
-    res["samples"] = samples
-    for name, build in jobs.items():
-        _timed(
-            res,
-            samples,
-            name,
-            lambda b=build: b()
-            .write.format("noop")
-            .mode("overwrite")
-            .save(),
-            spark=spark,
-        )
-
-    # -- retrieval family (r5, VERDICT r4 #8): index LIFECYCLE costs,
-    # build and search timed separately. Builds are the one linear
-    # corpus pass; searches touch nprobe cells / the query terms'
-    # postings, so search wall should stay ~flat while the corpus
-    # grows — per-row cost falling through both decades.
-    import shutil
-    import tempfile
-
     from peerdb_cdc_psql_clickhouse_spark.operators.search import (
         bm25_search,
         open_text_index,
         phrase_search,
         save_full_text_index,
+        text_index_apply_changes,
+        text_index_compact,
+        text_index_delete,
         text_index_insert,
     )
     from peerdb_cdc_psql_clickhouse_spark.operators.similarity import (
         build_ivfpq_index,
+        ivf_assign,
+        pq_encode,
+        pq_search_rerank,
+        pq_train,
         search_ivfpq_index,
+        semantic_neardup_against,
+        semantic_neardup_pairs,
     )
+    from peerdb_cdc_psql_clickhouse_spark.operators.sketches import (
+        heavy_hitters,
+    )
+    from peerdb_cdc_psql_clickhouse_spark.operators.text import (
+        bloom_build,
+        bloom_contamination_flags,
+        doc_signals,
+        winnow_fp,
+    )
+    from peerdb_cdc_psql_clickhouse_spark.plans.layout import fan_out
 
-    tmp = tempfile.mkdtemp(prefix="probe_retrieval_")
+    tmp = tempfile.mkdtemp(prefix=f"probe_{mult}_")
     try:
-        emb_plain = emb.select("vec_id", "embedding")
-        queries = emb_plain.filter(F.col("vec_id") < 50)
-        # cells scale with the corpus (constant cell size -> constant
-        # scanned rows per probe); seed quantizer + two-level corpus
-        # assignment keep the build's n·k term at n·2√k
-        # build is the honest O(corpus) pass: single-shot (_timed_once)
-        ivfpq = _timed_once(
-            res,
-            "ivfpq_index_build",
-            lambda: build_ivfpq_index(
-                emb_plain,
-                f"{tmp}/ivfpq",
-                n_centroids=16 * mult,
-                n_assign=1,
-                refine_iters=0,
-                two_level=mult > 1,
-            ),
+        materialize_scaled(
+            spark, SF_DIR, f"{tmp}/replica", mult,
+            tables=("documents", "embeddings"),
         )
-        if ivfpq is not None:
-            # DEFAULT nprobe (r12: auto ~sqrt(cells), the deployment
-            # behavior — fixed nprobe=8 measured a recall point that
-            # silently decayed with growth; search wall now grows
-            # ~sqrt(corpus) at preserved recall instead)
-            _timed(
-                res,
-                samples,
-                "ivfpq_search",
-                lambda: search_ivfpq_index(
-                    ivfpq, queries, emb_plain, k=10, rerank=50
+        docs = load_table(spark, f"{tmp}/replica", "documents")
+        emb = load_table(spark, f"{tmp}/replica", "embeddings")
+        emb_plain = emb.select("vec_id", "embedding")
+        docs_1x = load_table(spark, SF_DIR, "documents")
+        emb_1x = load_table(spark, SF_DIR, "embeddings").select(
+            "vec_id", "embedding"
+        )
+
+        # r4 hot-path probes: plant adversarial mass that GROWS with
+        # mult, so the occupancy-capped paths are exercised at every
+        # scale — linear growth here is the evidence the caps bound
+        # the work.
+        base_vec = [
+            float(x)
+            for x in emb_1x.filter(F.col("vec_id") == 0).first()["embedding"]
+        ]
+        mass = spark.range(500 * mult).select(
+            (F.col("id") + FREE_IDS).alias("vec_id"),
+            F.transform(
+                F.array(*[F.lit(x) for x in base_vec]),
+                lambda x, i: F.when(
+                    i == 0, x * (F.lit(1.0) + F.col("id") / F.lit(1e7))
+                ).otherwise(x),
+            ).alias("embedding"),
+        )
+        emb_hot = emb_plain.unionByName(mass)
+        boiler = " ".join(f"bp{j}" for j in range(40))
+        hot_docs = docs.select("doc_id", "text").unionByName(
+            spark.range(300 * mult).select(
+                (F.col("id") + FREE_IDS).alias("doc_id"),
+                F.concat(
+                    F.lit("hdr"), F.col("id").cast("string"),
+                    F.lit(" filler words "), F.lit(boiler),
+                ).alias("text"),
+            )
+        )
+        hot_line = " ".join(f"bl{j}" for j in range(12))
+        line_docs = docs.select(
+            "doc_id",
+            F.concat(
+                F.lit("u"), F.col("doc_id").cast("string"),
+                F.lit(" start\n"), F.lit(hot_line), F.lit("\ntail "),
+                F.col("text"),
+            ).alias("text"),
+        )
+        bloom = bloom_build(
+            spark.range(2000).select(
+                F.concat(
+                    F.lit("ref gram "), F.col("id").cast("string")
+                ).alias("gram")
+            ),
+            "gram",
+        )
+        # fixed 64-vector quantizer for the batch screen; the corpus
+        # quantizer scales its cells with the corpus (16·mult offline
+        # prefix seeds, constant cell size)
+        seeds = emb_1x.filter(F.col("vec_id") < 64).select(
+            F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
+        )
+        n_cells = 16 * mult
+        cell_seeds = emb_plain.filter(F.col("vec_id") < n_cells).select(
+            F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
+        )
+        # r4 session 3: the train-once / apply-everywhere ops. Training
+        # inputs are the FIXED 1x tables (labeled sets, codebooks, and
+        # merge tables are bounded by construction at prod scale); only
+        # the map-side apply faces the growing corpus, so per-row cost
+        # should be flat.
+        merges = train_bpe(docs_1x, n_merges=200)
+        q_model = train_quality_classifier(
+            doc_signals(docs_1x).withColumn(
+                "label",
+                (
+                    (F.col("token_cnt") >= 40)
+                    & (F.col("dup_ngram_frac") <= 0.05)
+                ).cast("int"),
+            ),
+            iters=6,
+            l2=0.01,
+            optimizer="newton",
+        )
+        pq_cb = pq_train(emb_1x, iters=2)
+
+        jobs = {
+            "dup_clusters_star": lambda: dup_clusters_star(
+                winnow_edges(winnow_fp(fan_out(docs)))
+            ),
+            "semantic_neardup": lambda: semantic_neardup_pairs(
+                emb, n_centroids=16 * mult
+            ),
+            # SemDeDup in its documented scale configuration: offline
+            # prefix seeds, two-level assignment (k → 2√k per-row
+            # work), occupancy cap on
+            "semantic_capped_2lvl": lambda: semantic_neardup_pairs(
+                emb, centroids=cell_seeds, two_level=True,
+                n_centroids=n_cells, max_cluster_size=256,
+            ),
+            # mult x 500 near-identical vectors land in one k-means
+            # cell; the occupancy cap must keep pair work O(mass)
+            # (star), not O(mass^2)
+            "semantic_hotmass_capped": lambda: semantic_neardup_pairs(
+                emb_hot, n_centroids=16 * mult, max_cluster_size=256
+            ),
+            # boilerplate block in mult x 300 docs is over occ_cap at
+            # every mult — the canonical-star hot-shingle path
+            "substring_hot": lambda: substring_spans(hot_docs),
+            # a hot line planted in EVERY doc — the partial-min
+            # canonical must keep this linear, no occurrence list
+            "line_dedup_hot": lambda: line_dedup_apply(line_docs),
+            # fixed 128 KiB filter, growing corpus; map-only, expect
+            # flat per-row cost
+            "bloom_screen": lambda: bloom_contamination_flags(docs, bloom),
+            # fixed 1x-trained merges, encode the growing corpus —
+            # zero-shuffle Arrow pass, expect flat per-row cost
+            "bpe_encode": lambda: bpe_encode(docs, merges).select(
+                "doc_id", "n_bpe_tokens"
+            ),
+            # fixed trained weights as plan literals over the growing
+            # signal scan — pure codegen, expect flat per-row cost
+            "quality_score": lambda: score_quality(
+                doc_signals(docs), q_model
+            ).select("doc_id", "quality_score"),
+            "heavy_hitters_words": lambda: heavy_hitters(
+                docs.select(
+                    F.explode(F.split(F.lower("text"), r"\s+")).alias("w")
+                ).filter(F.col("w") != ""),
+                "w",
+                25,
+            ),
+            # fixed 1x codebook; encode growing corpus + ADC search
+            # for 50 queries + exact rerank of 50 rows/query
+            "pq_encode_search": lambda: pq_search_rerank(
+                emb_plain.filter(F.col("vec_id") < 50),
+                pq_encode(emb_plain, pq_cb),
+                emb_plain,
+                pq_cb,
+                k=10,
+            ),
+            # incremental screen — fixed 500-row batch vs mult x
+            # history (recomputes the history assignment each run;
+            # against the production-persisted table only the join
+            # remains)
+            "semantic_screen_500batch": lambda: semantic_neardup_against(
+                mass.limit(500),
+                seeds,
+                ivf_assign(emb_plain, seeds, 1).select(
+                    "centroid_id", "vec_id", "embedding"
+                ),
+            ),
+        }
+        res: dict = {"samples": {}, "jobs": {}}
+        spark.catalog.clearCache()  # setup persists stay out of sample 1
+        for name, build in jobs.items():
+            _probe(spark, res, name, [build] * PROBE_SAMPLES)
+
+        # -- retrieval family (r5, VERDICT r4 #8): index LIFECYCLE
+        # costs, build and search timed separately. Builds are the one
+        # linear corpus pass (single-shot: repeating would triple the
+        # dominant cost and the claim is 'linear', not 'flat');
+        # searches touch nprobe cells / the query terms' postings, so
+        # search wall should stay ~flat while the corpus grows.
+        ivfpq = _probe(
+            spark, res, "ivfpq_index_build",
+            [
+                lambda: build_ivfpq_index(
+                    emb_plain,
+                    f"{tmp}/ivfpq",
+                    n_centroids=16 * mult,
+                    n_assign=1,
+                    refine_iters=0,
+                    two_level=mult > 1,
                 )
-                .write.format("noop")
-                .mode("overwrite")
-                .save(),
-                spark=spark,
+            ],
+        )[-1]
+        if "error" not in ivfpq:
+            # DEFAULT nprobe (r12: auto ~sqrt(cells), the deployment
+            # behavior — search wall grows ~sqrt(corpus) at preserved
+            # recall)
+            queries = emb_plain.filter(F.col("vec_id") < 50)
+            _probe(
+                spark, res, "ivfpq_search",
+                [
+                    lambda: search_ivfpq_index(
+                        ivfpq["value"], queries, emb_plain, k=10, rerank=50
+                    )
+                ]
+                * PROBE_SAMPLES,
             )
 
         # text index: a fixed-df needle (500 copy-0 docs carry it at
         # every mult — the realistic "query term's postings, not the
         # corpus" contract) + a two-token phrase on the same docs
+        tidx = f"{tmp}/tidx"
         docs_needle = docs.select(
             "doc_id",
             F.when(
@@ -434,462 +327,115 @@ def probe_composed(spark, mult: int) -> dict[str, float]:
             .otherwise(F.col("text"))
             .alias("text"),
         )
-        # each step records under ITS OWN key (code review r5: one
-        # shared except blamed a phrase_search failure on bm25 and
-        # destroyed bm25's already-recorded timing). Build is the one
-        # honest O(corpus) pass: single-shot.
-        _timed_once(
-            res,
-            "text_index_build",
-            lambda: save_full_text_index(docs_needle, f"{tmp}/tidx"),
+        _probe(
+            spark, res, "text_index_build",
+            [lambda: save_full_text_index(docs_needle, tidx)],
         )
-        # O(batch) incremental maintenance (r6, VERDICT r5 #3): fold a
-        # FIXED 500-doc batch into the standing index — wall should be
-        # ~flat across both decades because only the batch is
-        # tokenized and only its touched bucket partitions take new
-        # files, never the standing postings. r12: medianed — each
-        # SAMPLE is an independent batch at its own id offset against
-        # the same standing index (the production contract), so
-        # insert/delete/apply samples are comparable without resets.
-        # Batches come from the CONSTANT 1x source, not the scaled
-        # corpus — deriving them from `docs` would hide a full corpus
-        # scan inside the timed op. Offsets must clear EVERY replica
-        # copy's id range: copies stride by 10_000_000 (copy 90 at
-        # 100x owns [900M, 900M+n_docs)); 10^10 + s*10^6 is beyond
-        # copy 999's base for every sample (the r11 probe-integrity
-        # fix, kept).
-        from peerdb_cdc_psql_clickhouse_spark.operators.search import (
-            text_index_apply_changes,
-            text_index_compact,
-            text_index_delete,
-        )
+        # O(batch) incremental maintenance (r6, VERDICT r5 #3): each
+        # sample is an independent FIXED 500-doc batch at its own id
+        # offset against the same standing index (the production
+        # contract), so samples are comparable without resets. Batches
+        # come from the CONSTANT 1x source — deriving them from `docs`
+        # would hide a full corpus scan inside the timed op.
+        offsets = [FREE_IDS + (s + 1) * 1_000_000 for s in range(PROBE_SAMPLES)]
 
-        def _batch_off(s: int) -> int:
-            return 10_000_000_000 + s * 1_000_000
-
-        def _ins_docs(off: int):
+        def _batch(off: int):
             return (
-                load_table(spark, SF_DIR, "documents")
-                .select("doc_id", "text")
+                docs_1x.select("doc_id", "text")
                 .filter(F.col("doc_id") < 500)
-                .select(
-                    (F.col("doc_id") + off).alias("doc_id"), "text"
-                )
+                .select((F.col("doc_id") + off).alias("doc_id"), "text")
             )
 
-        _timed_seq(
-            res,
-            samples,
-            "text_index_insert_500",
+        _probe(
+            spark, res, "text_index_insert_500",
             [
-                lambda off=_batch_off(s): text_index_insert(
-                    spark, f"{tmp}/tidx", _ins_docs(off)
+                lambda off=off: text_index_insert(spark, tidx, _batch(off))
+                for off in offsets
+            ],
+        )
+        # delete is O(requested ids), apply_changes is O(batch): walls
+        # should stay ~flat like the insert's
+        del_recs = _probe(
+            spark, res, "text_index_delete_250",
+            [
+                lambda off=off: text_index_delete(
+                    spark, tidx, [off + i for i in range(0, 500, 2)]
                 )
-                for s in range(PROBE_SAMPLES)
+                for off in offsets
             ],
         )
-        # delete is O(requested ids), apply_changes is O(batch):
-        # walls should stay ~flat across the decades like the
-        # insert's. compact is the one honest O(corpus) rewrite —
-        # single-shot, published as such; scheduling policy is
-        # tombstone FRACTION (~0.2), see text_index_compact.
-        del_ns: list[int] = []
+        res["text_index_delete_250_n"] = [r.get("value") for r in del_recs]
 
-        def _del(off: int) -> None:
-            ids = [off + i for i in range(0, 500, 2)]
-            del_ns.append(
-                text_index_delete(spark, f"{tmp}/tidx", ids)
-            )
-
-        _timed_seq(
-            res,
-            samples,
-            "text_index_delete_250",
-            [
-                lambda off=_batch_off(s): _del(off)
-                for s in range(PROBE_SAMPLES)
-            ],
-        )
-        res["text_index_delete_250_n"] = del_ns
-
-        def _apply(off: int) -> None:
-            # a constant 500-event CDC batch from the 1x source:
-            # 250 upserts re-writing the tombstoned ids (the
+        def _apply(off: int):
+            # a constant 500-event CDC batch from the 1x source: 250
+            # updates re-writing the tombstoned ids (the
             # generation-ranked update path) + 250 deletes
-            env = (
-                load_table(spark, SF_DIR, "documents")
-                .select("doc_id", "text")
-                .filter(F.col("doc_id") < 500)
-                .select(
-                    F.when(F.col("doc_id") % 2 == 0, F.lit("upsert"))
-                    .otherwise(F.lit("delete"))
-                    .alias("_op"),
-                    (F.col("doc_id") + 1).cast("long").alias("_version"),
-                    F.current_timestamp().alias("_ts"),
-                    (F.col("doc_id") + off).alias("doc_id"),
-                    "text",
-                )
+            env = _batch(off).select(
+                F.when(F.col("doc_id") % 2 == 0, F.lit("update"))
+                .otherwise(F.lit("delete"))
+                .alias("_op"),
+                (F.col("doc_id") - off + 1).cast("long").alias("_version"),
+                F.current_timestamp().alias("_ts"),
+                "doc_id",
+                "text",
             )
-            text_index_apply_changes(spark, f"{tmp}/tidx", env)
+            return text_index_apply_changes(spark, tidx, env)
 
-        _timed_seq(
-            res,
-            samples,
-            "text_index_apply_changes_500",
-            [
-                lambda off=_batch_off(s): _apply(off)
-                for s in range(PROBE_SAMPLES)
-            ],
+        _probe(
+            spark, res, "text_index_apply_changes_500",
+            [lambda off=off: _apply(off) for off in offsets],
         )
-        cst = _timed_once(
-            res,
-            "text_index_compact",
-            lambda: text_index_compact(spark, f"{tmp}/tidx"),
-        )
-        if cst is not None:
-            res["text_index_compact_dropped"] = cst["dropped_docs"]
-        # reopen in its own try: a LOAD failure must not overwrite the
-        # recorded build timing (review r5 pass 2)
-        try:
-            idx, lengths_saved, _tstats = open_text_index(
-                spark, f"{tmp}/tidx"
+        # compaction is the one honest O(corpus) rewrite — single-shot;
+        # scheduling policy is tombstone FRACTION (~0.2), see
+        # text_index_compact
+        cst = _probe(
+            spark, res, "text_index_compact",
+            [lambda: text_index_compact(spark, tidx)],
+        )[-1]
+        if "error" not in cst:
+            res["text_index_compact_dropped"] = cst["value"]["dropped_docs"]
+        opened = _probe(
+            spark, res, "text_index_load",
+            [lambda: open_text_index(spark, tidx)],
+        )[-1]
+        if "error" not in opened:
+            idx, lengths, _stats = opened["value"]
+            _probe(
+                spark, res, "bm25_search",
+                [
+                    lambda: bm25_search(
+                        idx, lengths, ["needlea", "needleb"], k=10
+                    )
+                ]
+                * PROBE_SAMPLES,
             )
-        except Exception as e:
-            res["text_index_load"] = (
-                f"ERR {type(e).__name__}: {str(e)[:160]}"
+            _probe(
+                spark, res, "phrase_search",
+                [lambda: phrase_search(idx, "needlea needleb")]
+                * PROBE_SAMPLES,
             )
-            idx = None
-        if idx is not None:
-            _timed(
-                res,
-                samples,
-                "bm25_search",
-                lambda: bm25_search(
-                    idx, lengths_saved, ["needlea", "needleb"], k=10
-                )
-                .write.format("noop")
-                .mode("overwrite")
-                .save(),
-                spark=spark,
-            )
-            _timed(
-                res,
-                samples,
-                "phrase_search",
-                lambda: phrase_search(idx, "needlea needleb")
-                .write.format("noop")
-                .mode("overwrite")
-                .save(),
-                spark=spark,
-            )
+        return res
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return res
-
-
-def probe(spark, mult: int) -> dict[str, float]:
-    docs = _materialize(
-        replicate(
-            load_table(spark, SF_DIR, "documents"),
-            "doc_id",
-            mult,
-            10_000_000,
-            text_col="text",
-        ),
-        "docs", mult,
-    )
-    emb = _materialize(
-        replicate(
-            load_table(spark, SF_DIR, "embeddings"),
-            "vec_id",
-            mult,
-            10_000_000,
-            emb_col="embedding",
-        ),
-        "emb", mult,
-    )
-    ev = load_table(spark, SF_DIR, "events")
-    changes = _materialize(
-        replicate(
-            ev.select(
-                (F.col("event_id") % 257).alias("entity_id"),
-                F.lit("update").alias("_op"),
-                F.col("event_id").alias("_version"),
-                F.col("ts").alias("_ts"),
-                F.col("value"),
-            ),
-            "_version",
-            mult,
-            10_000_000,
-        ),
-        "changes", mult,
-    )
-    from peerdb_cdc_psql_clickhouse_spark.operators.asof import (
-        asof_join,
-        range_join_count,
-    )
-    from peerdb_cdc_psql_clickhouse_spark.operators.dedup import (
-        dup_clusters,
-        winnow_edges,
-    )
-    from peerdb_cdc_psql_clickhouse_spark.operators.text import winnow_fp
-    from peerdb_cdc_psql_clickhouse_spark.plans.layout import fan_out
-
-    # events table is not replicated by id (asof/range scale with
-    # events x mult via per-key density): stack copies at shifted keys
-    evm = _materialize(
-        replicate(
-            ev.select("event_id", "ts", "user_id", "event_type"),
-            "event_id", mult, 100_000_000,
-        ).withColumn(
-            "user_id",
-            F.col("user_id")
-            + (F.col("event_id") / 100_000_000).cast("long") * 1_000_000,
-        ),
-        "evm", mult,
-    )
-    err = evm.filter(F.col("event_type") == "error").select(
-        "event_id", "user_id", "ts"
-    )
-    non_err = (
-        evm.filter(F.col("event_type") != "error")
-        .groupBy("user_id", "ts")
-        .agg(F.max("event_id").alias("prior_id"))
-    )
-    from peerdb_cdc_psql_clickhouse_spark.operators.similarity import (
-        semantic_neardup_against,
-        semantic_neardup_pairs,
-    )
-
-    # r4 hot-path probes: plant adversarial mass that GROWS with mult,
-    # so the occupancy-capped paths are exercised at every scale —
-    # linear growth here is the evidence the caps bound the work.
-    base_vec = [
-        float(x)
-        for x in load_table(spark, SF_DIR, "embeddings")
-        .filter(F.col("vec_id") == 0)
-        .first()["embedding"]
-    ]
-    mass = spark.range(500 * mult).select(
-        (F.col("id") + 50_000_000).alias("vec_id"),
-        F.transform(
-            F.array(*[F.lit(x) for x in base_vec]),
-            lambda x, i: F.when(
-                i == 0, x * (F.lit(1.0) + F.col("id") / F.lit(1e7))
-            ).otherwise(x),
-        ).alias("embedding"),
-    )
-    emb_hot = emb.select("vec_id", "embedding").unionByName(mass)
-    boiler = " ".join(f"bp{j}" for j in range(40))
-    hot_docs = docs.select("doc_id", "text").unionByName(
-        spark.range(300 * mult).select(
-            (F.col("id") + 50_000_000).alias("doc_id"),
-            F.concat(
-                F.lit("hdr"), F.col("id").cast("string"),
-                F.lit(" filler words "), F.lit(boiler),
-            ).alias("text"),
-        )
-    )
-    seeds = (
-        load_table(spark, SF_DIR, "embeddings")
-        .filter(F.col("vec_id") < 64)
-        .select(
-            F.col("vec_id").alias("c_id"),
-            F.col("embedding").alias("c_vec"),
-        )
-    )
-    from peerdb_cdc_psql_clickhouse_spark.operators.text import (
-        bloom_build,
-        bloom_contamination_flags,
-    )
-
-    hot_line = " ".join(f"bl{j}" for j in range(12))
-    line_docs = docs.select(
-        "doc_id",
-        F.concat(
-            F.lit("u"), F.col("doc_id").cast("string"), F.lit(" start\n"),
-            F.lit(hot_line), F.lit("\ntail "), F.col("text"),
-        ).alias("text"),
-    )
-    bloom = bloom_build(
-        spark.range(2000).select(
-            F.concat(F.lit("ref gram "), F.col("id").cast("string")).alias(
-                "gram"
-            )
-        ),
-        "gram",
-    )
-    # r4 session 3: the train-once / apply-everywhere ops. Training
-    # inputs are the FIXED 1x tables (labeled sets, codebooks, and
-    # merge tables are bounded by construction at prod scale); only
-    # the map-side apply faces the growing corpus, so per-row cost
-    # should be flat.
-    from peerdb_cdc_psql_clickhouse_spark.operators.bpe import (
-        bpe_encode,
-        train_bpe,
-    )
-    from peerdb_cdc_psql_clickhouse_spark.operators.quality import (
-        score_quality,
-        train_quality_classifier,
-    )
-    from peerdb_cdc_psql_clickhouse_spark.operators.similarity import (
-        pq_encode,
-        pq_search_rerank,
-        pq_train,
-    )
-    from peerdb_cdc_psql_clickhouse_spark.operators.text import doc_signals
-
-    docs_1x = load_table(spark, SF_DIR, "documents")
-    emb_1x = load_table(spark, SF_DIR, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    merges = train_bpe(docs_1x, n_merges=200)
-    q_model = train_quality_classifier(
-        doc_signals(docs_1x).withColumn(
-            "label",
-            (
-                (F.col("token_cnt") >= 40)
-                & (F.col("dup_ngram_frac") <= 0.05)
-            ).cast("int"),
-        ),
-        iters=6,
-        l2=0.01,
-        optimizer="newton",
-    )
-    pq_cb = pq_train(emb_1x, iters=2)
-    emb_plain = emb.select("vec_id", "embedding")
-
-    jobs = {
-        "minhash_lsh": lambda: lsh_candidate_pairs(
-            minhash_signature(docs, "doc_id", "text"), "doc_id"
-        ),
-        "simhash": lambda: simhash(docs, "doc_id", "text"),
-        "cosine_neardup": lambda: cosine_neardup_pairs(emb),
-        "cdc_apply": lambda: latest_state(changes, ["entity_id"]),
-        "asof_join": lambda: asof_join(
-            err, non_err, key="user_id", left_ts="ts", right_ts="ts",
-            payload=["prior_id"],
-        ),
-        "range_join": lambda: range_join_count(
-            err, evm.select("user_id", "ts"), key="user_id",
-            left_ts="ts", right_ts="ts", window_s=300, count_alias="n",
-        ),
-        "dup_clusters": lambda: dup_clusters(
-            winnow_edges(winnow_fp(fan_out(docs)))
-        ),
-        "dup_clusters_star": lambda: __import__(
-            "peerdb_cdc_psql_clickhouse_spark.operators.dedup",
-            fromlist=["dup_clusters_star"],
-        ).dup_clusters_star(winnow_edges(winnow_fp(fan_out(docs)))),
-        "substring_spans": lambda: __import__(
-            "peerdb_cdc_psql_clickhouse_spark.operators.dedup",
-            fromlist=["substring_spans"],
-        ).substring_spans(docs),
-        "semantic_neardup": lambda: __import__(
-            "peerdb_cdc_psql_clickhouse_spark.operators.similarity",
-            fromlist=["semantic_neardup_pairs"],
-        ).semantic_neardup_pairs(emb, n_centroids=16 * mult),
-        "shuffle_corpus": lambda: __import__(
-            "peerdb_cdc_psql_clickhouse_spark.operators.pipeline",
-            fromlist=["shuffle_corpus"],
-        ).shuffle_corpus(docs),
-        # r4: mult x 500 near-identical vectors land in one k-means
-        # cell; the occupancy cap must keep pair work O(mass) (star),
-        # not O(mass^2)
-        "semantic_hotmass_capped": lambda: semantic_neardup_pairs(
-            emb_hot, n_centroids=16 * mult, max_cluster_size=256
-        ),
-        # r4: boilerplate block in mult x 300 docs is over occ_cap at
-        # every mult — the canonical-star hot-shingle path
-        "substring_hot": lambda: __import__(
-            "peerdb_cdc_psql_clickhouse_spark.operators.dedup",
-            fromlist=["substring_spans"],
-        ).substring_spans(hot_docs),
-        # r4: incremental screen — fixed 500-row batch vs mult x
-        # history (recomputes the history assignment each run; against
-        # the production-persisted table only the join remains)
-        # r4 late: line dedup with a hot line planted in EVERY doc
-        # (mult x 60k occurrences of one line) — the partial-min
-        # canonical must keep this linear, no occurrence list
-        "line_dedup_hot": lambda: __import__(
-            "peerdb_cdc_psql_clickhouse_spark.operators.dedup",
-            fromlist=["line_dedup_apply"],
-        ).line_dedup_apply(line_docs),
-        # r4 late: bloom contamination screen — fixed 128 KiB filter,
-        # growing corpus; map-only, expect flat per-row cost
-        "bloom_screen": lambda: bloom_contamination_flags(docs, bloom),
-        # r4 s3: fixed 1x-trained merges, encode the growing corpus —
-        # zero-shuffle Arrow pass, expect flat per-row cost
-        "bpe_encode": lambda: bpe_encode(docs, merges).select(
-            "doc_id", "n_bpe_tokens"
-        ),
-        # r4 s3: fixed trained weights as plan literals over the
-        # growing signal scan — pure codegen, expect flat per-row cost
-        "quality_score": lambda: score_quality(
-            doc_signals(docs), q_model
-        ).select("doc_id", "quality_score"),
-        # r4 s3: fixed 1x codebook; encode growing corpus + ADC search
-        # for 50 queries + exact rerank of 50 rows/query
-        "pq_encode_search": lambda: pq_search_rerank(
-            emb_plain.filter(F.col("vec_id") < 50),
-            pq_encode(emb_plain, pq_cb),
-            emb_plain,
-            pq_cb,
-            k=10,
-        ),
-        "semantic_screen_500batch": lambda: semantic_neardup_against(
-            mass.limit(500),
-            seeds,
-            __import__(
-                "peerdb_cdc_psql_clickhouse_spark.operators.similarity",
-                fromlist=["ivf_assign"],
-            ).ivf_assign(emb.select("vec_id", "embedding"), seeds, 1)
-            .select("centroid_id", "vec_id", "embedding"),
-        ),
-    }
-    res: dict = {}
-    samples: dict = {}
-    res["samples"] = samples
-    for name, build in jobs.items():
-        _timed(
-            res,
-            samples,
-            name,
-            lambda b=build: b()
-            .write.format("noop")
-            .mode("overwrite")
-            .save(),
-            spark=spark,
-        )
-    return res
 
 
 def main() -> None:
-    args = sys.argv[1:]
-    composed = False
-    if args and args[0] == "--composed":
-        composed, args = True, args[1:]
-        # the 2-decade leg holds ~100x data in one JVM; size the
-        # driver heap the way a real cluster driver would be sized for
-        # its broadcast threshold (64 MB serialized sides deserialize
-        # to several x; at 8g the substring diagonal join's AQE
-        # broadcast build OOMs right at the 100x boundary — measured)
+    mults = [int(a) for a in sys.argv[1:]] or [1, 4, 10]
+    if max(mults) > MAX_SCALE_MULT:
+        # past 13 copies the corpus reaches the 2-decade scale (~100x
+        # held in one JVM); size the driver heap the way a real cluster
+        # driver would be sized for its broadcast threshold (64 MB
+        # serialized sides deserialize to several x; at 8g the
+        # substring diagonal join's AQE broadcast build OOMs right at
+        # the 100x boundary — measured)
         os.environ.setdefault("SPARK_DRIVER_MEMORY", "24g")
-    mults = [int(a) for a in args] or ([1, 10, 100] if composed else [1, 4, 10])
     spark = get_spark("scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).selectExpr("sum(id)").write.format("noop").mode(
         "overwrite"
     ).save()
-    fn = probe_composed if composed else probe
     for m in mults:
-        res = fn(spark, m)
-        print(
-            json.dumps(
-                {"mult": m, **({"composed": True} if composed else {}), **res}
-            ),
-            flush=True,
-        )
+        print(json.dumps({"mult": m, **probe(spark, m)}), flush=True)
     spark.stop()
 
 

@@ -575,6 +575,51 @@ def test_update_sweep_converges_plain_table(spark, derby_url, tmp_path):
     assert sorted(glob.glob(str(tmp_path / "upspool" / "_batch=*"))) == before
 
 
+def test_update_sweep_spool_passes_validation(spark, derby_url, tmp_path):
+    """The update sweep speaks the engine's one `_op` vocabulary:
+    reading its spool back through read_changes + validate_changes
+    quarantines nothing (an `upsert` op would land every event in the
+    dead-letter output as unknown_op)."""
+    from peerdb_cdc_psql_clickhouse_spark.catalog import change_event_schema
+    from peerdb_cdc_psql_clickhouse_spark.operators.cdc import (
+        validate_changes,
+    )
+    from peerdb_cdc_psql_clickhouse_spark.sources.changes import read_changes
+    from peerdb_cdc_psql_clickhouse_spark.sources.jdbc import read_jdbc
+    from peerdb_cdc_psql_clickhouse_spark.sources.jdbc_changes import (
+        ChecksumDiffUpdateSweeper,
+    )
+
+    write_jdbc(
+        spark.createDataFrame([(1, "a"), (2, "b")], ROW_SCHEMA),
+        derby_url,
+        "plain_val",
+    )
+    mirror = _mirror(spark, tmp_path)
+    mirror.snapshot(read_jdbc(spark, url=derby_url, dbtable="plain_val"))
+    _exec_sql(
+        spark, derby_url, "UPDATE plain_val SET \"val\" = 'b9' WHERE \"entity_id\" = 2"
+    )
+    _exec_sql(spark, derby_url, "INSERT INTO plain_val VALUES (9, 'z')")
+    spool = str(tmp_path / "valspool")
+    sweeper = ChecksumDiffUpdateSweeper(
+        url=derby_url,
+        table="plain_val",
+        key_cols=["entity_id"],
+        row_schema=ROW_SCHEMA,
+        spool_dir=spool,
+        state_path=str(tmp_path / "valstate.json"),
+        n_buckets=2,
+    )
+    assert sweeper.sweep_once(spark, mirror) == 2
+    valid, quarantined = validate_changes(
+        read_changes(spark, spool, change_event_schema(ROW_SCHEMA)),
+        ["entity_id"],
+    )
+    assert quarantined.count() == 0
+    assert sorted(r["entity_id"] for r in valid.collect()) == [2, 9]
+
+
 def test_update_sweep_remote_screen_prunes_buckets(
     spark, derby_url, tmp_path
 ):

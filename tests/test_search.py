@@ -566,3 +566,27 @@ def test_insert_validate_not_live_guard(spark, tmp_path):
         ]
         == 2
     )
+
+
+def test_search_without_geometry_or_dl_raises(spark):
+    """A postings frame without its stamped bucket geometry, or BM25
+    postings without the denormalized `dl`, raise instead of assuming
+    the module-default bucket count or joining the lengths table."""
+    import pytest
+
+    from peerdb_cdc_psql_clickhouse_spark.operators.search import (
+        _index_n_buckets,
+        bm25_search,
+    )
+
+    df, _rows = _hand(spark)
+    idx = build_text_index(df)
+    bare = idx.withColumn("term", F.col("term").alias("term", metadata={}))
+    assert _index_n_buckets(idx) is not None
+    assert _index_n_buckets(bare) is None
+    with pytest.raises(ValueError, match="index_n_buckets"):
+        term_search(bare, ["quick"])
+    with pytest.raises(ValueError, match="index_n_buckets"):
+        phrase_search(bare, "quick brown")
+    with pytest.raises(ValueError, match="`dl`"):
+        bm25_search(idx.drop("dl"), None, ["quick"], stats=(5, 20))
