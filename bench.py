@@ -588,49 +588,73 @@ def _leg_shuffle_partitions(spark, data_dir: str):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
+def build_seconds(spark, sf_dir: str, *resolvers) -> float | None:
+    """Wall seconds of resolving sf_dir's artifacts through
+    `resolvers` when that built (and published) at least one artifact
+    slot; None when every slot was already published — a warm
+    resolve is not the one-time build cost."""
+    from peerdb_cdc_psql_clickhouse_spark.artifacts import built_slots
+
+    n = len(built_slots())
+    t0 = time.perf_counter()
+    for resolve in resolvers:
+        resolve(spark, sf_dir)
+    dt = round(time.perf_counter() - t0, 3)
+    return dt if len(built_slots()) > n else None
+
+
+def artifact_build_secs(spark, sf_dir: str, suffix: str = "") -> dict:
+    """{<artifact>_build_sec<suffix>: build_seconds} for the four
+    per-corpus artifacts; the text index times both of its slots."""
+    from peerdb_cdc_psql_clickhouse_spark.operators.dedup import (
+        dup_clusters_for,
+    )
+    from peerdb_cdc_psql_clickhouse_spark.operators.search import (
+        text_index_for,
+        text_index_lifecycle_for,
+    )
+    from peerdb_cdc_psql_clickhouse_spark.operators.similarity import (
+        ann_groundtruth_for,
+        ivf_index_for,
+    )
+
+    resolvers = {
+        "ivf_index": (ivf_index_for,),
+        "text_index": (text_index_for, text_index_lifecycle_for),
+        "ann_groundtruth": (ann_groundtruth_for,),
+        "dup_clusters": (dup_clusters_for,),
+    }
+    return {
+        f"{name}_build_sec{suffix}": build_seconds(spark, sf_dir, *rs)
+        for name, rs in resolvers.items()
+    }
+
+
 def scaled_inventory(
     spark, sf_dir: str, timings_1x: dict, mult: int = 10
 ) -> dict:
-    """The declared inventory at a mult× replica (VERDICT r2 #6): the
-    empirical check that no query's per-row cost degrades with data
-    size. Reports per-query seconds plus the worst time ratio; a
-    query is scale-clean when t_Nx <= 2·N·t_1x (≤2× per-row cost).
+    """The declared inventory at a mult× replica: the empirical check
+    that no query's per-row cost degrades with data size. Reports
+    per-query seconds plus the worst time ratio; a query is
+    scale-clean when t_Nx <= 2·N·t_1x (≤2× per-row cost).
 
-    r11 (VERDICT r10 #4): the scaled leg gets the SAME adaptive-median
-    treatment as the 1× leg — it used to be single-shot, so one noisy
-    box window inflated every ratio by +2-3 at once and made
-    scaled_worst_ratio incomparable round-over-round. Median-of-3 with
-    adaptive re-sampling capped at SCALED_MAX_ITERS (lower than the 1×
-    cap because each pass here costs mult× a 1× pass); per-query
-    sample counts ride out in query_samples."""
+    Same adaptive-median treatment as the 1× leg (a single-shot pass
+    lets one noisy window inflate every ratio at once): median-of-3
+    with adaptive re-sampling capped at SCALED_MAX_ITERS (lower than
+    the 1× cap because each pass here costs mult× a 1× pass);
+    per-query sample counts ride out in query_samples."""
     import shutil
     import tempfile
-
-    from peerdb_cdc_psql_clickhouse_spark.operators.search import (
-        text_index_build_seconds,
-    )
-    from peerdb_cdc_psql_clickhouse_spark.operators.dedup import (
-        dup_clusters_build_seconds,
-    )
-    from peerdb_cdc_psql_clickhouse_spark.operators.similarity import (
-        ann_groundtruth_build_seconds,
-        ivf_index_build_seconds,
-    )
 
     work = tempfile.mkdtemp(prefix="bench_scaled_")
     try:
         materialize_scaled(spark, sf_dir, work, mult)
         spark.catalog.clearCache()
-        # one-time index builds for the replica corpus, reported as
+        # one-time artifact builds for the replica corpus, reported as
         # their own lifecycle cost — the x2b/x2d/x9 timings below are
-        # pure index SEARCH (VERDICT r4 #1 for IVF; r5 #2 for text:
-        # x9's 5.27 worst scaled ratio was ~entirely the in-query
-        # text-index build)
+        # pure index SEARCH
         with _leg_shuffle_partitions(spark, work):
-            ivf_build = ivf_index_build_seconds(spark, work)
-            text_build = text_index_build_seconds(spark, work)
-            anngt_build = ann_groundtruth_build_seconds(spark, work)
-            dupcl_build = dup_clusters_build_seconds(spark, work)
+            build_secs = artifact_build_secs(spark, work)
             timings, spreads, runs, errors, layers = inventory_repeated(
                 spark,
                 work,
@@ -642,10 +666,7 @@ def scaled_inventory(
         return {
             "mult": mult,
             "total_sec": round(sum(timings.values()), 3),
-            "ivf_index_build_sec": ivf_build,
-            "text_index_build_sec": text_build,
-            "ann_groundtruth_build_sec": anngt_build,
-            "dup_clusters_build_sec": dupcl_build,
+            **build_secs,
             "queries": timings,
             "query_rel_spread": spreads,
             "query_samples": {
@@ -1176,44 +1197,19 @@ def main() -> None:
     # per-plan, not per-byte, so it vanishes at real scale anyway)
     inventory(spark, "/root/testdata/sf0.001")  # best-effort; discarded
 
-    # one-time persisted-index builds for this corpus, timed
-    # separately (the x2b/x2d inventory entries are pure IVF-index
-    # search; x9 is pure text-index search — VERDICT r5 #2)
-    from peerdb_cdc_psql_clickhouse_spark.operators.search import (
-        text_index_build_seconds,
-    )
-    from peerdb_cdc_psql_clickhouse_spark.operators.dedup import (
-        dup_clusters_build_seconds,
-    )
-    from peerdb_cdc_psql_clickhouse_spark.operators.similarity import (
-        ann_groundtruth_build_seconds,
-        ivf_index_build_seconds,
-    )
-
-    ivf_build = ivf_index_build_seconds(spark, sf_dir)
-    text_build = text_index_build_seconds(spark, sf_dir)
-    # r14: the per-corpus dup-cluster table (x1f/x7/x7b join it; x1e
-    # is the declared live measurement of its construction)
-    dupcl_build = dup_clusters_build_seconds(spark, sf_dir)
-    # r14 (VERDICT r13 #1): x2b's exact containment side is persisted
-    # per corpus like the indexes; its one-time build is a lifecycle
-    # cost, reported here so the x2b inventory line is pure search
-    anngt_build = ann_groundtruth_build_seconds(spark, sf_dir)
-
-    # r16 (VERDICT r15 #3): cold-build twins measured into a
-    # throwaway artifact root, so every round's record carries real
-    # 1x build costs even when the box's cache slots are warm (the
-    # fields above are honestly null in that case — the warm/cold
-    # distinction is the field name)
-    from peerdb_cdc_psql_clickhouse_spark.operators.search import (
+    # one-time corpus-artifact builds, timed separately so the
+    # inventory entries that read them (x2b/x2d: IVF index; x9/x9b:
+    # text indexes; x2b: ANN ground truth; x1f/x7/x7b: dup-cluster
+    # table) are pure search. Null when the slot was already
+    # published; the _cold twins build into a throwaway root, so the
+    # record always carries real 1x build costs.
+    from peerdb_cdc_psql_clickhouse_spark.artifacts import (
         cold_artifact_environment,
     )
 
+    build_secs = artifact_build_secs(spark, sf_dir)
     with cold_artifact_environment():
-        ivf_build_cold = ivf_index_build_seconds(spark, sf_dir)
-        text_build_cold = text_index_build_seconds(spark, sf_dir)
-        anngt_build_cold = ann_groundtruth_build_seconds(spark, sf_dir)
-        dupcl_build_cold = dup_clusters_build_seconds(spark, sf_dir)
+        build_secs_cold = artifact_build_secs(spark, sf_dir, "_cold")
 
     # per-query MEDIANS over >=3 iterations (VERDICT r7 #9); the
     # scaled pass below medians too since r11 (VERDICT r10 #4), with
@@ -1339,14 +1335,8 @@ def main() -> None:
             "picked_attempt": cdc_decision["pick"],
             "certified": cdc_decision["certified"],
         },
-        "ivf_index_build_sec": ivf_build,
-        "text_index_build_sec": text_build,
-        "ann_groundtruth_build_sec": anngt_build,
-        "dup_clusters_build_sec": dupcl_build,
-        "ivf_index_build_sec_cold": ivf_build_cold,
-        "text_index_build_sec_cold": text_build_cold,
-        "ann_groundtruth_build_sec_cold": anngt_build_cold,
-        "dup_clusters_build_sec_cold": dupcl_build_cold,
+        **build_secs,
+        **build_secs_cold,
         "cdc_stress": stress,
         "cdc_stress_large_profile": stress_large,
         "ann_recall": recall,
@@ -1404,8 +1394,12 @@ def main() -> None:
         # inventory number is steal-certified (<= threshold).
         "host_steal_pct_inventory": inventory_steal_pct,
         **({} if steal_certified else {"steal_degraded": True}),
-        "ivf_index_build_sec_cold": ivf_build_cold,
-        "text_index_build_sec_cold": text_build_cold,
+        "ivf_index_build_sec_cold": build_secs_cold[
+            "ivf_index_build_sec_cold"
+        ],
+        "text_index_build_sec_cold": build_secs_cold[
+            "text_index_build_sec_cold"
+        ],
         "cdc_ops_per_sec": stress.get("ops_per_sec"),
         **({} if cdc_decision["certified"] else {"cdc_steal_degraded": True}),
         "cdc_ops_per_sec_declared_profile": stress_large.get("ops_per_sec"),

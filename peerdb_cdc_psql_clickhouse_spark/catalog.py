@@ -175,10 +175,12 @@ CDC_META_FIELDS = [
 
 
 def corpus_cache_key(sf_dir: str, filename: str) -> str:
-    """Identity of one testdata file for per-process build-once caches
-    (IVF / text indexes): absolute path + mtime, so a regenerated
-    corpus under the same path gets a fresh artifact. One shared
-    definition so the two caches cannot drift."""
+    """Identity of one corpus file, for the keys of the persisted
+    corpus artifacts (artifacts.artifact_slot: text indexes, IVF
+    index, ANN ground truth, dup-cluster table): absolute path +
+    mtime_ns, so a regenerated corpus under the same path gets a fresh
+    artifact. One shared definition so the artifact keys cannot
+    drift."""
     import os
 
     src = os.path.join(os.path.abspath(sf_dir), filename)

@@ -17,7 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..artifacts import artifact_slot
+from ..catalog import corpus_cache_key, load_table
 from ..functions.hashing import content_sha256, hash64, hash64_sql
 from ..registry import declare
 
@@ -833,85 +834,50 @@ def _star_labels(edges: DataFrame, max_iters: int) -> DataFrame:
 # key's explicit parameters don't capture (the dup_clusters label
 # contract); every label-shaping PARAMETER — WINNOW_MAX_DF /
 # WINNOW_MIN_SHARED / WINNOW_W / WINNOW_SHINGLE_K / CLUSTER_MAX_ITERS
-# (r15, ADVICE r14: the iteration cap shapes labels too, as
-# test_iteration_cap_respected proves) — rides the key itself, so
-# changing any of them rebuilds without a manual version bump
+# (the iteration cap shapes labels too, as test_iteration_cap_respected
+# proves) — rides the key itself, so changing any of them rebuilds
+# without a manual version bump
 _DUP_CLUSTERS_FORMAT = 1
-
-_DUP_CLUSTERS_CACHE: dict[str, str] = {}
 
 
 def dup_clusters_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The per-corpus PERSISTED duplicate-cluster table (doc_id,
     cluster_id) for sf_dir's documents — the exact x1e derivation
     (winnow_fp -> df-capped winnow_edges -> min-label dup_clusters),
-    built once per corpus snapshot and reused by every consumer (r14:
-    x1f_dedup_apply, x7_corpus_select, x7b_training_mix each re-ran
-    the iterative label-propagation rounds per execution — the same
-    anti-pattern the persisted text index closed for x9 in r5. At
-    100 TB, near-dup clustering is a preprocessing pass over the
-    corpus, not per-query work; the apply/select/mix queries join
-    against its output table). Same cross-process slot discipline as
-    text_index_for / ivf_index_for: keyed by corpus path+mtime plus
-    the edge parameters, so regenerated testdata or a parameter
-    change can never serve a stale table. The derivation is
-    deterministic (portable hashes; min-label fixpoint is
-    order-insensitive) — x1e hash-matches the recursive-SQL oracle on
-    the SAME derivation every round, and a slot-vs-fresh parity
-    pytest pins the persisted copy — so consumers' oracle hashes
-    cannot move. x1e itself stays live: it IS the declared
+    built once per corpus snapshot and reused by every consumer
+    (x1f_dedup_apply, x7_corpus_select, x7b_training_mix join against
+    it instead of re-running the iterative label propagation per
+    execution). At 100 TB, near-dup clustering is a preprocessing
+    pass over the corpus, not per-query work. The artifact slot is
+    keyed by corpus path+mtime plus the edge parameters, so
+    regenerated testdata or a parameter change can never serve a
+    stale table. The derivation is deterministic (portable hashes;
+    min-label fixpoint is order-insensitive) — x1e hash-matches the
+    recursive-SQL oracle on the SAME derivation, and a slot-vs-fresh
+    parity pytest pins the persisted copy — so consumers' oracle
+    hashes cannot move. x1e itself stays live: it IS the declared
     cluster-construction operator."""
     import os as _os
 
-    from ..catalog import corpus_cache_key, load_table
-    from .search import artifact_slot
+    from .text import WINNOW_SHINGLE_K, WINNOW_W, winnow_fp
 
-    key = corpus_cache_key(sf_dir, "documents.parquet")
-    path = _DUP_CLUSTERS_CACHE.get(key)
-    if path is None:
-
-        def _build(build: str) -> None:
-            from .text import winnow_fp
-
-            docs = load_table(spark, sf_dir, "documents")
-            (
-                dup_clusters(winnow_edges(winnow_fp(docs)))
-                .write.mode("overwrite")
-                .parquet(_os.path.join(build, "data"))
-            )
-
-        from .text import WINNOW_SHINGLE_K, WINNOW_W
-
-        path = _DUP_CLUSTERS_CACHE[key] = artifact_slot(
-            "dupclusters",
-            f"cfmt{_DUP_CLUSTERS_FORMAT}|df{WINNOW_MAX_DF}"
-            f"|ms{WINNOW_MIN_SHARED}|w{WINNOW_W}|k{WINNOW_SHINGLE_K}"
-            f"|it{CLUSTER_MAX_ITERS}|sa{STAR_DISPATCH_ROUNDS}|{key}",
-            _build,
+    def _build(build: str) -> None:
+        docs = load_table(spark, sf_dir, "documents")
+        (
+            dup_clusters(winnow_edges(winnow_fp(docs)))
+            .write.mode("overwrite")
+            .parquet(_os.path.join(build, "data"))
         )
-    return spark.read.parquet(_os.path.join(path, "data"))
-
-
-def dup_clusters_build_seconds(
-    spark: SparkSession, sf_dir: str
-) -> float | None:
-    """Force (and time) the cluster-table build for sf_dir — bench.py
-    reports it separately, like the text/IVF index builds: the
-    x1f/x7/x7b inventory entries are joins against the table, and the
-    one-time construction cost is x1e's own declared measurement.
-    None = warm-slot resolve, no build ran (r15, ADVICE r14)."""
-    import time
-
-    from ..catalog import corpus_cache_key
-    from .search import slot_was_built
 
     key = corpus_cache_key(sf_dir, "documents.parquet")
-    if key in _DUP_CLUSTERS_CACHE:
-        return 0.0
-    t0 = time.perf_counter()
-    dup_clusters_for(spark, sf_dir)
-    dt = round(time.perf_counter() - t0, 3)
-    return dt if slot_was_built(_DUP_CLUSTERS_CACHE[key]) else None
+    path = artifact_slot(
+        "dupclusters",
+        f"cfmt{_DUP_CLUSTERS_FORMAT}|df{WINNOW_MAX_DF}"
+        f"|ms{WINNOW_MIN_SHARED}|w{WINNOW_W}|k{WINNOW_SHINGLE_K}"
+        f"|it{CLUSTER_MAX_ITERS}|sa{STAR_DISPATCH_ROUNDS}|{key}",
+        _build,
+    )
+    return spark.read.parquet(_os.path.join(path, "data"))
 
 
 def dup_clusters_star(

@@ -25,6 +25,8 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..artifacts import artifact_slot
+from ..catalog import corpus_cache_key, load_table
 from ..functions.hashing import hash64
 from .text import tokens_col
 
@@ -1541,265 +1543,40 @@ def text_index_apply_changes(
     return {"tombstoned": deleted, **ins}
 
 
-# Build-once cache behind the declared x9 query and bench: one
-# persisted text index (postings PARTITIONED BY term-hash bucket +
-# the narrow lengths table) per corpus directory — the same index
-# lifecycle as ivf_index_for: build is the one corpus pass, every
-# search reads its terms' bucket directories only. r9: the artifact
-# now persists ACROSS processes in a temp-dir cache slot keyed by
-# corpus fingerprint + index format (VERDICT r8 #6 — the x9b
-# lifecycle twin cost ~45 s of fixed bench time per process; the
-# fingerprint is path+mtime_ns, so regenerated testdata invalidates
-# automatically and the artifact is safely shareable).
-_TEXT_IDX_CACHE: dict[str, str] = {}
-
-
-# When set, _cache_root returns this path instead of the per-user
-# root — the cold_artifact_environment hook (r16, VERDICT r15 #3).
-_CACHE_ROOT_OVERRIDE: str | None = None
-
-
-def _cache_root() -> str:
-    """Per-user, owner-only cache root (ADVICE r9: a fixed
-    world-readable /tmp path trusted any slot carrying a _READY
-    marker — on a shared host another user could pre-create a
-    poisoned slot, or squat the root dir, and text_index_for would
-    silently serve it to the declared hash surface). The root is
-    keyed by uid, created 0o700, and REJECTED if it already exists
-    with foreign ownership — a squatted path fails loudly instead of
-    serving someone else's bytes."""
-    import tempfile
-
-    if _CACHE_ROOT_OVERRIDE is not None:
-        return _CACHE_ROOT_OVERRIDE
-    uid = os.getuid() if hasattr(os, "getuid") else "nouid"
-    root = os.path.join(tempfile.gettempdir(), f"spark_graft_idx_cache-{uid}")
-    os.makedirs(root, mode=0o700, exist_ok=True)
-    st = os.stat(root)
-    if hasattr(os, "getuid") and st.st_uid != os.getuid():
-        raise PermissionError(
-            f"index cache root {root} is owned by uid {st.st_uid}, not "
-            f"{os.getuid()} — refusing to read foreign cache slots; "
-            "remove or rename the squatted directory"
-        )
-    if st.st_mode & 0o077:
-        # pre-existing root from an older engine (or loosened by
-        # hand): close it to owner-only before trusting its slots
-        os.chmod(root, 0o700)
-    return root
-
-
-def _persistent_slot(kind: str, key: str) -> tuple[str, bool]:
-    """(slot_path, ready) — the cross-process cache slot for one
-    corpus artifact. Ready means a finished build was atomically
-    published (its _READY marker rode in with the dir rename)."""
-    import hashlib
-
-    h = hashlib.md5(f"{kind}|fmt{_FORMAT}|{key}".encode()).hexdigest()
-    slot = os.path.join(_cache_root(), f"{kind}-{h}")
-    return slot, os.path.exists(os.path.join(slot, "_READY"))
-
-
-def _publish_slot(build_dir: str, slot: str) -> tuple[str, bool]:
-    """Atomically move a finished build into its cache slot; if a
-    concurrent process published first, keep theirs and drop ours.
-    Returns (slot, won) — won=False means the published bytes are a
-    concurrent winner's, not this build's (r15: the built/adopted
-    distinction feeds slot_was_built, so build-cost reporting can't
-    attribute a discarded build's timing to the published slot)."""
-    import shutil
-
-    open(os.path.join(build_dir, "_READY"), "w").close()
-    try:
-        os.rename(build_dir, slot)
-        return slot, True
-    except OSError:
-        if os.path.exists(os.path.join(slot, "_READY")):
-            shutil.rmtree(build_dir, ignore_errors=True)
-            return slot, False
-        raise
-
-
-# Slot paths THIS process actually built (vs adopted already-published
-# — r15, ADVICE r14: the *_build_seconds reporters used to time a warm
-# slot RESOLVE (~0 s) and report it as the one-time build cost,
-# understating it whenever a prior process had published the slot).
-_BUILT_SLOTS: set[str] = set()
-
-
-def slot_was_built(path: str) -> bool:
-    """True when THIS process ran the build for the published slot at
-    `path` (False = adopted a slot another process published, or lost
-    the publish race). The *_build_seconds reporters use this to
-    return None ("cached") instead of a misleading near-zero time."""
-    return path in _BUILT_SLOTS
-
-
-# Slots whose build THIS process ran to completion but whose publish
-# race was lost (the published bytes are a concurrent winner's; our
-# build's wall-clock was spent anyway and then discarded).
-_RACE_LOST_SLOTS: dict[str, float] = {}
-
-
-def slot_build_race_lost_seconds(path: str) -> float | None:
-    """Seconds THIS process spent on a completed build for `path`
-    that then lost the publish race (None = no lost-race build
-    here). ADVICE r15: *_build_seconds return None for such slots —
-    correct, since the served bytes are the winner's — but that left
-    the loser's spent wall-clock silently unattributed; a concurrent
-    bench run reads it from here instead of under-reporting."""
-    return _RACE_LOST_SLOTS.get(path)
-
-
-def artifact_slot(kind: str, key: str, build) -> str:
-    """Resolve one per-corpus persisted artifact slot, building it
-    first when no finished build is published — the shared
-    resolve-or-build step of every corpus artifact (text index,
-    lifecycle text index, IVF index, ANN ground truth, dup-cluster
-    table; r14 unification of five copies of this block). `build` is
-    a callable taking the temp build dir and writing the artifact
-    into it; publication stays the atomic rename of _publish_slot, so
-    concurrent builders race safely (exactly one rename wins, the
-    loser adopts the winner's slot and discards its own build).
-    slot_was_built(returned_path) reports whether this call actually
-    built (a losing racer does NOT count: its timing measured a
-    discarded build, and the published bytes are the winner's)."""
-    import tempfile
-    import time
-
-    slot, ready = _persistent_slot(kind, key)
-    if not ready:
-        tmp = tempfile.mkdtemp(prefix=f"spark_graft_{kind}_")
-        t0 = time.perf_counter()
-        build(tmp)
-        dt = round(time.perf_counter() - t0, 3)
-        slot, won = _publish_slot(tmp, slot)
-        if won:
-            _BUILT_SLOTS.add(slot)
-        else:
-            # a full build's wall-clock was spent and discarded —
-            # record + note it so concurrent bench runs can tell a
-            # lost race from a warm resolve (ADVICE r15)
-            _RACE_LOST_SLOTS[slot] = dt
-            _LOG.info(
-                "%s build for slot %s completed in %.3fs but lost "
-                "the publish race; serving the concurrent winner's "
-                "bytes (timing retrievable via "
-                "slot_build_race_lost_seconds)",
-                kind,
-                slot,
-                dt,
-            )
-    return slot
-
-
-@contextmanager
-def cold_artifact_environment():
-    """Temporarily point the artifact cache at a THROWAWAY root and
-    empty every in-process artifact cache, so the *_build_seconds
-    reporters measure a genuine cold build regardless of slot warmth
-    (r16, VERDICT r15 #3: when the driver's box happened to hold warm
-    slots, the honest-None contract left the round's record with no
-    1× build-cost datum at all — bench now measures a cold twin into
-    a throwaway root alongside the warm-or-cold resolve). Restores
-    the root, every cache, and the built/lost-race slot records on
-    exit and removes the throwaway root, so surrounding queries keep
-    serving the original standing artifacts.
-
-    Single-threaded-driver contract (ADVICE r16): this mutates
-    process-global state (_CACHE_ROOT_OVERRIDE plus seven shared cache
-    dicts) with no thread guard — any artifact resolution running
-    concurrently in the same process would build into the
-    soon-deleted throwaway root and have its cache entry discarded by
-    the clear+restore. Bench is the only caller and drives queries
-    strictly sequentially from one driver thread; reentry (nested or
-    concurrent use) raises rather than corrupting the caches."""
-    import shutil
-    import tempfile
-
-    global _CACHE_ROOT_OVERRIDE
-    from . import dedup as _dedup
-    from . import similarity as _sim
-
-    if _CACHE_ROOT_OVERRIDE is not None:
-        raise RuntimeError(
-            "cold_artifact_environment is not reentrant: a cold root "
-            f"is already active ({_CACHE_ROOT_OVERRIDE}); nested or "
-            "concurrent use would silently discard cache entries on "
-            "restore"
-        )
-
-    caches: list[dict] = [
-        _TEXT_IDX_CACHE,
-        _TEXT_IDX_LIFECYCLE_CACHE,
-        _sim._IVF_CACHE,
-        _sim._IVF_HANDLE_CACHE,
-        _sim._ANN_GT_CACHE,
-        _sim._DECLARED_PROBES_MEMO,
-        _dedup._DUP_CLUSTERS_CACHE,
-    ]
-    saved = [dict(c) for c in caches]
-    saved_built = set(_BUILT_SLOTS)
-    saved_lost = dict(_RACE_LOST_SLOTS)
-    root = tempfile.mkdtemp(prefix="spark_graft_cold_root_")
-    _CACHE_ROOT_OVERRIDE = root
-    for c in caches:
-        c.clear()
-    _BUILT_SLOTS.clear()
-    _RACE_LOST_SLOTS.clear()
-    try:
-        yield root
-    finally:
-        _CACHE_ROOT_OVERRIDE = None
-        for c, s in zip(caches, saved):
-            c.clear()
-            c.update(s)
-        _BUILT_SLOTS.clear()
-        _BUILT_SLOTS.update(saved_built)
-        _RACE_LOST_SLOTS.clear()
-        _RACE_LOST_SLOTS.update(saved_lost)
-        shutil.rmtree(root, ignore_errors=True)
+# The standing text indexes behind the declared x9/x9b queries: one
+# persisted index per corpus snapshot, built on first use into a
+# cross-process artifact slot (artifacts.artifact_slot) keyed by the
+# corpus identity (path + mtime_ns, so regenerated testdata rebuilds)
+# and the index layout _FORMAT. Every search reads its terms' bucket
+# directories only.
+def _text_index_key(sf_dir: str) -> str:
+    return f"fmt{_FORMAT}|{corpus_cache_key(sf_dir, 'documents.parquet')}"
 
 
 def text_index_for(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, tuple[int, int]]:
     """(postings, lengths, (n_docs, sum_dl)) for sf_dir's documents
-    table, built and persisted on first use (cross-process slot — see
-    the cache block above). The stats pair is the persisted index
-    statistic BM25 needs — searches read no corpus-sized table at all
-    (dl rides the postings, N/avgdl ride here)."""
-    from ..catalog import corpus_cache_key, load_table
-
-    key = corpus_cache_key(sf_dir, "documents.parquet")
-    path = _TEXT_IDX_CACHE.get(key)
-    if path is None:
-        path = _TEXT_IDX_CACHE[key] = artifact_slot(
-            "plain",
-            key,
-            lambda build: save_full_text_index(
-                load_table(spark, sf_dir, "documents"), build
-            ),
-        )
+    table, built and persisted on first use. The stats pair is the
+    persisted index statistic BM25 needs — searches read no
+    corpus-sized table at all (dl rides the postings, N/avgdl ride
+    here)."""
+    path = artifact_slot(
+        "plain",
+        _text_index_key(sf_dir),
+        lambda build: save_full_text_index(
+            load_table(spark, sf_dir, "documents"), build
+        ),
+    )
     return open_text_index(spark, path)
-
-
-# The lifecycle-built twin of _TEXT_IDX_CACHE: same corpus, same
-# final contents, but constructed through the FULL maintenance path
-# (partial build -> incremental insert -> tombstone delete ->
-# CDC-envelope re-insert -> compact). x9b searches THIS index, so the
-# driver's hash against the raw-corpus DuckDB oracle verifies the
-# whole lifecycle, not just the one-pass build (r8 — the lifecycle
-# was pytest-only; same promotion pattern as x2e_ivf_fullprobe).
-_TEXT_IDX_LIFECYCLE_CACHE: dict[str, str] = {}
 
 
 def text_index_lifecycle_for(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, tuple[int, int]]:
-    """(postings, lengths, stats) for sf_dir's documents table, built
-    through every maintenance operation and converging to EXACTLY the
-    full corpus:
+    """(postings, lengths, stats) for sf_dir's documents table — the
+    twin of text_index_for behind x9b, built through every maintenance
+    operation and converging to EXACTLY the full corpus:
 
       1. save_full_text_index on docs with doc_id % 20 != 0 (~95%);
       2. text_index_insert of the remaining ~5% (staged commit);
@@ -1813,77 +1590,32 @@ def text_index_lifecycle_for(
     fresh one-pass build of the full corpus, so any search over this
     index must be bit-equal to the raw-corpus oracle — a wrong
     generation rank, a stats drift, a tombstone leak, or a compaction
-    bug each breaks the declared x9b hash. The churn FRACTIONS are
-    smaller than r8's (5%/6% vs 10%/14% — VERDICT r8 #6): every op is
-    still exercised and convergence is fraction-independent, while
-    the fixed bench cost drops; the artifact also persists across
-    processes (see the cache block above)."""
-    from ..catalog import corpus_cache_key, load_table
+    bug each breaks the declared x9b hash. Every op is exercised on a
+    small churn fraction; convergence does not depend on it."""
 
-    key = corpus_cache_key(sf_dir, "documents.parquet")
-    path = _TEXT_IDX_LIFECYCLE_CACHE.get(key)
-    if path is None:
-
-        def _build(build: str) -> None:
-            docs = load_table(spark, sf_dir, "documents")
-            churn = F.col("doc_id") % 17 == 0
-            save_full_text_index(
-                docs.filter(F.col("doc_id") % 20 != 0), build
-            )
-            text_index_insert(
-                spark, build, docs.filter(F.col("doc_id") % 20 == 0)
-            )
-            text_index_delete(
-                spark, build, docs.select("doc_id").filter(churn)
-            )
-            text_index_apply_changes(
-                spark,
-                build,
-                docs.filter(churn).select(
-                    F.lit("update").alias("_op"),
-                    F.lit(1).cast("long").alias("_version"),
-                    F.current_timestamp().alias("_ts"),
-                    "doc_id",
-                    "text",
-                ),
-            )
-            text_index_compact(spark, build)
-
-        path = _TEXT_IDX_LIFECYCLE_CACHE[key] = artifact_slot(
-            "lifecycle", key, _build
+    def _build(build: str) -> None:
+        docs = load_table(spark, sf_dir, "documents")
+        churn = F.col("doc_id") % 17 == 0
+        save_full_text_index(docs.filter(F.col("doc_id") % 20 != 0), build)
+        text_index_insert(
+            spark, build, docs.filter(F.col("doc_id") % 20 == 0)
         )
+        text_index_delete(spark, build, docs.select("doc_id").filter(churn))
+        text_index_apply_changes(
+            spark,
+            build,
+            docs.filter(churn).select(
+                F.lit("update").alias("_op"),
+                F.lit(1).cast("long").alias("_version"),
+                F.current_timestamp().alias("_ts"),
+                "doc_id",
+                "text",
+            ),
+        )
+        text_index_compact(spark, build)
+
+    path = artifact_slot("lifecycle", _text_index_key(sf_dir), _build)
     return open_text_index(spark, path)
-
-
-def text_index_build_seconds(
-    spark: SparkSession, sf_dir: str
-) -> float | None:
-    """Force (and time) the text-index builds for sf_dir — the exact
-    analog of similarity.ivf_index_build_seconds (VERDICT r5 #2:
-    x9_bm25_search was charging the one-time build to the timed
-    search at both scales, polluting the scaled-ratio trend line).
-    Covers BOTH standing indexes (the one-pass build behind x9 and
-    the lifecycle-built twin behind x9b) so bench timings stay pure
-    search. Returns 0.0 when both are already standing in THIS
-    process, and None when the resolve adopted slots a PRIOR process
-    published (r15, ADVICE r14: a warm-cache-root resolve takes ~0 s
-    and is NOT the one-time build cost — bench reports it as null
-    rather than understating the build)."""
-    import time
-
-    from ..catalog import corpus_cache_key
-
-    key = corpus_cache_key(sf_dir, "documents.parquet")
-    if key in _TEXT_IDX_CACHE and key in _TEXT_IDX_LIFECYCLE_CACHE:
-        return 0.0
-    t0 = time.perf_counter()
-    text_index_for(spark, sf_dir)
-    text_index_lifecycle_for(spark, sf_dir)
-    dt = round(time.perf_counter() - t0, 3)
-    built = slot_was_built(_TEXT_IDX_CACHE[key]) or slot_was_built(
-        _TEXT_IDX_LIFECYCLE_CACHE[key]
-    )
-    return dt if built else None
 
 
 # Declared BM25 query (r5, VERDICT r4 #10): retrieval joins the hash

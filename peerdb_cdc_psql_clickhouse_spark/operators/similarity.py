@@ -17,7 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..artifacts import artifact_slot, session_memo
+from ..catalog import corpus_cache_key, load_table
 from ..functions.numeric import fround
 from ..registry import declare
 
@@ -817,79 +818,45 @@ ANN_SUBSET_FULL_N = 10
 # artifact (1: initial — q_id/vec_id/cosine_sim/rank-int top-N rows)
 _ANN_GT_FORMAT = 1
 
-_ANN_GT_CACHE: dict[tuple[str, int], str] = {}
-
 
 def ann_groundtruth_for(
     spark: SparkSession, sf_dir: str, n: int = ANN_SUBSET_FULL_N
 ) -> DataFrame:
     """The EXACT brute-force cosine top-n for the declared query set,
-    computed once per corpus and persisted (VERDICT r13 #1: the x2b
-    invariant legs re-ran the full brute-force pass on every
-    execution, duplicating work whose answer only changes when the
-    CORPUS changes — at 100 TB you compute ANN-evaluation ground
-    truth once per corpus snapshot, not once per evaluation run).
-    Same cross-process slot pattern as ivf_index_for: keyed by corpus
-    path+mtime (regenerated testdata invalidates automatically) plus
-    n and the query-set bound, so a parameter change can never serve
-    a stale artifact. The frame is deterministic by construction
-    (fround(,6) scoring, vec_id tiebreak — the same contract
-    x2e_ivf_fullprobe hash-verifies against DuckDB), so persisting it
-    cannot move any driver row; a slot-vs-fresh parity pytest pins
-    that. The artifact is tiny (n_queries x n rows) and the one-time
-    build cost rides bench.py's ann_groundtruth_build_sec, next to
-    the IVF index's own build line."""
+    computed once per corpus and persisted: ANN-evaluation ground
+    truth changes only when the CORPUS changes, so at 100 TB it is
+    computed once per corpus snapshot, not once per evaluation run.
+    The artifact slot is keyed by corpus path+mtime (regenerated
+    testdata invalidates automatically) plus n and the query-set
+    bound, so a parameter change can never serve a stale artifact.
+    The frame is deterministic by construction (fround(,6) scoring,
+    vec_id tiebreak — the same contract x2e_ivf_fullprobe
+    hash-verifies against DuckDB), so persisting it cannot move any
+    driver row; a slot-vs-fresh parity pytest pins that. The artifact
+    is tiny (n_queries x n rows); bench.py reports its one-time build
+    as ann_groundtruth_build_sec, next to the IVF index's own."""
     import os as _os
 
-    from ..catalog import corpus_cache_key
-    from .search import artifact_slot
-
-    key = corpus_cache_key(sf_dir, "embeddings.parquet")
-    path = _ANN_GT_CACHE.get((key, n))
-    if path is None:
-
-        def _build(build: str) -> None:
-            emb = load_table(spark, sf_dir, "embeddings")
-            queries = emb.filter(F.col("vec_id") < N_QUERY_VECS).select(
-                F.col("vec_id").alias("q_id"),
-                F.col("embedding").alias("q_vec"),
-            )
-            (
-                cosine_topk(queries, emb, k=n)
-                .withColumn("rank", F.col("rank").cast("int"))
-                # n_queries x n rows: one file, no partition ceremony
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(_os.path.join(build, "data"))
-            )
-
-        path = _ANN_GT_CACHE[(key, n)] = artifact_slot(
-            "anngt",
-            f"gfmt{_ANN_GT_FORMAT}|n{n}|q{N_QUERY_VECS}|{key}",
-            _build,
+    def _build(build: str) -> None:
+        emb = load_table(spark, sf_dir, "embeddings")
+        queries = emb.filter(F.col("vec_id") < N_QUERY_VECS).select(
+            F.col("vec_id").alias("q_id"),
+            F.col("embedding").alias("q_vec"),
         )
-    return spark.read.parquet(_os.path.join(path, "data"))
-
-
-def ann_groundtruth_build_seconds(
-    spark: SparkSession, sf_dir: str, n: int = ANN_SUBSET_FULL_N
-) -> float | None:
-    """Force (and time) the ground-truth build for sf_dir — bench.py
-    reports it separately, like the IVF/text index builds: the x2b
-    inventory entry is pure index search + a 50-row broadcast join.
-    None = warm-slot resolve, no build ran (r15, ADVICE r14)."""
-    import time
-
-    from ..catalog import corpus_cache_key
-    from .search import slot_was_built
+        (
+            cosine_topk(queries, emb, k=n)
+            .withColumn("rank", F.col("rank").cast("int"))
+            # n_queries x n rows: one file, no partition ceremony
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(_os.path.join(build, "data"))
+        )
 
     key = corpus_cache_key(sf_dir, "embeddings.parquet")
-    if (key, n) in _ANN_GT_CACHE:
-        return 0.0
-    t0 = time.perf_counter()
-    ann_groundtruth_for(spark, sf_dir, n)
-    dt = round(time.perf_counter() - t0, 3)
-    return dt if slot_was_built(_ANN_GT_CACHE[(key, n)]) else None
+    path = artifact_slot(
+        "anngt", f"gfmt{_ANN_GT_FORMAT}|n{n}|q{N_QUERY_VECS}|{key}", _build
+    )
+    return spark.read.parquet(_os.path.join(path, "data"))
 
 
 @declare(
@@ -1745,20 +1712,6 @@ def probe_assignment(
     return local, cells
 
 
-# Session memo for the DECLARED query batch's probe assignment,
-# keyed by (corpus dir, index artifact path, nprobe) with the owning
-# SparkSession identity-checked like _IVF_HANDLE_CACHE (r16). The
-# declared ANN queries all probe with the same pinned batch (vec_id <
-# N_QUERY_VECS), so the assignment is deterministic derived data of
-# (corpus, index, nprobe) — the first execution in a session pays the
-# job, repeats reuse the localized frame. Arbitrary user batches go
-# through probe_assignment directly; this memo exists only where the
-# batch is pinned by construction.
-_DECLARED_PROBES_MEMO: dict[
-    tuple, tuple[SparkSession, tuple[DataFrame, list]]
-] = {}
-
-
 def declared_query_probes(
     spark: SparkSession,
     sf_dir: str,
@@ -1766,23 +1719,25 @@ def declared_query_probes(
     nprobe: int | None = None,
 ) -> tuple[DataFrame, list]:
     """probe_assignment for the declared vec_id < N_QUERY_VECS batch,
-    memoized per (sf_dir, index.path, nprobe) within a session. The
-    index path is a content-keyed artifact slot (corpus or build
-    params change → new path → new memo key), so a stale serve is
-    impossible; values are bit-identical to a fresh assignment
-    (pinned by test_declared_probes_memo_matches_fresh_assignment)."""
+    memoized per (index.path, sf_dir, nprobe) within a session. The
+    declared ANN queries all probe with this pinned batch, so the
+    assignment is deterministic derived data of (corpus, index,
+    nprobe): the first execution in a session pays the job, repeats
+    reuse the localized frame. The index path is a content-keyed
+    artifact slot, so a stale serve is impossible; values are
+    bit-identical to a fresh assignment (pinned by
+    test_declared_probes_memo_matches_fresh_assignment). Arbitrary
+    user batches go through probe_assignment directly."""
     n = _index_nprobe(index, nprobe)
-    key = (sf_dir, index.path, n)
-    hit = _DECLARED_PROBES_MEMO.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < N_QUERY_VECS).select(
-        "vec_id", "embedding"
-    )
-    pc = probe_assignment(index, queries, n)
-    _DECLARED_PROBES_MEMO[key] = (spark, pc)
-    return pc
+
+    def _assign() -> tuple[DataFrame, list]:
+        emb = load_table(spark, sf_dir, "embeddings")
+        queries = emb.filter(F.col("vec_id") < N_QUERY_VECS).select(
+            "vec_id", "embedding"
+        )
+        return probe_assignment(index, queries, n)
+
+    return session_memo(spark, (index.path, sf_dir, n), _assign)
 
 
 def _ivf_scored(
@@ -1868,11 +1823,9 @@ def search_ivf_index(
 # an index built without a persisted `proj` column.
 _IVF_PROJ_DIM = 24
 
-# IVF on-disk layout version — keys the cross-process artifact cache
-# (ADVICE r10: the slot key carried only the TEXT-index layout
-# version, so a change to IVF params or layout would silently serve a
-# stale persisted artifact across processes). Bump whenever the IVF
-# dirs' schema/layout or the build's semantics change.
+# IVF on-disk layout version — keys the cross-process artifact slot,
+# so a persisted index of an older layout is never served. Bump
+# whenever the IVF dirs' schema/layout or the build's semantics change.
 _IVF_FORMAT = 1
 
 
@@ -2017,94 +1970,40 @@ def search_ivf_index_prerank(
     )
 
 
-# Build-once cache behind the declared x2b/x2d queries and bench: one
-# persisted index per corpus directory (VERDICT r4 #1 — the declared
-# search must not re-derive inverted lists per run; at 100 TB the
-# index is a standing artifact and searches read nprobe partition
-# directories of it). r10: the artifact persists ACROSS processes in
-# the same per-user, ownership-checked cache the text indexes use
-# (operators/search._persistent_slot) — keyed by corpus
-# path+mtime_ns, so regenerated testdata invalidates automatically
-# and a round's correctness + bench processes share one build.
-_IVF_CACHE: dict[str, str] = {}
-
-# Loaded-handle cache (r16): resolving a warm slot still cost a meta
-# collect + three parquet schema opens (~0.4 s), and the declared x2b
-# union triggered it three times per run (the union builder plus each
-# leg). The HANDLE is pure plan state (three DataFrames + a dict), so
-# it is reusable for the life of the SparkSession; the entry carries
-# the owning session and is identity-checked on read, so a restarted
-# session never serves stale JVM references.
-_IVF_HANDLE_CACHE: dict[str, tuple[SparkSession, IvfIndex]] = {}
-
-
 def ivf_index_for(spark: SparkSession, sf_dir: str) -> IvfIndex:
-    """The per-corpus persisted IVF index (built on first use; reused
-    across processes via the published cache slot, and within a
-    session via the loaded-handle cache)."""
-    from ..catalog import corpus_cache_key
-    from .search import artifact_slot
+    """The per-corpus persisted IVF index behind the declared x2b/x2d
+    queries: built on first use into a cross-process artifact slot,
+    so searches read nprobe partition directories of a standing
+    artifact instead of re-deriving inverted lists per run. The slot
+    key carries the IVF layout version and every build parameter that
+    shapes the artifact (proj_dim drives the prerank columns;
+    vecs-per-cell drives the cell count and thus the partition
+    layout), so changing one can never serve a stale layout. The
+    loaded handle (three DataFrames + a dict, ~0.4 s of meta collect
+    and schema opens) is pure plan state, memoized per SparkSession."""
 
-    key = corpus_cache_key(sf_dir, "embeddings.parquet")
-    entry = _IVF_HANDLE_CACHE.get(key)
-    if entry is not None and entry[0] is spark:
-        return entry[1]
-    path = _IVF_CACHE.get(key)
-    if path is None:
-
-        def _build(build: str) -> None:
-            emb = load_table(spark, sf_dir, "embeddings").select(
-                "vec_id", "embedding"
-            )
-            # cells sized from the corpus (constant cell size past the
-            # floor — see ivf_auto_centroids); the chosen count rides
-            # the persisted meta, so searches resolve it from the
-            # index itself
-            build_ivf_index(
-                emb,
-                build,
-                n_centroids=ivf_auto_centroids(emb.count()),
-                proj_dim=_IVF_PROJ_DIM,
-            )
-
-        # the slot key carries the IVF layout version AND every build
-        # param that shapes the artifact (proj_dim drives the prerank
-        # columns; vecs-per-cell drives the cell count and thus the
-        # partition layout) — _persistent_slot itself only keys the
-        # TEXT-index format, which says nothing about IVF layout
-        # (ADVICE r10; r11 folded the sizing target in so changing it
-        # can never serve a stale layout without a manual version
-        # bump)
-        path = _IVF_CACHE[key] = artifact_slot(
-            "ivf",
-            f"ifmt{_IVF_FORMAT}|pd{_IVF_PROJ_DIM}"
-            f"|vpc{IVF_TARGET_VECS_PER_CELL}|{key}",
-            _build,
+    def _build(build: str) -> None:
+        emb = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", "embedding"
         )
-    handle = load_ivf_index(spark, path)
-    _IVF_HANDLE_CACHE[key] = (spark, handle)
-    return handle
-
-
-def ivf_index_build_seconds(
-    spark: SparkSession, sf_dir: str
-) -> float | None:
-    """Force (and time) the index build for sf_dir — bench.py reports
-    build and search separately, the index lifecycle's two costs.
-    None = the resolve adopted a slot a prior process published (r15,
-    ADVICE r14: a ~0 s warm resolve is not the build cost)."""
-    import time
-
-    from ..catalog import corpus_cache_key
-    from .search import slot_was_built
+        # cells sized from the corpus (constant cell size past the
+        # floor — see ivf_auto_centroids); the chosen count rides the
+        # persisted meta, so searches resolve it from the index itself
+        build_ivf_index(
+            emb,
+            build,
+            n_centroids=ivf_auto_centroids(emb.count()),
+            proj_dim=_IVF_PROJ_DIM,
+        )
 
     key = corpus_cache_key(sf_dir, "embeddings.parquet")
-    if key in _IVF_CACHE:
-        return 0.0
-    t0 = time.perf_counter()
-    ivf_index_for(spark, sf_dir)
-    dt = round(time.perf_counter() - t0, 3)
-    return dt if slot_was_built(_IVF_CACHE[key]) else None
+    path = artifact_slot(
+        "ivf",
+        f"ifmt{_IVF_FORMAT}|pd{_IVF_PROJ_DIM}"
+        f"|vpc{IVF_TARGET_VECS_PER_CELL}|{key}",
+        _build,
+    )
+    return session_memo(spark, (path,), lambda: load_ivf_index(spark, path))
 
 
 # -- Product quantization (PQ codes + ADC search) ---------------------------

@@ -31,6 +31,7 @@ because apply never does read-modify-write:
 
 from __future__ import annotations
 
+import os
 import shutil
 from collections.abc import Sequence
 
@@ -362,7 +363,7 @@ class Mirror:
     def compact(self) -> None:
         """Fold delta into base (MergeTree background-merge analog).
 
-        Safe against concurrent writers/readers (ADVICE r1):
+        Safe against concurrent writers/readers:
         - refuses to run while this mirror's streaming apply is active
           (a delta batch landing after the merge materialized would be
           deleted even though checkpoint offsets say it was applied);
@@ -373,10 +374,11 @@ class Mirror:
         - swaps base via two renames instead of rmtree+move, so the
           window where a reader sees no base is microseconds, not an
           O(files) delete. Leftover batch dirs merged into the new
-          base remain correct to re-read until deleted.
+          base remain correct to re-read until deleted. A crash
+          between the two renames is repaired by _recover_base, here
+          and on the next reader that finds no base.
         """
         import glob
-        import os
 
         for q in self.spark.streams.active:
             if q.name == self.name:
@@ -385,6 +387,7 @@ class Mirror:
                     "active would drop late delta batches; stop the "
                     "query first"
                 )
+        self._recover_base()
         batch_dirs = sorted(glob.glob(f"{self.target_dir}/delta/_batch=*"))
         base = self._read_base()
         if base is not None:
@@ -460,6 +463,26 @@ class Mirror:
             )
         )
 
+    def _recover_base(self) -> bool:
+        """Repair a compaction cut between its two renames (base moved
+        to base_retired, base_compacting not yet moved to base): finish
+        the swap when base_compacting is a complete write (_SUCCESS),
+        else put base_retired back. Without this, readers would serve
+        the delta-only state and the next compact() would fold delta
+        alone and delete the retired base. True when it moved a dir."""
+        base = f"{self.target_dir}/base"
+        if os.path.exists(base):
+            return False
+        tmp = f"{self.target_dir}/base_compacting"
+        retired = f"{self.target_dir}/base_retired"
+        if os.path.exists(f"{tmp}/_SUCCESS"):
+            os.rename(tmp, base)
+        elif os.path.exists(retired):
+            os.rename(retired, base)
+        else:
+            return False
+        return True
+
     def _read_base(self) -> DataFrame | None:
         fields = list(self.row_schema.fields) + [
             # per-row winning version (BASE_VERSION for snapshot rows;
@@ -469,12 +492,14 @@ class Mirror:
         ]
         if self.n_buckets:
             fields.append(T.StructField("_bucket", T.IntegerType()))
+        reader = self.spark.read.schema(T.StructType(fields))
         try:
-            return self.spark.read.schema(T.StructType(fields)).parquet(
-                f"{self.target_dir}/base"
-            )
+            return reader.parquet(f"{self.target_dir}/base")
         except Exception:
-            return None
+            # only a reader that finds no base pays the recovery probe
+            if not self._recover_base():
+                return None
+        return reader.parquet(f"{self.target_dir}/base")
 
     def _read_delta(
         self, paths: Sequence[str] | None = None
@@ -486,20 +511,18 @@ class Mirror:
         )
         if not targets:
             return None
-        if paths is not None:
-            # Explicit paths come from compact(), which deletes these
-            # dirs right after the merged base lands. Swallowing a
-            # transient read error here would compact WITHOUT the delta
-            # and then destroy it — let it propagate instead.
-            return self.spark.read.schema(
-                change_event_schema(self.row_schema)
-            ).parquet(*targets)
         try:
-            # Glob probe: no delta dir yet is an expected state.
             return self.spark.read.schema(
                 change_event_schema(self.row_schema)
             ).parquet(*targets)
         except Exception:
+            # Explicit paths come from compact(), which deletes these
+            # dirs right after the merged base lands. Swallowing a
+            # transient read error there would compact WITHOUT the
+            # delta and then destroy it — let it propagate. For the
+            # glob probe, no delta dir yet is an expected state.
+            if paths is not None:
+                raise
             return None
 
 

@@ -88,99 +88,137 @@ def test_pq_codebook_round_trip(spark, tmp_path):
 def test_build_seconds_distinguish_build_from_warm_resolve(
     spark, tmp_path, monkeypatch
 ):
-    """ADVICE r14: the *_build_seconds reporters claimed to 'force
-    (and time) the build', but when a PRIOR process had already
-    published the cache slot they timed only a ~0 s slot resolve and
-    reported that as the one-time cost. Contract now: a real build
-    returns its seconds, a warm-root resolve returns None ('cached'),
-    and a later same-process call returns 0.0 (already standing).
-    Exercised on the cheapest artifact (ANN ground truth) against a
-    private cache root."""
-    from peerdb_cdc_psql_clickhouse_spark.operators import search, similarity
+    """bench.build_seconds reports a resolve's wall seconds only when
+    it built a slot: a warm resolve (~0 s) is not the one-time build
+    cost, so it reports None. Exercised on the cheapest artifact (ANN
+    ground truth) against a private cache root."""
+    import bench
+    from peerdb_cdc_psql_clickhouse_spark import artifacts
+    from peerdb_cdc_psql_clickhouse_spark.operators.similarity import (
+        ann_groundtruth_for,
+    )
 
-    monkeypatch.setattr(search, "_cache_root", lambda: str(tmp_path))
-    monkeypatch.setattr(similarity, "_ANN_GT_CACHE", {})
-    monkeypatch.setattr(search, "_BUILT_SLOTS", set())
+    monkeypatch.setattr(artifacts, "_cache_root", lambda: str(tmp_path))
 
-    cold = similarity.ann_groundtruth_build_seconds(spark, SF_SMOKE)
+    cold = bench.build_seconds(spark, SF_SMOKE, ann_groundtruth_for)
     assert isinstance(cold, float) and cold > 0  # cold root: real build
+    built = artifacts.built_slots()
+    assert built[-1].startswith(str(tmp_path))
 
-    # simulate a NEW process on the warm root: module caches empty,
-    # built-slot record empty, published slot still on disk
-    monkeypatch.setattr(similarity, "_ANN_GT_CACHE", {})
-    monkeypatch.setattr(search, "_BUILT_SLOTS", set())
-    assert similarity.ann_groundtruth_build_seconds(spark, SF_SMOKE) is None
-
-    # third call in the same process: artifact already standing
-    assert similarity.ann_groundtruth_build_seconds(spark, SF_SMOKE) == 0.0
+    # the published slot is adopted, not rebuilt: no time, no record
+    assert bench.build_seconds(spark, SF_SMOKE, ann_groundtruth_for) is None
+    assert artifacts.built_slots() == built
 
 
-def test_lost_publish_race_build_time_is_recorded(tmp_path, monkeypatch):
-    """r16 (ADVICE r15): a builder that loses the publish race spent a
-    full build's wall-clock, but *_build_seconds correctly return None
-    (the served bytes are the winner's). That time must not vanish
-    silently: artifact_slot records it, retrievable via
-    slot_build_race_lost_seconds, so a concurrent bench run can
-    attribute its spent wall-clock."""
+def test_lost_publish_race_adopts_winner_and_removes_own_build(
+    tmp_path, monkeypatch
+):
+    """A builder that loses the publish race adopts the winner's slot,
+    removes its own build, and is not recorded as having built the
+    served bytes; a clean win is recorded."""
     import os
-    import time
 
-    from peerdb_cdc_psql_clickhouse_spark.operators import search
+    from peerdb_cdc_psql_clickhouse_spark import artifacts
 
-    monkeypatch.setattr(search, "_cache_root", lambda: str(tmp_path))
-    monkeypatch.setattr(search, "_BUILT_SLOTS", set())
-    monkeypatch.setattr(search, "_RACE_LOST_SLOTS", {})
+    monkeypatch.setattr(artifacts, "_cache_root", lambda: str(tmp_path))
 
-    expected_slot, ready = search._persistent_slot("racetest", "k1")
+    expected_slot, ready = artifacts._persistent_slot("racetest", "k1")
     assert not ready
+    build_dirs = []
 
     def build(tmp_dir: str) -> None:
         # simulate a concurrent winner publishing mid-build: the slot
         # appears (with _READY) while this build is still running
+        build_dirs.append(tmp_dir)
         os.makedirs(expected_slot)
         open(os.path.join(expected_slot, "_READY"), "w").close()
         with open(os.path.join(tmp_dir, "data"), "w") as f:
             f.write("losing build")
-        time.sleep(0.01)  # make the recorded wall-clock non-zero
 
-    slot = search.artifact_slot("racetest", "k1", build)
+    slot = artifacts.artifact_slot("racetest", "k1", build)
     assert slot == expected_slot
-    assert not search.slot_was_built(slot)  # served bytes = winner's
-    lost = search.slot_build_race_lost_seconds(slot)
-    assert isinstance(lost, float) and lost > 0
-    # a clean win records NO lost-race time
-    slot2 = search.artifact_slot(
+    assert not os.path.exists(os.path.join(slot, "data"))  # winner's bytes
+    assert not os.path.exists(build_dirs[0])  # loser's build removed
+    assert slot not in artifacts.built_slots()
+
+    slot2 = artifacts.artifact_slot(
         "racetest",
         "k2",
         lambda d: open(os.path.join(d, "data"), "w").close(),
     )
-    assert search.slot_was_built(slot2)
-    assert search.slot_build_race_lost_seconds(slot2) is None
+    assert artifacts.built_slots()[-1] == slot2
 
 
-def test_cold_artifact_environment_rejects_reentry(tmp_path, monkeypatch):
-    """ADVICE r16: cold_artifact_environment mutates process-global
-    state (_CACHE_ROOT_OVERRIDE + seven shared cache dicts) under a
-    single-threaded-driver contract; nested or concurrent entry would
-    build into a soon-deleted throwaway root and have its cache entry
-    silently discarded on restore. Contract now: reentry raises, and
-    the guard must not leak state — the outer block keeps working and
-    the override is fully cleared on exit."""
+def test_failed_build_leaves_no_temp_dir(tmp_path, monkeypatch):
+    """A build that raises must not leak its temp build dir, publish a
+    slot, or enter the build record."""
+    import os
+
     import pytest
 
-    from peerdb_cdc_psql_clickhouse_spark.operators import search
+    from peerdb_cdc_psql_clickhouse_spark import artifacts
 
-    assert search._CACHE_ROOT_OVERRIDE is None
-    with search.cold_artifact_environment() as root:
+    monkeypatch.setattr(artifacts, "_cache_root", lambda: str(tmp_path))
+    build_dirs = []
+
+    def build(tmp_dir: str) -> None:
+        build_dirs.append(tmp_dir)
+        with open(os.path.join(tmp_dir, "partial"), "w") as f:
+            f.write("half an artifact")
+        raise RuntimeError("build failed")
+
+    record = artifacts.built_slots()
+    with pytest.raises(RuntimeError, match="build failed"):
+        artifacts.artifact_slot("failtest", "k1", build)
+    assert not os.path.exists(build_dirs[0])
+    assert not artifacts._persistent_slot("failtest", "k1")[1]
+    assert artifacts.built_slots() == record
+
+
+def test_cold_artifact_environment_rejects_reentry():
+    """cold_artifact_environment swaps process-global state under a
+    single-threaded-driver contract; nested or concurrent entry would
+    build into a soon-deleted throwaway root. Reentry raises, and the
+    guard must not leak state — the outer block keeps working and the
+    override is fully cleared on exit."""
+    import os
+
+    import pytest
+
+    from peerdb_cdc_psql_clickhouse_spark import artifacts
+
+    assert artifacts._CACHE_ROOT_OVERRIDE is None
+    with artifacts.cold_artifact_environment() as root:
         with pytest.raises(RuntimeError, match="not reentrant"):
-            with search.cold_artifact_environment():
+            with artifacts.cold_artifact_environment():
                 pass
         # the failed reentry must not have torn down the outer root
-        assert search._CACHE_ROOT_OVERRIDE == root
-        import os
-
+        assert artifacts._CACHE_ROOT_OVERRIDE == root
         assert os.path.isdir(root)
-    assert search._CACHE_ROOT_OVERRIDE is None
+    assert artifacts._CACHE_ROOT_OVERRIDE is None
+    assert not os.path.exists(root)
+
+
+def test_cold_artifact_environment_builds_cold_and_keeps_warm_handle(spark):
+    """Inside the block the IVF index resolves to a fresh build under
+    the throwaway root; after exit the warm slot's memoized handle is
+    served again — the very same object — and no memo entry of the
+    removed root survives."""
+    import os
+
+    from peerdb_cdc_psql_clickhouse_spark import artifacts
+    from peerdb_cdc_psql_clickhouse_spark.operators.similarity import (
+        ivf_index_for,
+    )
+
+    warm = ivf_index_for(spark, SF_SMOKE)
+    with artifacts.cold_artifact_environment() as root:
+        cold = ivf_index_for(spark, SF_SMOKE)
+        assert cold.path.startswith(root + os.sep)
+        assert artifacts.built_slots()[-1] == cold.path
+        assert ivf_index_for(spark, SF_SMOKE) is cold
+    assert ivf_index_for(spark, SF_SMOKE) is warm
+    assert not any(k[0].startswith(root) for k in artifacts._SESSION_MEMO)
 
 
 def test_survey_split_matches_registry():

@@ -478,6 +478,72 @@ def test_mirror_compact_preserves_state(spark, tmp_path, mirror):
     assert mirror._read_delta() is None
 
 
+def test_compact_crash_between_renames_keeps_base(
+    spark, tmp_path, mirror, monkeypatch
+):
+    """compact() swaps base by two renames (base -> base_retired,
+    base_compacting -> base). A crash between them leaves no base/;
+    a fresh Mirror must still read the pre-crash state (finishing the
+    swap from the complete base_compacting), and a second compact()
+    must keep it instead of folding the delta alone."""
+    import os
+
+    mirror.snapshot(
+        spark.createDataFrame(
+            [(i, f"s{i}") for i in range(10, 19)], ROW_SCHEMA
+        )
+    )
+    changes_dir = str(tmp_path / "changes")
+    write_change_batches(_mk_changes(spark, EVENTS), changes_dir, 3)
+    mirror.start(changes_dir, available_now=True).awaitTermination(120)
+    before = _as_dict(mirror.read_target())
+    assert len(before) > len(_naive_replay(EVENTS))
+
+    real_rename = os.rename
+
+    def crash_on_swap(src, dst):
+        if str(src).endswith("base_compacting"):
+            raise OSError("simulated crash between the compaction renames")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_on_swap)
+    with pytest.raises(OSError, match="simulated crash"):
+        mirror.compact()
+    monkeypatch.setattr(os, "rename", real_rename)
+    assert not os.path.exists(f"{mirror.target_dir}/base")
+
+    fresh = Mirror(
+        spark,
+        name="mirror_t",
+        schema="public",
+        table="t",
+        key_cols=["id"],
+        row_schema=ROW_SCHEMA,
+        target_root=str(tmp_path / "warehouse"),
+        checkpoint_root=str(tmp_path / "ckpt"),
+    )
+    assert _as_dict(fresh.read_target()) == before
+    fresh.compact()
+    assert _as_dict(fresh.read_target()) == before
+    assert not os.path.exists(f"{fresh.target_dir}/base_retired")
+
+
+def test_compact_crash_restores_retired_base_without_complete_rewrite(
+    spark, tmp_path, mirror
+):
+    """The other recovery branch: no base/ and a base_compacting
+    without _SUCCESS (an interrupted rewrite) puts base_retired back,
+    so compact() starts from the last complete base."""
+    import os
+
+    mirror.snapshot(spark.createDataFrame([(1, "a"), (2, "b")], ROW_SCHEMA))
+    base = f"{mirror.target_dir}/base"
+    os.rename(base, f"{mirror.target_dir}/base_retired")
+    os.makedirs(f"{mirror.target_dir}/base_compacting")
+    mirror.compact()
+    assert _as_dict(mirror.read_target()) == {1: "a", 2: "b"}
+
+
 def test_compact_refuses_while_apply_is_active(spark, tmp_path, mirror):
     """ADVICE r1: folding delta while the streaming apply runs can
     delete a batch the checkpoint says was applied. compact() must

@@ -400,14 +400,12 @@ def test_update_is_delete_plus_insert_no_compaction(spark, tmp_path):
 
 
 def test_lifecycle_index_equals_one_pass_build_on_corpus(spark):
-    """The declared x9b index (r8): built through partial build ->
+    """The declared x9b index: built through partial build ->
     staged insert -> tombstone delete -> CDC-envelope re-upsert ->
     compact, converging to exactly the corpus — observable state and
     every search mode bit-equal to the one-pass build x9 uses. This
     pins locally what the driver's x9b hash checks against DuckDB."""
     from peerdb_cdc_psql_clickhouse_spark.operators.search import (
-        _TEXT_IDX_CACHE,
-        _TEXT_IDX_LIFECYCLE_CACHE,
         text_index_for,
         text_index_lifecycle_for,
         x9b_search_ops,
@@ -429,16 +427,20 @@ def test_lifecycle_index_equals_one_pass_build_on_corpus(spark):
     }
     # compaction really ran: the manifest lists no tombstone batches
     # and points at compacted generation dirs
-    from peerdb_cdc_psql_clickhouse_spark.catalog import corpus_cache_key
+    from peerdb_cdc_psql_clickhouse_spark.artifacts import _persistent_slot
     from peerdb_cdc_psql_clickhouse_spark.operators.search import (
         _read_manifest,
+        _text_index_key,
     )
 
-    key = corpus_cache_key(SF_SMOKE, "documents.parquet")
-    m = _read_manifest(spark, _TEXT_IDX_LIFECYCLE_CACHE[key])
+    key = _text_index_key(SF_SMOKE)
+    lc_path, lc_ready = _persistent_slot("lifecycle", key)
+    plain_path, plain_ready = _persistent_slot("plain", key)
+    assert lc_ready and plain_ready
+    m = _read_manifest(spark, lc_path)
     assert m["tombstones"] == []
     assert m["postings"].startswith("postings_g")
-    assert _TEXT_IDX_LIFECYCLE_CACHE[key] != _TEXT_IDX_CACHE[key]
+    assert lc_path != plain_path
     # the declared query itself returns rows from the lifecycle index
     assert x9b_search_ops(spark, SF_SMOKE).count() > 0
 
@@ -762,12 +764,12 @@ def test_lease_release_retries_transient_read_errors(
 
 
 def test_cache_root_is_private_and_rejects_foreign_owner(monkeypatch):
-    """ADVICE r9: the cross-process index cache root is per-user and
+    """The cross-process artifact cache root is per-user and
     owner-only; a root squatted by another uid fails loudly instead of
     silently serving foreign cache slots to the hash surface."""
     import pytest
 
-    from peerdb_cdc_psql_clickhouse_spark.operators.search import _cache_root
+    from peerdb_cdc_psql_clickhouse_spark.artifacts import _cache_root
 
     root = _cache_root()
     st = os.stat(root)
