@@ -31,11 +31,10 @@ from ..catalog import load_table
 from ..functions.numeric import dsum, dsum_sql
 from ..registry import declare
 
-# Version sentinel for base/current rows when merged against a change
-# feed: must sort strictly below every real change version. Long.MIN,
-# not -1 — a change event carrying _version <= -1 would otherwise tie
-# with the base row and win/lose nondeterministically under
-# row_number (ADVICE r1).
+# Version sentinel for snapshot rows merged against a change feed: must
+# sort strictly below every real change version. Long.MIN, not -1 — a
+# change event carrying _version <= -1 would otherwise tie with the
+# base row and win/lose nondeterministically under row_number.
 BASE_VERSION = -(2**63)
 
 CDC_OPS = ("insert", "update", "delete")
@@ -45,13 +44,6 @@ def target_table_name(schema: str, table: str) -> str:
     """O-C3 rename mapping: public.orders -> public_orders
     (monitor.ps1:648-651)."""
     return f"{schema}_{table}"
-
-
-def snapshot(source: DataFrame, path: str) -> None:
-    """O-C1 initial snapshot (flow-snapshot-worker analog,
-    docker-compose.yml:167-175): full batch copy to the target dir.
-    Overwrite = idempotent re-snapshot."""
-    source.write.mode("overwrite").parquet(path)
 
 
 def latest_state(
@@ -76,33 +68,34 @@ def latest_state(
     return out
 
 
-def apply_changes(
-    current: DataFrame | None,
+def merge_changes(
+    base: DataFrame | None,
     changes: DataFrame,
     key_cols: Sequence[str],
-    version_col: str = "_version",
 ) -> DataFrame:
-    """Incremental merge of a change batch into the current target
-    state (the foreachBatch body). current rows are treated as
-    version -infinity relative to any change touching the same key:
-    union + max-version-wins. Returns the new target state WITHOUT
-    CDC metadata columns (like the ClickHouse target table).
-    """
-    meta = ["_op", version_col, "_ts"]
+    """The one base ∪ changes merge: max-version-wins per key, deletes
+    dropped. Returns the winning rows WITH their _version, so a caller
+    that persists the result (Mirror.compact) keeps each row's real
+    version: an already-applied older batch replayed over it must lose,
+    never regress the key to a stale value. A base without a _version
+    column (a plain current-state table) ranks at BASE_VERSION, below
+    every change."""
+    meta = ("_op", "_version", "_ts")
     data_cols = [c for c in changes.columns if c not in meta]
-    if current is None:
-        merged = changes
-    else:
-        cur_as_changes = current.select(
+    parts = changes.select(*meta, *data_cols)
+    if base is not None:
+        version = (
+            F.col("_version")
+            if "_version" in base.columns
+            else F.lit(BASE_VERSION)
+        )
+        parts = base.select(
             F.lit("insert").alias("_op"),
-            F.lit(BASE_VERSION).cast("long").alias(version_col),
+            version.cast("long").alias("_version"),
             F.lit(None).cast("timestamp").alias("_ts"),
-            *[F.col(c) for c in data_cols],
-        )
-        merged = cur_as_changes.unionByName(
-            changes.select("_op", version_col, "_ts", *data_cols)
-        )
-    return latest_state(merged, key_cols, version_col).select(*data_cols)
+            *data_cols,
+        ).unionByName(parts)
+    return latest_state(parts, key_cols).select(*data_cols, "_version")
 
 
 def validate_changes(
@@ -205,12 +198,14 @@ def c1_snapshot_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix="snap_")
     try:
         src = events_as_changes(spark, sf_dir)
-        # src_cnt rides the snapshot WRITE itself via observe() (r18
-        # opt): the copy already touches every source row, so a
-        # separate count() scan of the source was a pure extra pass.
-        # Identical value — rows written == rows observed.
+        # src_cnt rides the snapshot WRITE itself via observe(): the
+        # copy already touches every source row, so a separate count()
+        # of the source would be an extra pass (rows written == rows
+        # observed). Overwrite = idempotent re-snapshot.
         obs = Observation("c1_src_cnt")
-        snapshot(src.observe(obs, F.count(F.lit(1)).alias("n")), f"{work}/target")
+        src.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite"
+        ).parquet(f"{work}/target")
         src_cnt = int(obs.get["n"])
         tgt = spark.read.parquet(f"{work}/target")
         tgt_cnt = int(tgt.count())

@@ -49,6 +49,18 @@ WITH src AS (
 """
 
 
+def sync_status() -> F.Column:
+    """The sync-status policy over a `lag` column (monitor.ps1:745-755):
+    SYNCED at zero lag, NEAR_SYNC within 5 rows either way, else LAG.
+    Shared by d1_parity_report and MirrorSet.parity_report; d1's
+    oracle SQL spells the same thresholds as the reference does."""
+    return (
+        F.when(F.col("lag") == 0, "SYNCED")
+        .when(F.abs("lag") <= 5, "NEAR_SYNC")
+        .otherwise("LAG")
+    )
+
+
 def _parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     src = ev.groupBy(F.col("event_type").alias("table_name")).agg(
@@ -101,10 +113,7 @@ def d1_parity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "src_cnt",
         "tgt_cnt",
         "lag",
-        F.when(F.col("lag") == 0, "SYNCED")
-        .when(F.abs("lag") <= 5, "NEAR_SYNC")
-        .otherwise("LAG")
-        .alias("status"),
+        sync_status().alias("status"),
         F.when(pct_ok, fround(pct_raw, 1)).otherwise(F.lit(0.0)).alias("sync_pct"),
         F.when(pct_ok & (pct_raw >= 95), "green")
         .when(pct_ok & (pct_raw >= 80), "yellow")

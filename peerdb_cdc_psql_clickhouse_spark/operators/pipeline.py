@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import declare
+from ..session import hadoop_fs
 from . import dedup as _dedup  # ensure registration + reuse
 from . import text as _text
 
@@ -618,26 +619,17 @@ def _stage_complete(spark, path: str) -> bool:
     — a crash mid-write leaves no marker, so restart recomputes that
     stage instead of trusting partial files. Hadoop FS API, so the
     check works on any supported filesystem, not just local."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(f"{path}/_SUCCESS")
-    return p.getFileSystem(hconf).exists(p)
+    fs, p, _ = hadoop_fs(spark, f"{path}/_SUCCESS")
+    return fs.exists(p)
 
 
 _FP_FILE = "_FINGERPRINT"
 
 
-def _hadoop_fs(spark, path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
-
-
 def _read_fingerprint(spark, stage_path: str) -> str | None:
-    fs, p = _hadoop_fs(spark, f"{stage_path}/{_FP_FILE}")
+    fs, p, jvm = hadoop_fs(spark, f"{stage_path}/{_FP_FILE}")
     if not fs.exists(p):
         return None
-    jvm = spark._jvm
     br = jvm.java.io.BufferedReader(
         jvm.java.io.InputStreamReader(fs.open(p))
     )
@@ -648,7 +640,7 @@ def _read_fingerprint(spark, stage_path: str) -> str | None:
 
 
 def _write_fingerprint(spark, stage_path: str, fp: str) -> None:
-    fs, p = _hadoop_fs(spark, f"{stage_path}/{_FP_FILE}")
+    fs, p, _ = hadoop_fs(spark, f"{stage_path}/{_FP_FILE}")
     out = fs.create(p, True)
     try:
         out.write(bytearray(fp.encode("ascii")))

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..artifacts import artifact_slot
 from ..catalog import corpus_cache_key, load_table
 from ..functions.hashing import hash64
+from ..session import hadoop_fs
 from .text import tokens_col
 
 _LOG = logging.getLogger(__name__)
@@ -523,12 +524,6 @@ class ConcurrentWriterError(RuntimeError):
     """A second writer is (or appears to be) active on the index."""
 
 
-def _hfs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p, jvm
-
-
 def _lease_token(fs, jvm, lock_path: str) -> str | None:
     """The owning writer's token, or None for a missing/empty/foreign
     lease file (pre-token engines wrote an empty file — still a valid
@@ -715,7 +710,7 @@ def _writer_lease(spark: SparkSession, path: str):
     import uuid
 
     lock_path = f"{path}/{_LOCK}"
-    fs, p, jvm = _hfs(spark, lock_path)
+    fs, p, jvm = hadoop_fs(spark, lock_path)
     token = uuid.uuid4().hex
     acquired = False
     for _ in range(3):
@@ -894,7 +889,7 @@ def _read_manifest(spark: SparkSession, path: str) -> dict | None:
     manifest. Retries if the chosen record is pruned between the
     listing and the read — retention keeps two records, so the newest
     at listing time survives at least one more commit."""
-    fs, _p, jvm = _hfs(spark, path)
+    fs, _p, jvm = hadoop_fs(spark, path)
     for _ in range(3):
         vs = _manifest_versions(fs, jvm, path)
         if not vs:
@@ -922,7 +917,7 @@ def _commit_manifest(spark: SparkSession, path: str, m: dict) -> dict:
     compaction/recovery's job (_prune_unreferenced)."""
     import uuid
 
-    fs, _p, jvm = _hfs(spark, path)
+    fs, _p, jvm = hadoop_fs(spark, path)
     rec = dict(m, v=int(m["v"]) + 1, format=_FORMAT)
     mdir = f"{path}/{_MANIFEST_DIR}"
     fs.mkdirs(jvm.org.apache.hadoop.fs.Path(mdir))
@@ -1013,7 +1008,7 @@ def _recover_insert(spark: SparkSession, path: str) -> dict:
     ground truth, never carried arithmetic."""
     m = _require_manifest(spark, path)
     stage = f"{path}/{_STAGE}"
-    fs, stage_p, jvm = _hfs(spark, stage)
+    fs, stage_p, jvm = hadoop_fs(spark, stage)
     if not fs.exists(stage_p):
         return m
     committed = fs.exists(jvm.org.apache.hadoop.fs.Path(f"{stage}/{_COMMIT}"))
@@ -1130,7 +1125,7 @@ def _prune_unreferenced(spark: SparkSession, path: str) -> None:
     everything the two most recent manifests name — the
     reader-lifetime contract. Caller has checked the root carries a
     manifest."""
-    fs, _p, jvm = _hfs(spark, path)
+    fs, _p, jvm = hadoop_fs(spark, path)
     keep: set[str] = set()
     for v in _manifest_versions(fs, jvm, path)[-2:]:
         try:
@@ -1319,7 +1314,7 @@ def _insert_locked(
     batch_post.repartition(n_buckets, F.col("bucket")).write.mode(
         "overwrite"
     ).partitionBy("bucket").parquet(f"{stage}/postings")
-    fs, _p, jvm = _hfs(spark, stage)
+    fs, _p, jvm = hadoop_fs(spark, stage)
     # touched buckets from the staged layout itself — no extra job
     touched = sum(
         1

@@ -173,12 +173,13 @@ def global_rank(
     (metrics `null_order_keys` / `input_rows`), which rides the
     caller's own action at zero extra-job cost —
     observation.get["null_order_keys"] > 0 is the dropped-rows
-    signal, always a long (coalesced — ADVICE r15). Degenerate-input
-    caveat: for a 0-row input, or one where EVERY key is NULL, AQE
-    collapses the whole plan to an empty relation and Spark fails to
-    deliver schema'd metrics — Observation.get raises Py4JJavaError
-    (upstream; AQE off returns correct zeros). Use
-    assert_unique=True when degenerate inputs must fail loudly.
+    signal, always a long (coalesced). Degenerate-input caveat: for
+    a 0-row input, or one where EVERY key is NULL, a collect-style
+    action lets AQE collapse the whole plan to an empty relation and
+    Spark fails to deliver schema'd metrics — Observation.get raises
+    Py4JJavaError (upstream; AQE off returns correct zeros; a write
+    action still delivers them, see _SpoolWriter._stage_and_commit).
+    Use assert_unique=True when degenerate inputs must fail loudly.
 
     total_col, when set, adds the total row count as a column (the
     full-frame sum riding the same bounded offsets window — no extra

@@ -113,3 +113,12 @@ def get_spark(
         )
     )
     return builder.getOrCreate()
+
+
+def hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem, Path, jvm) for `path` through the session's Hadoop
+    configuration, so filesystem calls work on any supported store,
+    not only the local disk."""
+    jvm = spark._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p, jvm

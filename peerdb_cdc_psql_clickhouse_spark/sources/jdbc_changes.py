@@ -20,8 +20,8 @@ change feed (sources/changes.py):
          rename the staged dir into the slot (the sweepers'
          claim-then-rename protocol — a partially-written batch dir
          can never be visible to the Mirror's file source);
-      3. persist the new high-water mark, derived from the staged
-         parquet itself (a consistent local snapshot), LAST.
+      3. persist the new high-water mark, observed on the stage write
+         itself (exactly the rows committed), LAST.
 
 `Mirror.start(spool_dir)` tails the spool with Spark's checkpointed
 file source — no Mirror change needed. The source table is any table
@@ -67,12 +67,13 @@ try:  # POSIX advisory file locks; absent on Windows (msvcrt instead)
 except ImportError:  # pragma: no cover - non-POSIX fallback
     fcntl = None  # type: ignore[assignment]
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import change_event_schema
 from ..functions.hashing import row_checksum
+from ..session import hadoop_fs
 from .jdbc import read_jdbc
 
 _INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
@@ -83,9 +84,9 @@ class _SpoolWriter:
     monotone `batch_seq` slot counter, a hidden staging dir, and the
     claim-then-rename commit protocol.
 
-    Protocol (r6 review — both halves matter): events are written to
-    a HIDDEN staging dir (leading '.', invisible to Spark's file
-    listing), counted there, and only a NON-EMPTY batch is moved into
+    Protocol (both halves matter): events are written to a HIDDEN
+    staging dir (leading '.', invisible to Spark's file listing),
+    counted by the write itself, and only a NON-EMPTY batch is moved into
     the spool. The move claims its slot FIRST (persist batch_seq =
     K+1, then rename staging → `_batch=K`), and K is probed to the
     first slot with no existing dir at or above the persisted seq.
@@ -115,11 +116,11 @@ class _SpoolWriter:
     @contextmanager
     def _state_locked(self):
         """Serialize a read-modify-write cycle on the shared state
-        file across processes ON ONE HOST (ADVICE r9: two sweepers
-        running concurrently both read the same sweep_stamp floor and
-        issued EQUAL stamps, and a concurrent poller's merge could
-        lose the sweep_stamp key entirely — last-writer-wins on the
-        whole JSON). POSIX flock on a sibling .lock file; writers on
+        file across processes ON ONE HOST: without it two sweepers
+        running concurrently read the same sweep_stamp floor and issue
+        EQUAL stamps, and a concurrent poller's merge can lose the
+        sweep_stamp key entirely (last-writer-wins on the whole JSON).
+        POSIX flock on a sibling .lock file; writers on
         different hosts still need the documented single-orchestrator
         deployment (the state file is host-local by design — the
         confirmed-LSN analog lives next to whoever drives the tail).
@@ -154,11 +155,6 @@ class _SpoolWriter:
         with self._state_locked():
             self._persist_merge_unlocked(**updates)
 
-    def _fs(self, spark: SparkSession, path: str):
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        return p.getFileSystem(spark._jsc.hadoopConfiguration()), p, jvm
-
     def _commit_staged(self, spark: SparkSession, stage: str) -> int:
         """Claim the first free `_batch` slot at/above the persisted
         seq, THEN rename the staged dir into it. Returns the slot.
@@ -166,7 +162,7 @@ class _SpoolWriter:
         state lock so two writers sharing the spool can never claim
         the same slot; the rename itself needs no lock — a claimed
         slot number is exclusively this writer's."""
-        fs, stage_p, jvm = self._fs(spark, stage)
+        fs, stage_p, jvm = hadoop_fs(spark, stage)
         with self._state_locked():
             k = self._state().get("batch_seq", 0)
             while fs.exists(
@@ -186,30 +182,23 @@ class _SpoolWriter:
         stage_name: str,
         version_col: str = "_version",
     ) -> tuple[int, int | None]:
-        """Write `events` to the hidden stage (envelope column order),
-        read back its count and max version in one aggregate, and
-        commit only a non-empty batch. The staged parquet is an
-        immutable snapshot, so both numbers describe exactly what was
-        committed. Returns (n, max_version); (0, None) when empty."""
+        """Write `events` to the hidden stage (envelope column order)
+        with its count and max version observed on the write itself —
+        no read-back — and commit only a non-empty batch. The observed
+        numbers describe exactly the rows the write staged. Returns
+        (n, max_version); (0, None) when empty."""
         stage = f"{self.spool_dir}/{stage_name}"
-        events.select(
-            *[f.name for f in self.schema.fields]
+        obs = Observation()
+        events.select(*[f.name for f in self.schema.fields]).observe(
+            obs, F.count(F.lit(1)).alias("n"), F.max(version_col).alias("hi")
         ).write.mode("overwrite").parquet(stage)
-        agg = (
-            spark.read.schema(self.schema)
-            .parquet(stage)
-            .agg(F.count(F.lit(1)).alias("n"), F.max(version_col).alias("hi"))
-            .collect()[0]
-        )
-        if agg["n"] == 0:
-            self._drop_stage(spark, stage)
+        got = obs.get
+        if not got["n"]:
+            fs, stage_p, _ = hadoop_fs(spark, stage)
+            fs.delete(stage_p, True)
             return 0, None
         self._commit_staged(spark, stage)
-        return int(agg["n"]), int(agg["hi"])
-
-    def _drop_stage(self, spark: SparkSession, stage: str) -> None:
-        fs, stage_p, _ = self._fs(spark, stage)
-        fs.delete(stage_p, True)
+        return int(got["n"]), int(got["hi"])
 
 
 class JdbcChangePoller(_SpoolWriter):
@@ -274,9 +263,8 @@ class JdbcChangePoller(_SpoolWriter):
         advance the cursor. Returns rows fetched (0 = idle; neither
         the slot counter nor the cursor moves on an empty poll).
 
-        Crash windows, in order (r7 brief #6 — the old direct
-        batch-dir write could leave a torn, possibly-superset dir
-        visible to the stream forever):
+        Crash windows, in order (a direct batch-dir write could leave
+        a torn, possibly-superset dir visible to the stream forever):
         - after the stage write: the stage is hidden and overwritten
           by the retry; nothing visible, nothing lost;
         - after the claim, before the rename: one slot number is
@@ -289,7 +277,7 @@ class JdbcChangePoller(_SpoolWriter):
         Partial batch dirs are impossible by construction: a `_batch`
         dir only ever appears via an atomic rename of a fully-written
         stage."""
-        # the cursor comes from the staged snapshot (not a second
+        # the cursor is observed on the stage write (not a second
         # remote query), so it is consistent under concurrent inserts
         n, hi = self._stage_and_commit(
             spark,
@@ -372,19 +360,17 @@ class _BucketedSweeper(_SpoolWriter):
     def _next_stamp(self, mirror) -> int:
         """Version stamp for this sweep's synthetic events: above
         every APPLIED row (mirror.max_version()) AND above every stamp
-        any sweeper sharing this state file already issued (VERDICT
-        r8 #8: two sweeps interleaving against one undrained mirror
-        would otherwise both stamp max_version()+1 — and a key caught
-        by BOTH, e.g. updated before the update sweep's snapshot then
-        deleted before the delete sweep's, would carry EQUAL versions
-        into max-version-wins, leaving the tie to break on batch
-        order). The floor read, the stamp computation, and the floor
-        persist all hold the state lock (ADVICE r9: without it, two
-        sweepers running CONCURRENTLY both read the same floor and
-        issued equal stamps — the lock extends the guarantee from
-        sequentially-composed sweeps to concurrent sweeps on one
-        host; cross-host writers remain out of contract, same as the
-        spool's single-orchestrator deployment shape), so composed
+        any sweeper sharing this state file already issued. Without
+        the shared floor, two sweeps interleaving against one
+        undrained mirror would both stamp max_version()+1 — and a key
+        caught by BOTH, e.g. updated before the update sweep's
+        snapshot then deleted before the delete sweep's, would carry
+        EQUAL versions into max-version-wins, leaving the tie to break
+        on batch order. The floor read, the stamp computation, and
+        the floor persist all hold the state lock, so two sweepers
+        running CONCURRENTLY on one host cannot read the same floor
+        either (cross-host writers remain out of contract, same as
+        the spool's single-orchestrator deployment shape), so composed
         sweepers sharing a state file are strictly ordered no matter
         the drain schedule — the LATER source snapshot
         deterministically wins, which is the fresher truth."""
@@ -596,10 +582,10 @@ def md5_checksum_screen(
 
 class SnapshotDiffDeleteSweeper(_BucketedSweeper):
     """Delete capture for PLAIN tables — no outbox, no _op/_version
-    audit trail (VERDICT r5 #7): the reference's PeerDB sees hard
-    DELETEs because it decodes the WAL itself
-    (volumes/postgresql.conf:9-14); a poll-based tail of a plain
-    table cannot, because a deleted row simply stops appearing. The
+    audit trail. The reference's PeerDB sees hard DELETEs because it
+    decodes the WAL itself (volumes/postgresql.conf:9-14); a
+    poll-based tail of a plain table cannot, because a deleted row
+    simply stops appearing. The
     sweep closes that gap WITHOUT WAL access:
 
         per key-range bucket b:
@@ -651,8 +637,8 @@ class SnapshotDiffDeleteSweeper(_BucketedSweeper):
         of the union (Spark does not share subplans across union
         branches), and when it is a mirror's merge-on-read plan an
         un-persisted frame would re-run the full base+delta
-        max-version-wins merge n_buckets+1 times (r6 review).
-        sweep_once persists it for exactly this reason."""
+        max-version-wins merge n_buckets+1 times. sweep_once persists
+        it for exactly this reason."""
         bounds = self._bounds(target_keys)
         if bounds is None:
             return self._empty_keys(spark)
@@ -715,7 +701,7 @@ class SnapshotDiffDeleteSweeper(_BucketedSweeper):
 class ChecksumDiffUpdateSweeper(_BucketedSweeper):
     """In-place UPDATE (and missed INSERT) capture for PLAIN tables —
     the last CDC semantic PeerDB's WAL decoding has that a poll tail
-    does not (r7 brief #1; README.md:265-273): an UPDATE on an
+    does not (README.md:265-273): an UPDATE on an
     envelope-less table changes no version column, so it is invisible
     to the poller and leaves the key present for the delete sweep.
     The checksum sweep reconciles VALUES:

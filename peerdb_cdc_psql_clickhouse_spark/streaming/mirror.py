@@ -21,10 +21,10 @@ because apply never does read-modify-write:
 - foreachBatch APPENDS each micro-batch to its own delta part dir,
   overwriting that dir alone → re-running a failed batch is idempotent
   (exactly-once per batch on top of checkpointed offsets, O-C8).
-- read_target() merges on read: base-as-oldest-version ∪ delta →
-  max-version-wins, deletes filtered (operators.cdc.latest_state) —
-  the FINAL-query analog. One shuffle on the key, the unavoidable
-  minimum for keyed upsert; AQE handles key skew.
+- read_target() merges on read: base ∪ delta → max-version-wins,
+  deletes filtered (operators.cdc.merge_changes) — the FINAL-query
+  analog. One shuffle on the key, the unavoidable minimum for keyed
+  upsert; AQE handles key skew.
 - compact() folds delta into a new base (the MergeTree background
   merge analog) so read amplification stays bounded.
 """
@@ -40,7 +40,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import change_event_schema
-from ..operators.cdc import BASE_VERSION, latest_state, target_table_name
+from ..operators.cdc import (
+    BASE_VERSION,
+    latest_state,
+    merge_changes,
+    target_table_name,
+)
+from ..operators.metrics import sync_status
 from ..sources.changes import read_changes_stream
 
 
@@ -72,10 +78,11 @@ class Mirror:
         # bucket's files (the SURVEY §4 pk-bucket layout)
         self.n_buckets = n_buckets
 
-    def _bucket_col(self):
-        return F.pmod(
-            F.hash(*[F.col(c) for c in self.key_cols]), F.lit(self.n_buckets)
-        ).alias("_bucket")
+    def _bucket(self, keys):
+        """The pk-hash bucket of `keys` — columns when writing, typed
+        literals (hash(int32) != hash(int64)) when looking up, which
+        Catalyst folds to a constant in the scan's PartitionFilters."""
+        return F.pmod(F.hash(*keys), F.lit(self.n_buckets))
 
     # -- O-C1 snapshot -----------------------------------------------------
     def snapshot(self, source: DataFrame) -> None:
@@ -93,8 +100,9 @@ class Mirror:
 
     def _write_base(self, df: DataFrame, path: str) -> None:
         if self.n_buckets:
+            keys = [F.col(c) for c in self.key_cols]
             (
-                df.select("*", self._bucket_col())
+                df.select("*", self._bucket(keys).alias("_bucket"))
                 .repartition("_bucket")
                 .write.mode("overwrite")
                 .partitionBy("_bucket")
@@ -104,18 +112,7 @@ class Mirror:
             df.write.mode("overwrite").parquet(path)
 
     def _typed_lit(self, col: str, value):
-        field = self.row_schema[col]
-        return F.lit(value).cast(field.dataType)
-
-    def bucket_of(self, **key_values) -> int:
-        """The pk-hash bucket a key lives in — evaluated through Spark
-        so it uses the same murmur hash, with literals cast to the
-        exact column types (hash(int32) != hash(int64))."""
-        expr = F.pmod(
-            F.hash(*[self._typed_lit(c, key_values[c]) for c in self.key_cols]),
-            F.lit(self.n_buckets),
-        ).alias("b")
-        return self.spark.range(1).select(expr).collect()[0]["b"]
+        return F.lit(value).cast(self.row_schema[col].dataType)
 
     # -- pruned point lookup over the bucketed base ------------------------
     def lookup(self, **key_values) -> DataFrame:
@@ -123,23 +120,7 @@ class Mirror:
         base scan carries an explicit _bucket predicate, so it is
         partition-pruned to one bucket dir (PartitionFilters in the
         plan — verified by tests)."""
-        cond = None
-        for k, v in key_values.items():
-            c = F.col(k) == self._typed_lit(k, v)
-            cond = c if cond is None else cond & c
-        base = self._read_base()
-        if base is not None:
-            if self.n_buckets:
-                base = base.filter(
-                    F.col("_bucket") == F.lit(self.bucket_of(**key_values))
-                )
-            base = base.filter(cond).select(*self._data_cols, "_version")
-        delta = self._read_delta()
-        if delta is not None:
-            delta = delta.filter(cond)
-        return self._merge(base, delta, keep_deletes=False).select(
-            *self._data_cols
-        )
+        return self._read_merged(key_values).select(*self._data_cols)
 
     # -- O-C2/C3/C5/C7/C8 streaming apply ---------------------------------
     def start(
@@ -208,9 +189,9 @@ class Mirror:
     def max_version(self) -> int:
         """Highest applied _version across base + delta (two bounded
         1-row aggs) — BASE_VERSION if only the snapshot exists. The
-        snapshot-diff delete sweep stamps its synthetic events at
-        max_version()+1 so they beat every already-applied row under
-        max-version-wins."""
+        sweeps stamp their synthetic events above it (and above their
+        shared stamp floor) so they beat every already-applied row
+        under max-version-wins."""
         parts = []
         base = self._read_base()
         if base is not None:
@@ -227,53 +208,56 @@ class Mirror:
         return int(row["v"]) if row["v"] is not None else int(BASE_VERSION)
 
     # -- merged view (FINAL analog) ---------------------------------------
-    def read_target(
+    def read_target(self) -> DataFrame:
+        """Current converged state: base ∪ delta, max-version-wins."""
+        return self._read_merged().select(*self._data_cols)
+
+    def _read_merged(
         self,
-        keep_deletes: bool = False,
-        delta_paths: Sequence[str] | None = None,
+        key_values: dict | None = None,
+        batch_dirs: Sequence[str] | None = None,
     ) -> DataFrame:
-        """Current converged state: base ∪ delta, max-version-wins.
-        delta_paths restricts the merge to an explicit batch-dir
-        snapshot (compact() uses this to avoid racing new batches)."""
+        """The one read path behind read_target, lookup and compact:
+        base ∪ delta under operators.cdc.merge_changes, rows WITH their
+        winning _version. key_values filters both sides to one key
+        (and the base to its bucket dir); batch_dirs pins the delta to
+        an explicit set of batch dirs."""
+        cond = None
+        for k, v in (key_values or {}).items():
+            c = F.col(k) == self._typed_lit(k, v)
+            cond = c if cond is None else cond & c
         base = self._read_base()
+        if base is not None and cond is not None:
+            if self.n_buckets:
+                keys = [self._typed_lit(c, key_values[c]) for c in self.key_cols]
+                base = base.filter(F.col("_bucket") == self._bucket(keys))
+            base = base.filter(cond)
         if base is not None:
             base = base.select(*self._data_cols, "_version")
-        merged = self._merge(base, self._read_delta(delta_paths), keep_deletes)
-        return merged.select(*self._data_cols)
-
-    def _merge(
-        self,
-        base: DataFrame | None,
-        delta: DataFrame | None,
-        keep_deletes: bool,
-    ) -> DataFrame:
-        """base ∪ delta with max-version-wins; returns the winning rows
-        WITH their _version column (callers project it away, compact()
-        persists it). Base rows keep the real version they won at —
-        compaction must not downgrade them to the -infinity sentinel,
-        or an already-applied old batch replayed over the new base
-        would regress keys to stale values."""
-        empty_schema = T.StructType(
-            list(self.row_schema.fields)
-            + [T.StructField("_version", T.LongType())]
-        )
-        if base is None and delta is None:
-            return self.spark.createDataFrame([], empty_schema)
+        delta = self._read_delta(batch_dirs)
         if delta is None:
-            return base  # type: ignore[return-value]
-        parts = delta.select("_op", "_version", "_ts", *self._data_cols)
-        if base is not None:
-            base_as_changes = base.select(
-                F.lit("insert").alias("_op"),
-                F.coalesce(
-                    F.col("_version"), F.lit(BASE_VERSION)
-                ).cast("long").alias("_version"),
-                F.lit(None).cast("timestamp").alias("_ts"),
-                *self._data_cols,
+            if base is not None:
+                return base
+            return self.spark.createDataFrame(
+                [],
+                T.StructType(
+                    list(self.row_schema.fields)
+                    + [T.StructField("_version", T.LongType())]
+                ),
             )
-            parts = base_as_changes.unionByName(parts)
-        merged = latest_state(parts, self.key_cols, keep_deletes=keep_deletes)
-        return merged.select(*self._data_cols, "_version")
+        if cond is not None:
+            delta = delta.filter(cond)
+        return merge_changes(base, delta, self.key_cols)
+
+    def _refuse_while_active(self, action: str) -> None:
+        """resync, evolve and compact rewrite what the apply stream
+        reads or writes, so each refuses while that stream runs."""
+        for q in self.spark.streams.active:
+            if q.name == self.name:
+                raise RuntimeError(
+                    f"{action}() while streaming apply {self.name!r} is "
+                    "active; stop the query first"
+                )
 
     def resync(self, source: DataFrame) -> None:
         """Full mirror re-sync — the engine analog of the reference's
@@ -285,19 +269,14 @@ class Mirror:
         the change feed replays from its earliest retained offset;
         max-version-wins makes the replay converge regardless of how
         much of it predates the new snapshot. Refuses while the apply
-        stream is active (same guard as compact())."""
-        for q in self.spark.streams.active:
-            if q.name == self.name:
-                raise RuntimeError(
-                    f"resync() while streaming apply {self.name!r} is "
-                    "active; stop the query first"
-                )
+        stream is active."""
+        self._refuse_while_active("resync")
         shutil.rmtree(self.target_dir, ignore_errors=True)
         shutil.rmtree(self.checkpoint, ignore_errors=True)
         self.snapshot(source)
 
     def evolve(self, new_row_schema: T.StructType) -> None:
-        """Schema evolution WITHOUT resync (VERDICT r4 #4): accept a
+        """Schema evolution WITHOUT resync: accept a
         widened row schema — every existing column keeps its name and
         type, new columns append as nullable — and keep all converged
         state and the stream checkpoint.
@@ -315,13 +294,7 @@ class Mirror:
         reference workflow (README.md:265-273 recreate-mirror) remains
         the cited behavior baseline for anything narrower than a
         superset (dropped/retyped columns still require resync)."""
-        for q in self.spark.streams.active:
-            if q.name == self.name:
-                raise RuntimeError(
-                    f"evolve() while streaming apply {self.name!r} is "
-                    "active; stop the query first (the file source "
-                    "pins its schema at start)"
-                )
+        self._refuse_while_active("evolve")
         old = {f.name: f.dataType for f in self.row_schema.fields}
         new = {f.name: f.dataType for f in new_row_schema.fields}
         dropped = [n for n in old if n not in new]
@@ -338,7 +311,7 @@ class Mirror:
                 f"schema evolution cannot retype columns {retyped}; "
                 "use resync() for type changes"
             )
-        # Appended columns MUST be nullable (ADVICE r5): pre-evolution
+        # Appended columns MUST be nullable: pre-evolution
         # base/delta rows surface them as NULL, so a non-null
         # declaration would lie to every downstream consumer. Coerce
         # rather than reject — the VALUES are unchanged either way and
@@ -380,21 +353,10 @@ class Mirror:
         """
         import glob
 
-        for q in self.spark.streams.active:
-            if q.name == self.name:
-                raise RuntimeError(
-                    f"compact() while streaming apply {self.name!r} is "
-                    "active would drop late delta batches; stop the "
-                    "query first"
-                )
+        self._refuse_while_active("compact")
         self._recover_base()
         batch_dirs = sorted(glob.glob(f"{self.target_dir}/delta/_batch=*"))
-        base = self._read_base()
-        if base is not None:
-            base = base.select(*self._data_cols, "_version")
-        merged = self._merge(
-            base, self._read_delta(batch_dirs), keep_deletes=False
-        )
+        merged = self._read_merged(batch_dirs=batch_dirs)
         tmp = f"{self.target_dir}/base_compacting"
         # persist the winning _version per row: replaying an old delta
         # batch over the new base must stay a no-op
@@ -409,7 +371,7 @@ class Mirror:
         for d in batch_dirs:
             shutil.rmtree(d, ignore_errors=True)
 
-    # -- content-checksum parity (beyond-reference hardening, r5) ----------
+    # -- content-checksum parity (beyond-reference hardening) ---------------
     def checksum_parity(self, source: DataFrame) -> DataFrame:
         """One row: row-count AND content-checksum comparison between
         the source and the converged target — the monitor's count-only
@@ -485,9 +447,7 @@ class Mirror:
 
     def _read_base(self) -> DataFrame | None:
         fields = list(self.row_schema.fields) + [
-            # per-row winning version (BASE_VERSION for snapshot rows;
-            # missing in pre-upgrade bases -> read as null, coalesced
-            # to the sentinel at merge time)
+            # per-row winning version (BASE_VERSION for snapshot rows)
             T.StructField("_version", T.LongType())
         ]
         if self.n_buckets:
@@ -574,13 +534,7 @@ class MirrorSet:
             p = self.mirrors[table].parity(src)
             out = p if out is None else out.unionByName(p)
         assert out is not None
-        return out.select(
-            "*",
-            F.when(F.col("lag") == 0, "SYNCED")
-            .when(F.abs("lag") <= 5, "NEAR_SYNC")
-            .otherwise("LAG")
-            .alias("status"),
-        )
+        return out.select("*", sync_status().alias("status"))
 
 
 # -- O-C9 stream status introspection (README.md:238-241; monitor §4) ------

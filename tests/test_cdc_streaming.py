@@ -14,8 +14,8 @@ from pyspark.sql import types as T
 from peerdb_cdc_psql_clickhouse_spark.catalog import change_event_schema
 from tests.conftest import stagger_mtimes
 from peerdb_cdc_psql_clickhouse_spark.operators.cdc import (
-    apply_changes,
     latest_state,
+    merge_changes,
     target_table_name,
 )
 from peerdb_cdc_psql_clickhouse_spark.sources.changes import (
@@ -101,9 +101,29 @@ def test_apply_changes_incremental_merge(spark):
     base = _mk_changes(spark, EVENTS[:4])
     current = latest_state(base, ["id"]).select("id", "val")
     batch2 = _mk_changes(spark, EVENTS[4:])
-    merged = apply_changes(current, batch2, ["id"])
+    merged = merge_changes(current, batch2, ["id"])
     assert _as_dict(merged) == _naive_replay(EVENTS)
-    assert set(merged.columns) == {"id", "val"}
+    assert merged.columns == ["id", "val", "_version"]
+
+
+def test_merge_changes_replayed_older_batch_changes_nothing(spark):
+    """The merge keeps each winner's _version, so merging an
+    already-applied older batch over its output is a no-op: the older
+    events lose instead of regressing keys to stale values (a merge
+    that demotes current rows to BASE_VERSION lets them win)."""
+    snapshot = spark.createDataFrame(
+        [(1, "a0"), (2, "b0"), (3, "c0")], ROW_SCHEMA
+    )
+    older = _mk_changes(spark, [("update", 5, 1, "a5"), ("update", 6, 2, "b6")])
+    newer = _mk_changes(spark, [("update", 9, 1, "a9"), ("delete", 10, 3, None)])
+    state = merge_changes(
+        merge_changes(snapshot, older, ["id"]), newer, ["id"]
+    ).localCheckpoint()
+    assert _as_dict(state) == {1: "a9", 2: "b6"}
+    replayed = merge_changes(state, older, ["id"])
+    assert sorted(map(tuple, replayed.collect())) == sorted(
+        map(tuple, state.collect())
+    )
 
 
 def test_target_rename_mapping():
@@ -350,7 +370,6 @@ def test_validate_changes_quarantines_malformed_events(spark):
     through untouched and apply cleanly."""
     from peerdb_cdc_psql_clickhouse_spark.operators.cdc import (
         BASE_VERSION,
-        apply_changes,
         validate_changes,
     )
 
@@ -387,7 +406,7 @@ def test_validate_changes_quarantines_malformed_events(spark):
         "reserved": "reserved_version",
         "no-key": "null_key:id",
     }
-    assert _as_dict(apply_changes(None, valid, ["id"])) == {1: "a2"}
+    assert _as_dict(merge_changes(None, valid, ["id"])) == {1: "a2"}
 
 
 def test_stream_status_surfaces_state_and_late_drops(spark, tmp_path):
@@ -589,7 +608,7 @@ def test_negative_change_version_beats_base(spark):
     state instead of tying with the old -1 sentinel."""
     current = spark.createDataFrame([(1, "old")], ROW_SCHEMA)
     changes = _mk_changes(spark, [("update", -5, 1, "new")])
-    merged = apply_changes(current, changes, ["id"])
+    merged = merge_changes(current, changes, ["id"])
     assert _as_dict(merged) == {1: "new"}
 
 
@@ -635,6 +654,41 @@ def test_bucketed_mirror_lookup_prunes_partitions(spark, tmp_path):
     # snapshot ids 0..99; stream applies EVENTS over ids 1,2,3
     # (final: 1->a3, 2->b-re, 3 deleted)
     assert m.read_target().count() == 99
+
+
+def test_bucketed_lookup_runs_one_job_and_prunes(spark, tmp_path):
+    """A point lookup on a snapshot-only bucketed mirror runs exactly
+    one Spark job: the bucket is a literal expression Catalyst folds
+    into the scan's PartitionFilters, not a job of its own."""
+    import contextlib
+    import io
+    import re
+
+    from bench import timed
+
+    m = Mirror(
+        spark,
+        name="mirror_b1",
+        schema="public",
+        table="tb1",
+        key_cols=["id"],
+        row_schema=ROW_SCHEMA,
+        target_root=str(tmp_path / "warehouse"),
+        checkpoint_root=str(tmp_path / "ckpt"),
+        n_buckets=16,
+    )
+    m.snapshot(spark.createDataFrame([(i, f"v{i}") for i in range(100)], ROW_SCHEMA))
+    rec = timed(spark, lambda: m.lookup(id=42).collect(), "lookup")
+    assert [r["val"] for r in rec["value"]] == ["v42"]
+    assert rec["jobs"] == 1
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        m.lookup(id=42).explain("formatted")
+    bucket = spark.sql(
+        "SELECT pmod(hash(CAST(42 AS INT)), 16) AS b"
+    ).collect()[0]["b"]
+    plan = re.sub(r"#\d+", "", buf.getvalue())
+    assert f"PartitionFilters: [isnotnull(_bucket), (_bucket = {bucket})]" in plan
 
 
 def test_mirror_set_three_tables(spark, tmp_path):

@@ -10,7 +10,7 @@ import random
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from peerdb_cdc_psql_clickhouse_spark.operators.cdc import apply_changes
+from peerdb_cdc_psql_clickhouse_spark.operators.cdc import merge_changes
 from peerdb_cdc_psql_clickhouse_spark.operators.ivm import (
     aggregate_of,
     maintain_aggregate,
@@ -65,7 +65,7 @@ def test_ivm_matches_rescan_over_random_batches(spark):
         agg = maintain_aggregate(
             agg, target, batch, ["id"], "grp", "v"
         ).localCheckpoint()
-        target = apply_changes(target, batch, ["id"]).localCheckpoint()
+        target = merge_changes(target, batch, ["id"]).localCheckpoint()
         # invariant: incremental == from-scratch at every step
         assert _agg_dict(agg) == _agg_dict(
             aggregate_of(target, "grp", "v")

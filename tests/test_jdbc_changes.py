@@ -145,6 +145,39 @@ def test_poll_convergence_and_restart_exactly_once(spark, derby_url, tmp_path):
     assert _state(m) == {1: "a2", 3: "c"}
 
 
+def test_poll_once_runs_one_job_per_poll(spark, derby_url, tmp_path):
+    """A poll's count and cursor are observed on the stage write, so a
+    non-empty poll and an empty one each run ONE Spark job (the write)
+    and leave exactly the rows, cursor and batch dirs a read-back of
+    the stage would: the full batch in slot 0, then nothing."""
+    import glob
+
+    from bench import timed
+
+    write_jdbc(
+        _events(
+            spark,
+            [("insert", 7, T0, 1, "a"), ("update", 9, T0, 1, "a2")],
+        ),
+        derby_url,
+        "outbox",
+        mode="overwrite",
+    )
+    poller = _poller(derby_url, tmp_path)
+    spool = str(tmp_path / "spool")
+    rec = timed(spark, lambda: poller.poll_once(spark), "poll")
+    assert (rec["value"], rec["jobs"]) == (2, 1)
+    assert poller.state() == {"cursor": 9, "batch_seq": 1}
+    assert glob.glob(f"{spool}/_batch=*") == [f"{spool}/_batch=0"]
+    assert spark.read.parquet(f"{spool}/_batch=0").count() == 2
+
+    rec = timed(spark, lambda: poller.poll_once(spark), "poll")
+    assert (rec["value"], rec["jobs"]) == (0, 1)
+    assert poller.state() == {"cursor": 9, "batch_seq": 1}
+    assert glob.glob(f"{spool}/_batch=*") == [f"{spool}/_batch=0"]
+    assert glob.glob(f"{spool}/.poll_stage") == []
+
+
 def test_pump_drains_backlog_across_polls(spark, derby_url, tmp_path):
     """pump() is the catchup loop: polls until one empty poll, each
     poll its own spool batch; total equals the backlog exactly."""

@@ -21,6 +21,7 @@ from peerdb_cdc_psql_clickhouse_spark.operators.search import (
     text_index_apply_changes,
 )
 from peerdb_cdc_psql_clickhouse_spark.sources.jdbc import write_jdbc
+from peerdb_cdc_psql_clickhouse_spark.session import hadoop_fs
 from peerdb_cdc_psql_clickhouse_spark.sources.jdbc_changes import (
     JdbcChangePoller,
 )
@@ -175,7 +176,6 @@ def test_second_writer_rejected_during_mirror_maintenance(
 
     from peerdb_cdc_psql_clickhouse_spark.operators.search import (
         ConcurrentWriterError,
-        _hfs,
         _manifest_versions,
         _writer_lease,
         text_index_insert,
@@ -260,7 +260,7 @@ def test_second_writer_rejected_during_mirror_maintenance(
 
     # manifest chain gap-free (retention keeps the two newest records;
     # consecutive numbering proves no skipped/torn commit survived)
-    fs, _p, jvm = _hfs(spark, root)
+    fs, _p, jvm = hadoop_fs(spark, root)
     vs = _manifest_versions(fs, jvm, root)
     assert vs == sorted(vs)
     assert all(b - a == 1 for a, b in zip(vs, vs[1:]))

@@ -35,6 +35,7 @@ from peerdb_cdc_psql_clickhouse_spark.operators.search import (
     text_index_delete,
     text_index_insert,
 )
+from peerdb_cdc_psql_clickhouse_spark.session import hadoop_fs
 
 DOCS = [
     (1, "alpha beta gamma"),
@@ -629,7 +630,6 @@ def test_break_stale_lease_single_winner(spark, tmp_path):
     from peerdb_cdc_psql_clickhouse_spark.operators.search import (
         _LOCK,
         _break_stale_lease,
-        _hfs,
         _lease_token,
     )
 
@@ -637,7 +637,7 @@ def test_break_stale_lease_single_winner(spark, tmp_path):
     os.makedirs(root)
     lock = f"{root}/{_LOCK}"
     open(lock, "w").close()
-    fs, _p, jvm = _hfs(spark, lock)
+    fs, _p, jvm = hadoop_fs(spark, lock)
     p = jvm.org.apache.hadoop.fs.Path(lock)
     obs_token = _lease_token(fs, jvm, lock)
     obs_mtime = int(fs.getFileStatus(p).getModificationTime())
@@ -664,14 +664,13 @@ def test_break_stale_lease_spares_replaced_fresh_lease(spark, tmp_path):
     from peerdb_cdc_psql_clickhouse_spark.operators.search import (
         _LOCK,
         _break_stale_lease,
-        _hfs,
         _lease_token,
     )
 
     root = str(tmp_path / "idx")
     os.makedirs(root)
     lock = f"{root}/{_LOCK}"
-    fs, _p, jvm = _hfs(spark, lock)
+    fs, _p, jvm = hadoop_fs(spark, lock)
     p = jvm.org.apache.hadoop.fs.Path(lock)
 
     # the waiter observes a STALE lease ...
@@ -922,14 +921,13 @@ def test_break_stale_lease_retries_transient_restore_failure(
     from peerdb_cdc_psql_clickhouse_spark.operators.search import (
         _LOCK,
         _break_stale_lease,
-        _hfs,
         _lease_token,
     )
 
     root = str(tmp_path / "idx")
     os.makedirs(root)
     lock = f"{root}/{_LOCK}"
-    fs, _p, jvm = _hfs(spark, lock)
+    fs, _p, jvm = hadoop_fs(spark, lock)
     p = jvm.org.apache.hadoop.fs.Path(lock)
 
     with open(lock, "w") as f:
@@ -965,14 +963,13 @@ def test_break_stale_lease_surfaces_stolen_lease(spark, tmp_path, caplog):
     from peerdb_cdc_psql_clickhouse_spark.operators.search import (
         _LOCK,
         _break_stale_lease,
-        _hfs,
         _lease_token,
     )
 
     root = str(tmp_path / "idx")
     os.makedirs(root)
     lock = f"{root}/{_LOCK}"
-    fs, _p, jvm = _hfs(spark, lock)
+    fs, _p, jvm = hadoop_fs(spark, lock)
     p = jvm.org.apache.hadoop.fs.Path(lock)
 
     with open(lock, "w") as f:
@@ -1031,14 +1028,13 @@ def test_break_stale_lease_detects_landed_but_thrown_restore(
     from peerdb_cdc_psql_clickhouse_spark.operators.search import (
         _LOCK,
         _break_stale_lease,
-        _hfs,
         _lease_token,
     )
 
     root = str(tmp_path / "idx")
     os.makedirs(root)
     lock = f"{root}/{_LOCK}"
-    fs, _p, jvm = _hfs(spark, lock)
+    fs, _p, jvm = hadoop_fs(spark, lock)
     p = jvm.org.apache.hadoop.fs.Path(lock)
 
     with open(lock, "w") as f:
@@ -1106,14 +1102,13 @@ def test_break_stale_lease_tokenless_landed_restore_confirmed(
     from peerdb_cdc_psql_clickhouse_spark.operators.search import (
         _LOCK,
         _break_stale_lease,
-        _hfs,
         _lease_token,
     )
 
     root = str(tmp_path / "idx")
     os.makedirs(root)
     lock = f"{root}/{_LOCK}"
-    fs, _p, jvm = _hfs(spark, lock)
+    fs, _p, jvm = hadoop_fs(spark, lock)
     p = jvm.org.apache.hadoop.fs.Path(lock)
 
     with open(lock, "w") as f:
