@@ -18,9 +18,11 @@ because apply never does read-modify-write:
     <target_root>/<schema>_<table>/base/            snapshot parquet
     <target_root>/<schema>_<table>/delta/_batch=N/  appended change parts
 
-- foreachBatch APPENDS each micro-batch to its own delta part dir,
-  overwriting that dir alone → re-running a failed batch is idempotent
-  (exactly-once per batch on top of checkpointed offsets, O-C8).
+- foreachBatch writes each raw micro-batch (several versions of a key
+  included) to its own delta part dir in one job, overwriting that dir
+  alone → re-running a failed batch is idempotent (exactly-once per
+  batch on top of checkpointed offsets, O-C8). As with
+  ReplacingMergeTree inserts, dedup happens at read and compaction.
 - read_target() merges on read: base ∪ delta → max-version-wins,
   deletes filtered (operators.cdc.merge_changes) — the FINAL-query
   analog. One shuffle on the key, the unavoidable minimum for keyed
@@ -40,12 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import change_event_schema
-from ..operators.cdc import (
-    BASE_VERSION,
-    latest_state,
-    merge_changes,
-    target_table_name,
-)
+from ..operators.cdc import BASE_VERSION, merge_changes, target_table_name
 from ..operators.metrics import sync_status
 from ..sources.changes import read_changes_stream
 
@@ -172,18 +169,14 @@ class Mirror:
         return writer.start()
 
     def _apply_batch(self, batch: DataFrame, batch_id: int) -> None:
-        """foreachBatch body: append this micro-batch as one delta part.
-        Deterministic per-batch path + per-dir overwrite = idempotent
-        replay after failure. The batch itself may contain several
-        versions of a key; thin it map-side before writing (partial
-        dedup — fewer delta bytes, same merge-on-read answer)."""
-        thinned = latest_state(
-            batch, self.key_cols, keep_deletes=True
-        )
-        (
-            thinned.write.mode("overwrite").parquet(
-                f"{self.target_dir}/delta/_batch={batch_id}"
-            )
+        """foreachBatch body: write this micro-batch as it arrived to
+        its own delta part, in one job. Deterministic per-batch path +
+        per-dir overwrite = idempotent replay after failure. The part
+        may hold several versions of a key; merge_changes ranks them
+        at read and at compaction, as ReplacingMergeTree dedups only
+        at merge and FINAL time."""
+        batch.write.mode("overwrite").parquet(
+            f"{self.target_dir}/delta/_batch={batch_id}"
         )
 
     def max_version(self) -> int:
@@ -349,13 +342,18 @@ class Mirror:
           O(files) delete. Leftover batch dirs merged into the new
           base remain correct to re-read until deleted. A crash
           between the two renames is repaired by _recover_base, here
-          and on the next reader that finds no base.
+          and on the next reader that finds no base;
+        - deletes folded dirs in ascending batch id, so a crash leaves
+          a suffix of batches that, for a feed whose versions rise with
+          batch id, still holds every tombstone outranking a survivor
+          (replaying a folded batch over the new base is not covered).
         """
         import glob
 
         self._refuse_while_active("compact")
         self._recover_base()
-        batch_dirs = sorted(glob.glob(f"{self.target_dir}/delta/_batch=*"))
+        batch_dirs = glob.glob(f"{self.target_dir}/delta/_batch=*")
+        batch_dirs.sort(key=lambda d: int(d.rsplit("=", 1)[1]))
         merged = self._read_merged(batch_dirs=batch_dirs)
         tmp = f"{self.target_dir}/base_compacting"
         # persist the winning _version per row: replaying an old delta

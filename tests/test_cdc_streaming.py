@@ -153,8 +153,9 @@ def test_write_change_batches_rejects_backtick_version_col(spark, tmp_path):
         )
 
 
-@pytest.fixture()
-def mirror(spark, tmp_path):
+def _mirror_t(spark, tmp_path, **kw):
+    """A Mirror of public.t over tmp_path; a second call opens the same
+    mirror afresh, as a process restart would."""
     return Mirror(
         spark,
         name="mirror_t",
@@ -164,7 +165,13 @@ def mirror(spark, tmp_path):
         row_schema=ROW_SCHEMA,
         target_root=str(tmp_path / "warehouse"),
         checkpoint_root=str(tmp_path / "ckpt"),
+        **kw,
     )
+
+
+@pytest.fixture()
+def mirror(spark, tmp_path):
+    return _mirror_t(spark, tmp_path)
 
 
 def test_mirror_snapshot_stream_converges(spark, tmp_path, mirror):
@@ -486,6 +493,20 @@ def test_mirror_restart_is_exactly_once(spark, tmp_path, mirror):
     assert _as_dict(mirror.read_target()) == _naive_replay(EVENTS)
 
 
+def test_stream_runs_one_job_per_data_batch(spark, tmp_path, mirror):
+    """The apply writes each micro-batch as it arrived, in one Spark
+    job per data batch. Structured Streaming runs a batch's jobs under
+    the query's runId job group."""
+    changes_dir = str(tmp_path / "changes")
+    write_change_batches(_mk_changes(spark, EVENTS), changes_dir, 3)
+    q = mirror.start(changes_dir, available_now=True)
+    q.awaitTermination(120)
+    data_batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(data_batches) == 4
+    assert len(jobs) == len(data_batches)
+
+
 def test_mirror_compact_preserves_state(spark, tmp_path, mirror):
     changes_dir = str(tmp_path / "changes")
     write_change_batches(_mk_changes(spark, EVENTS), changes_dir, 3)
@@ -531,16 +552,7 @@ def test_compact_crash_between_renames_keeps_base(
     monkeypatch.setattr(os, "rename", real_rename)
     assert not os.path.exists(f"{mirror.target_dir}/base")
 
-    fresh = Mirror(
-        spark,
-        name="mirror_t",
-        schema="public",
-        table="t",
-        key_cols=["id"],
-        row_schema=ROW_SCHEMA,
-        target_root=str(tmp_path / "warehouse"),
-        checkpoint_root=str(tmp_path / "ckpt"),
-    )
+    fresh = _mirror_t(spark, tmp_path)
     assert _as_dict(fresh.read_target()) == before
     fresh.compact()
     assert _as_dict(fresh.read_target()) == before
@@ -600,6 +612,93 @@ def test_compact_tolerates_replayed_delta_batch(spark, tmp_path, mirror):
     mirror.compact()
     _sh.copytree(saved, f"{mirror.target_dir}/delta/_batch=999")
     assert _as_dict(mirror.read_target()) == before
+
+
+def test_compact_crash_in_fold_loop_keeps_later_tombstones(
+    spark, tmp_path, mirror, monkeypatch
+):
+    """compact() deletes the folded dirs in ascending batch id, so a
+    crash partway leaves a suffix of the batches. Here batch 2 updates
+    key 2 and batch 11 deletes it; a lexicographic order (_batch=10
+    and _batch=11 before _batch=2) would delete the tombstone first and
+    a crash at _batch=2 would bring key 2 back as 'b2'."""
+    import shutil
+
+    events = (
+        [("insert", 0, 1, "a0"), ("insert", 1, 2, "b1"), ("update", 2, 2, "b2")]
+        + [("update", v, 1, f"a{v}") for v in range(3, 11)]
+        + [("delete", 11, 2, None)]
+    )
+    changes_dir = str(tmp_path / "changes")
+    write_change_batches(_mk_changes(spark, events), changes_dir, 1)
+    stagger_mtimes(*[f"{changes_dir}/_batch={v}" for v in range(12)])
+    mirror.start(changes_dir, available_now=True).awaitTermination(120)
+    assert _as_dict(mirror.read_target()) == {1: "a10"}
+
+    real_rmtree = shutil.rmtree
+
+    def crash_at_batch_2(path, *args, **kw):
+        if str(path).endswith("/delta/_batch=2"):
+            raise OSError("simulated crash in the fold loop")
+        return real_rmtree(path, *args, **kw)
+
+    monkeypatch.setattr(shutil, "rmtree", crash_at_batch_2)
+    with pytest.raises(OSError, match="simulated crash"):
+        mirror.compact()
+    monkeypatch.setattr(shutil, "rmtree", real_rmtree)
+
+    fresh = _mirror_t(spark, tmp_path)
+    assert sorted(map(tuple, fresh.read_target().collect())) == [(1, "a10")]
+
+
+def test_raw_batches_with_several_versions_per_key_converge(spark, tmp_path):
+    """Each micro-batch holds several versions of one key (insert then
+    update, insert then delete, delete then re-insert) and is written
+    to the delta raw; read_target, a bucketed lookup and the compacted
+    base all give the replay's answer, and a restart from the
+    checkpoint re-applies nothing."""
+    import glob
+
+    m = _mirror_t(spark, tmp_path, n_buckets=4)
+    snap = {3: "s3", 4: "s4"}
+    m.snapshot(spark.createDataFrame(sorted(snap.items()), ROW_SCHEMA))
+    events = [
+        ("insert", 0, 1, "a"),
+        ("update", 1, 1, "a2"),
+        ("insert", 2, 2, "b"),
+        ("delete", 3, 2, None),
+        ("delete", 4, 3, None),
+        ("insert", 5, 3, "c-re"),
+    ]
+    changes_dir = str(tmp_path / "changes")
+    write_change_batches(_mk_changes(spark, events), changes_dir, 2)
+    m.start(changes_dir, available_now=True).awaitTermination(120)
+
+    expect = _naive_replay(events, base=snap)
+    assert expect == {1: "a2", 3: "c-re", 4: "s4"}
+    assert _as_dict(m.read_target()) == expect
+    # the delta holds every event, not one row per key and batch
+    assert m._read_delta().count() == len(events)
+
+    def looked_up():
+        return {
+            k: [r["val"] for r in m.lookup(id=k).collect()] for k in (1, 2, 3, 4)
+        }
+
+    want = {1: ["a2"], 2: [], 3: ["c-re"], 4: ["s4"]}
+    assert looked_up() == want
+
+    parts = sorted(glob.glob(f"{m.target_dir}/delta/_batch=*/*.parquet"))
+    q = m.start(changes_dir, available_now=True)
+    q.awaitTermination(120)
+    assert sum(p["numInputRows"] for p in q.recentProgress) == 0
+    assert sorted(glob.glob(f"{m.target_dir}/delta/_batch=*/*.parquet")) == parts
+    assert _as_dict(m.read_target()) == expect
+
+    m.compact()
+    assert m._read_delta() is None
+    assert _as_dict(m.read_target()) == expect
+    assert looked_up() == want
 
 
 def test_negative_change_version_beats_base(spark):
