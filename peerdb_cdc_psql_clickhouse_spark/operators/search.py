@@ -18,20 +18,19 @@ distinct matched terms, no text re-scan, no regex.
 
 from __future__ import annotations
 
-import json
-import logging
-import os
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..artifacts import artifact_slot
 from ..catalog import corpus_cache_key, load_table
+from ..commit import (
+    _commit_manifest,
+    _read_manifest,
+    _writer_lease,
+    kept_manifests,
+)
 from ..functions.hashing import hash64
 from ..session import hadoop_fs
 from .text import tokens_col
-
-_LOG = logging.getLogger(__name__)
 
 INDEX_BUCKETS = 64
 
@@ -437,508 +436,31 @@ def save_full_text_index(
                 "tombstones": [],
                 "n_buckets": int(n_buckets),
                 "analyzer": INDEX_ANALYZER,
+                "format": _FORMAT,
             },
         )
 
 
-# -- maintenance commit protocol (r9: manifest snapshots) --------------------
-# Layout under the index root:
-#   manifest/m-<v>.json   numbered commit records; the HIGHEST is the
-#                         current snapshot. A record is NEVER
-#                         overwritten — each commit creates the next
-#                         number via exclusive rename, so a reader
-#                         always sees a complete record or none.
-#   postings/ lengths/    data dirs. Compaction writes replacements as
-#   postings_g<v>/ ...    NEW generation dirs and flips the manifest
-#                         pointer — a live dir is never renamed or
-#                         deleted under a current reader (ADVICE r8:
-#                         the old retire-swap left the live dir absent
-#                         between two renames).
-#   tomb/b-<uuid>/        tombstone batches; a batch is visible IFF
-#                         the manifest lists it, so a reader can never
-#                         observe a torn delete (ADVICE r8: tombstones
-#                         used to commit via a plain multi-file
-#                         append). An unlisted batch dir is invisible
-#                         garbage, pruned by the next compact/recover.
-#   .insert_stage/        staged insert batch + _COMMIT marker
-#   .writer_lock          writer lease (single-writer ENFORCEMENT)
-#
-# The manifest IS the snapshot: one small atomic JSON read yields the
-# data dirs, the committed generation, the listed tombstone batches,
-# and the LIVE (tombstone-corrected) BM25 stats — a reader composes a
-# consistent view from ONE record, with no ordering window between
-# stats/tombstones/dirs (ADVICE r8: the previous design read stats,
-# tombstones, and a compact marker as three separate steps; every
-# writer op had some window where the trio disagreed — stats
-# overwritten in place via mode('overwrite'), a TOCTOU between the
-# stats read and the marker check, live dirs absent mid-swap).
-#
-# Writers (insert/delete/compact/apply_changes/recover) hold the
-# .writer_lock lease — exclusive create, stamped with an ownership
-# TOKEN and kept fresh by a heartbeat thread (ADVICE r9), so "stale"
-# means the holding PROCESS died (no beats for a full
-# WRITER_LEASE_TIMEOUT_SEC), never merely "the op ran long". Stale
-# leases are broken via atomic rename-claim (one racer wins); release
-# deletes the lease only if it still carries the holder's token. Two
-# concurrent writers would corrupt each other's .insert_stage, so
-# the single-writer contract is ENFORCED, not conventional (VERDICT
-# r8 #3). Manifest commits are additionally compare-and-swap: the
-# rename to m-<v+1>.json fails if that version exists, so even a
-# broken-lease split brain surfaces as ConcurrentWriterError, never a
-# silently overwritten commit.
-#
-# Retention: the dirs referenced by the TWO most recent manifests
-# survive; compaction/recovery prunes everything older. A reader's
-# lazy frames therefore stay valid from its manifest read until the
-# SECOND subsequent compaction — consume frames before running two
-# compactions (the documented read-lifetime contract; inserts and
-# deletes never invalidate a reader, they only add files and records).
-#
-# Insert is the one multi-file mutation of live dirs, so it keeps the
-# r8 staged-marker protocol: postings+lengths stage hidden, _COMMIT
-# makes the batch durable, the files move into the live dirs (still
-# invisible — their generation is above the manifest's), and the
-# manifest commit publishes the batch atomically. Crash anywhere:
-# stage without marker rolls back, stage with marker rolls forward
-# (finish moves, re-derive stats, commit) — all-or-nothing either way.
+# -- maintenance protocol ----------------------------------------------------
+# The index commits through commit.py; writers (insert/delete/compact/
+# apply_changes/recover) hold its lease. Beside the data dirs:
+#   tomb/b-<uuid>/   tombstone batches, visible IFF the manifest lists
+#                    them (a torn delete is unobservable garbage, pruned
+#                    by the next compact/recover)
+#   .insert_stage/   staged insert batch + _COMMIT marker
+# Insert stages postings+lengths hidden; _COMMIT makes the batch
+# durable; the files move into the live dirs (invisible: their
+# generation is above the manifest's); the manifest commit publishes
+# them. A crash rolls a stage without marker back and one with marker
+# forward, so an insert is all-or-nothing.
 
 _STAGE = ".insert_stage"
 _COMMIT = "_COMMIT"
-_MANIFEST_DIR = "manifest"
 _TOMB_DIR = "tomb"
-_LOCK = ".writer_lock"
 # bump when the persisted layout changes — keys the cross-process
 # artifact cache so a new engine version never reads an old layout
-# (3: r11 geometry contract — manifest n_buckets/analyzer fields +
-# term-column metadata)
+# (3: manifest n_buckets/analyzer fields + term-column metadata)
 _FORMAT = 3
-
-WRITER_LEASE_TIMEOUT_SEC = 900.0
-
-# heartbeat cadence as a fraction of the timeout: three missed beats
-# before a live lease can be judged stale
-_LEASE_BEAT_FRACTION = 3.0
-
-
-class ConcurrentWriterError(RuntimeError):
-    """A second writer is (or appears to be) active on the index."""
-
-
-def _lease_token(fs, jvm, lock_path: str) -> str | None:
-    """The owning writer's token, or None for a missing/empty/foreign
-    lease file (pre-token engines wrote an empty file — still a valid
-    live lease for the age check, just not provably ours)."""
-    try:
-        return json.loads(_fs_read_text(fs, jvm, lock_path)).get("token")
-    except Exception:  # noqa: BLE001 - absent, empty, or non-JSON
-        return None
-
-
-def _break_stale_lease(
-    fs, jvm, lock_path: str, token: str, obs_token: str | None, obs_mtime: int
-) -> bool:
-    """Remove a stale lease via atomic RENAME to a claim name (ADVICE
-    r9: a plain delete let two waiters both 'break' the same stale
-    file — the second delete removed the first waiter's FRESH lease,
-    and both believed they held it). Rename of one source path can
-    succeed for exactly one racer; the loser's rename returns false
-    (source gone) and it falls back to the normal acquire loop, where
-    the winner's fresh lease now blocks it.
-
-    (obs_token, obs_mtime) is the stale lease's identity as READ
-    BEFORE the break (ADVICE r10 TOCTOU: between the caller's age
-    check and this rename, the stale holder's lease can be released
-    and a NEW writer can stamp a fresh one — an unverified rename
-    then silently stole that fresh lease, and its owner only noticed
-    at its next heartbeat). After the rename wins, the claimed file
-    is re-read: only a token+mtime match with the observed identity
-    proves we claimed the SAME stale file (a dead holder cannot
-    change either; rename preserves mtime). On mismatch the claim is
-    renamed back so the fresh owner keeps running, and this caller
-    reports the lock held. Returns True iff the observed stale file
-    was removed."""
-    P = jvm.org.apache.hadoop.fs.Path
-    claim_path = f"{lock_path}.claim-{token}"
-    claim = P(claim_path)
-    try:
-        if not fs.rename(P(lock_path), claim):
-            return False
-    except Exception:  # noqa: BLE001 - source vanished under the racer
-        return False
-    try:
-        got_token = _lease_token(fs, jvm, claim_path)
-        got_mtime = int(fs.getFileStatus(claim).getModificationTime())
-    except Exception:  # noqa: BLE001 - claim unreadable: treat as fresh
-        got_token, got_mtime = object(), -1  # provably-not-matching
-    if got_token == obs_token and got_mtime == int(obs_mtime):
-        try:
-            fs.delete(claim, False)
-        except Exception:  # noqa: BLE001 - already gone
-            pass
-        return True
-    # we grabbed a FRESH lease — give it back. The rename-back is
-    # RETRIED (ADVICE r11: a transient failure here used to drop the
-    # victim's lease as garbage on the first try, leaving two writers
-    # running until the victim's next heartbeat — up to timeout/3 s);
-    # only a lock slot provably re-occupied by a third waiter makes
-    # the restore impossible.
-    import time as _time
-
-    for _ in range(3):
-        try:
-            if fs.rename(claim, P(lock_path)):
-                return False  # victim's lease restored intact
-        except Exception:  # noqa: BLE001 - transient; retry below
-            pass
-        # the slot is occupied — but by WHOM? A rename-back that threw
-        # AFTER landing leaves the VICTIM's own lease here (ADVICE
-        # r12: the old bare exists() check then fell through to the
-        # stolen path, emitting a false stolen-lease warning and a
-        # garbage marker path for a lease that was restored intact).
-        # A token match with the claimed lease proves the restore
-        # landed: report the lock held, no warning. A DIFFERENT token
-        # is a third waiter truly re-occupying the slot: restore
-        # impossible. None (absent or transiently unreadable) retries.
-        cur_token = _lease_token(fs, jvm, lock_path)
-        if cur_token is not None:
-            if cur_token == got_token:
-                return False  # restore landed despite the error
-            break
-        # cur_token None: the lock slot is occupied by a TOKEN-LESS
-        # file (legacy empty/non-JSON lease) or transiently
-        # unreadable. If the claimed lease was itself token-less, a
-        # token read-back can NEVER confirm the restore (ADVICE r13:
-        # the loop exhausted and fired a false stolen-lease warning
-        # for a lease restored intact). The claim file has exactly
-        # one mover — our own rename-back (the stolen path below
-        # hasn't run yet) — so claim-gone AND lock-occupied proves
-        # the restore landed.
-        try:
-            if not fs.exists(claim) and fs.exists(P(lock_path)):
-                return False  # restore landed despite the error
-        except Exception:  # noqa: BLE001 - transient; retry below
-            pass
-        _time.sleep(0.05)
-    # restore impossible: the fresh lease we mistakenly claimed is
-    # STOLEN from its owner. Surface the event instead of silently
-    # dropping it (ADVICE r11) — preserve the victim's lease content
-    # and mtime under a durable marker for operators, and log loudly.
-    # The victim observes the loss at its next heartbeat (within
-    # timeout/_LEASE_BEAT_FRACTION s) and aborts; the manifest CAS
-    # protects committed state throughout the overlap window.
-    stolen = f"{lock_path}.stolen-{token}"
-    try:
-        if not fs.rename(claim, P(stolen)):
-            fs.delete(claim, False)
-            stolen = "<claim dropped: marker rename failed>"
-    except Exception:  # noqa: BLE001 - best-effort preservation
-        try:
-            fs.delete(claim, False)
-        except Exception:  # noqa: BLE001
-            pass
-        stolen = "<claim dropped: marker rename failed>"
-    _LOG.warning(
-        "stolen-lease event at %s: a stale-lease break mistakenly "
-        "claimed a FRESH lease (owner token %s) and could not restore "
-        "it; victim content preserved at %s. The victim writer will "
-        "observe the loss at its next heartbeat and abort; two writers "
-        "may overlap until then (manifest CAS prevents damage).",
-        lock_path,
-        obs_token,
-        stolen,
-    )
-    return False
-
-
-def _lease_token_provable(fs, jvm, p, lock_path: str) -> str | None:
-    """The lease's current token, read STRICTLY: raises on any read
-    failure (the caller treats that as transient and retries), and
-    returns None only when the file is provably absent. The lenient
-    twin (_lease_token) folds transient errors into None — fine for
-    the acquire path's best-effort probes, but 'None' must never be
-    mistaken for 'provably lost' where a spurious loss verdict
-    strands the lease or raises after a successful body (ADVICE r10
-    at release; same hazard in the heartbeat)."""
-    if not fs.exists(p):
-        return None
-    return json.loads(_fs_read_text(fs, jvm, lock_path)).get("token")
-
-
-def _stamp_lease(fs, p, token: str) -> None:
-    """Overwrite the just-created lease file with the holder's
-    identity. Module-level (not inlined in the acquire loop) so tests
-    can inject a stamp failure and verify the orphan-cleanup path."""
-    out = fs.create(p, True)
-    try:
-        out.write(
-            bytearray(
-                json.dumps({"token": token, "pid": os.getpid()}).encode()
-            )
-        )
-    finally:
-        out.close()
-
-
-@contextmanager
-def _writer_lease(spark: SparkSession, path: str):
-    """Single-writer enforcement (VERDICT r8 #3, hardened per ADVICE
-    r9): exclusive-create the lease file, stamp it with a unique
-    OWNERSHIP TOKEN, and refresh its mtime from a heartbeat thread
-    while the writer runs — so a legitimate writer running longer than
-    WRITER_LEASE_TIMEOUT_SEC (compaction and full builds are O(corpus))
-    is never judged stale; only a writer whose PROCESS died (no beats
-    for the full timeout) can be broken. A live lease raises
-    ConcurrentWriterError; a stale one is broken via atomic
-    rename-claim (see _break_stale_lease — exactly one racer wins).
-
-    Release is token-checked: the lease is deleted ONLY if it still
-    carries our token, so a writer whose lease was somehow broken and
-    re-acquired can never delete the successor's lease (the cascade
-    ADVICE r9 described: intruder rolls back our stage, our finally
-    deletes the intruder's lease, a third writer walks in). If the
-    token is gone at release after a SUCCESSFUL body, we raise — the
-    manifest CAS already prevented any silent overwrite, but the split
-    brain must surface loudly.
-
-    Works through the Hadoop FS API like the rest of the protocol —
-    exclusive create and rename are atomic on local FS and HDFS
-    (object stores without atomic create/rename should front the
-    index with an HDFS-compatible layer, same caveat as every lease
-    file)."""
-    import threading
-    import time
-    import uuid
-
-    lock_path = f"{path}/{_LOCK}"
-    fs, p, jvm = hadoop_fs(spark, lock_path)
-    token = uuid.uuid4().hex
-    acquired = False
-    for _ in range(3):
-        if fs.createNewFile(p):
-            # we won the path; stamp our identity, then read it back —
-            # if anything else owns the file now, we lost a race we
-            # could not see and must not proceed
-            try:
-                _stamp_lease(fs, p, token)
-            except Exception:  # noqa: BLE001 - stamp lost its window
-                # ADVICE r10: the createNewFile above succeeded, so an
-                # empty/partial lease file of OURS may be on disk — if
-                # it stays, the retry loop sees a fresh held lease and
-                # raises against our own orphan, blocking every writer
-                # for the full timeout with no live heartbeat. Until
-                # the file carries a FOREIGN token it cannot belong to
-                # anyone else, so deleting it here is safe.
-                try:
-                    if _lease_token(fs, jvm, lock_path) in (None, token):
-                        fs.delete(p, False)
-                except Exception:  # noqa: BLE001 - best-effort cleanup
-                    pass
-                continue
-            # verify the stamp with the PROVABLE reader, retried (r11:
-            # a transient error here read as 'not ours' and left our
-            # freshly stamped lease stranded — the retry iteration then
-            # raised 'held' against our own file for the full timeout)
-            verified = None
-            for _ in range(3):
-                try:
-                    verified = _lease_token_provable(fs, jvm, p, lock_path)
-                    break
-                except Exception:  # noqa: BLE001 - transient; re-read
-                    time.sleep(0.05)
-            if verified == token:
-                acquired = True
-                break
-            # provably foreign (cannot normally happen on a file we
-            # just created) or unreadable after retries: clean up our
-            # own stamp before retrying, same safety argument as the
-            # stamp-failure path above
-            try:
-                if _lease_token(fs, jvm, lock_path) in (None, token):
-                    fs.delete(p, False)
-            except Exception:  # noqa: BLE001 - best-effort cleanup
-                pass
-            continue
-        # observe the held lease's identity ONCE — the age decision and
-        # any stale break below must act on the same observation (the
-        # r10 TOCTOU fix: _break_stale_lease verifies it claimed this
-        # exact identity, never whatever replaced it meanwhile)
-        try:
-            obs_mtime = int(fs.getFileStatus(p).getModificationTime())
-            obs_token = _lease_token(fs, jvm, lock_path)
-        except Exception:  # noqa: BLE001 - lease vanished; retry create
-            continue
-        age = time.time() - obs_mtime / 1000.0
-        if age <= WRITER_LEASE_TIMEOUT_SEC:
-            raise ConcurrentWriterError(
-                f"writer lease {lock_path} is held (age {age:.1f}s); "
-                "text-index writers are single-writer — wait for the "
-                "other writer, or delete a known-dead lease file"
-            )
-        _break_stale_lease(fs, jvm, lock_path, token, obs_token, obs_mtime)
-    if not acquired:
-        raise ConcurrentWriterError(
-            f"could not acquire writer lease {lock_path}"
-        )
-
-    # heartbeat: refresh the lease mtime every timeout/3 so a LIVE
-    # long op is never stale; verify the token each beat so a broken
-    # lease is detected (and never refreshed for the intruder)
-    stop = threading.Event()
-    lost = threading.Event()
-    interval = max(WRITER_LEASE_TIMEOUT_SEC / _LEASE_BEAT_FRACTION, 0.05)
-
-    def _beat() -> None:
-        # the token check must be PROVABLE before the beat concludes
-        # loss (r11: the lenient _lease_token returned None on a
-        # transient read error, so one flaky read killed the beat
-        # thread — the lease then aged out mid-op and a successful
-        # body ended in a spurious ConcurrentWriterError); a read
-        # failure is transient and the next beat retries — staleness
-        # needs 3 consecutive whole-beat misses
-        while not stop.wait(interval):
-            try:
-                if _lease_token_provable(fs, jvm, p, lock_path) != token:
-                    lost.set()
-                    return
-                fs.setTimes(p, int(time.time() * 1000), -1)
-            except Exception:  # noqa: BLE001 - transient FS error
-                continue
-
-    beat = threading.Thread(
-        target=_beat, name="text-index-lease-heartbeat", daemon=True
-    )
-    beat.start()
-    body_ok = False
-    try:
-        yield
-        body_ok = True
-    finally:
-        stop.set()
-        beat.join(timeout=30)
-        # ADVICE r10: one transient FS error here used to read as
-        # "token gone" — the lease was left undeleted (blocking
-        # writers for the full timeout with the heartbeat already
-        # stopped) AND a spurious ConcurrentWriterError fired after a
-        # fully successful body. The release read now RETRIES and
-        # distinguishes 'provably foreign/absent' (file readable with
-        # another token, or provably not there) from 'could not read'
-        # (every attempt erred). Unprovable resolves to no-error /
-        # no-delete: a foreign token can only appear via a stale
-        # break, which needs the FULL timeout of missed heartbeats —
-        # a transient read error at release is no evidence of that,
-        # and deleting blind could remove a real successor's lease
-        # (the r9 cascade). The undeleted own-token lease is
-        # reclaimed by the next writer's stale break.
-        still_ours, provable = False, False
-        for _ in range(5):
-            try:
-                tok = _lease_token_provable(fs, jvm, p, lock_path)
-                still_ours, provable = tok == token, True
-                break
-            except Exception:  # noqa: BLE001 - transient read failure
-                time.sleep(0.05)
-        if still_ours:
-            try:
-                fs.delete(p, False)
-            except Exception:  # noqa: BLE001 - released by FS cleanup
-                pass
-        if body_ok and (lost.is_set() or (provable and not still_ours)):
-            raise ConcurrentWriterError(
-                f"writer lease {lock_path} was broken while this "
-                "writer ran (its token is gone); the manifest CAS "
-                "protected committed state, but verify no second "
-                "orchestrator is driving this index"
-            )
-
-
-def _fs_write_text(fs, jvm, path_str: str, text: str) -> None:
-    out = fs.create(jvm.org.apache.hadoop.fs.Path(path_str), False)
-    try:
-        out.write(bytearray(text.encode("utf-8")))
-    finally:
-        out.close()
-
-
-def _fs_read_text(fs, jvm, path_str: str) -> str:
-    ins = fs.open(jvm.org.apache.hadoop.fs.Path(path_str))
-    try:
-        baos = jvm.java.io.ByteArrayOutputStream()
-        jvm.org.apache.hadoop.io.IOUtils.copyBytes(ins, baos, 8192, False)
-        return baos.toString("UTF-8")
-    finally:
-        ins.close()
-
-
-def _manifest_versions(fs, jvm, path: str) -> list[int]:
-    d = jvm.org.apache.hadoop.fs.Path(f"{path}/{_MANIFEST_DIR}")
-    if not fs.exists(d):
-        return []
-    out = []
-    for st in fs.listStatus(d):
-        name = st.getPath().getName()
-        if name.startswith("m-") and name.endswith(".json"):
-            try:
-                out.append(int(name[2:-5]))
-            except ValueError:
-                continue
-    return sorted(out)
-
-
-def _read_manifest(spark: SparkSession, path: str) -> dict | None:
-    """Latest committed snapshot record, or None for a root without a
-    manifest. Retries if the chosen record is pruned between the
-    listing and the read — retention keeps two records, so the newest
-    at listing time survives at least one more commit."""
-    fs, _p, jvm = hadoop_fs(spark, path)
-    for _ in range(3):
-        vs = _manifest_versions(fs, jvm, path)
-        if not vs:
-            return None
-        try:
-            m = json.loads(
-                _fs_read_text(
-                    fs, jvm, f"{path}/{_MANIFEST_DIR}/m-{vs[-1]:010d}.json"
-                )
-            )
-            m["v"] = int(m["v"])
-            return m
-        except Exception:  # noqa: BLE001 - pruned under us; re-list
-            continue
-    raise IOError(f"cannot read a text-index manifest under {path}")
-
-
-def _commit_manifest(spark: SparkSession, path: str, m: dict) -> dict:
-    """Publish snapshot v+1 via exclusive rename (compare-and-swap):
-    the tmp record is complete before it gets its final name, and the
-    rename fails if that version already exists — a racing writer
-    (possible only through a broken lease) surfaces loudly, never as a
-    half-written or overwritten commit. Returns the committed record.
-    Prunes manifest RECORDS beyond the newest two; data-dir pruning is
-    compaction/recovery's job (_prune_unreferenced)."""
-    import uuid
-
-    fs, _p, jvm = hadoop_fs(spark, path)
-    rec = dict(m, v=int(m["v"]) + 1, format=_FORMAT)
-    mdir = f"{path}/{_MANIFEST_DIR}"
-    fs.mkdirs(jvm.org.apache.hadoop.fs.Path(mdir))
-    tmp = f"{mdir}/.m-{uuid.uuid4().hex}.tmp"
-    _fs_write_text(fs, jvm, tmp, json.dumps(rec))
-    dest = jvm.org.apache.hadoop.fs.Path(f"{mdir}/m-{rec['v']:010d}.json")
-    if fs.exists(dest) or not fs.rename(
-        jvm.org.apache.hadoop.fs.Path(tmp), dest
-    ):
-        fs.delete(jvm.org.apache.hadoop.fs.Path(tmp), False)
-        raise ConcurrentWriterError(
-            f"manifest v{rec['v']} already committed under {path}: a "
-            "second writer is active (the .writer_lock lease should "
-            "have prevented this)"
-        )
-    for old in _manifest_versions(fs, jvm, path)[:-2]:
-        fs.delete(
-            jvm.org.apache.hadoop.fs.Path(f"{mdir}/m-{old:010d}.json"),
-            False,
-        )
-    return rec
 
 
 def _staged_parquet_files(fs, jvm, stage: str) -> list[str]:
@@ -1125,20 +647,12 @@ def _prune_unreferenced(spark: SparkSession, path: str) -> None:
     everything the two most recent manifests name — the
     reader-lifetime contract. Caller has checked the root carries a
     manifest."""
-    fs, _p, jvm = hadoop_fs(spark, path)
     keep: set[str] = set()
-    for v in _manifest_versions(fs, jvm, path)[-2:]:
-        try:
-            rec = json.loads(
-                _fs_read_text(
-                    fs, jvm, f"{path}/{_MANIFEST_DIR}/m-{v:010d}.json"
-                )
-            )
-        except Exception:  # noqa: BLE001 - pruned record; skip
-            continue
+    for rec in kept_manifests(spark, path):
         keep.add(rec["postings"])
         keep.add(rec["lengths"])
         keep.update(rec.get("tombstones") or [])
+    fs, _p, jvm = hadoop_fs(spark, path)
     P = jvm.org.apache.hadoop.fs.Path
     for st in fs.listStatus(P(path)):
         name = st.getPath().getName()
@@ -1186,8 +700,8 @@ def open_text_index(
 ) -> tuple[DataFrame, DataFrame, tuple[int, int]]:
     """(postings, lengths, (n_docs, sum_dl)) for a persisted index
     root — fresh frames each call, so committed inserts and deletes
-    are visible. READ-ONLY and snapshot-isolated (see the commit
-    protocol block above): the whole view — data dirs, committed
+    are visible. READ-ONLY and snapshot-isolated (the commit protocol
+    in commit.py): the whole view — data dirs, committed
     generation, tombstone batches, LIVE stats — derives from ONE
     atomic manifest record, so there is no window where a reader can
     observe stats, tombstones, and dirs from different commits, no
@@ -1433,8 +947,7 @@ def text_index_compact(spark: SparkSession, path: str) -> dict:
     generation dirs, flip the manifest pointer, then prune what no
     kept manifest references. The flip is one atomic manifest commit,
     so there is no swap window — a live dir is never renamed or
-    deleted under a current reader (ADVICE r8: the old retire-swap
-    left the live dir absent between two renames); readers holding the
+    deleted under a current reader; readers holding the
     PREVIOUS manifest keep resolving their old dirs until the second
     compaction prunes them (retention-of-one). A crash before the
     commit leaves orphan generation dirs — invisible garbage, pruned

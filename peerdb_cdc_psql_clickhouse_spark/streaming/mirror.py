@@ -15,26 +15,33 @@ Target layout is ClickHouse-ReplacingMergeTree-shaped (monitor.ps1:664
 system.parts; convergence :722-763) and is the right shape at 100 TB
 because apply never does read-modify-write:
 
-    <target_root>/<schema>_<table>/base/            snapshot parquet
-    <target_root>/<schema>_<table>/delta/_batch=N/  appended change parts
+    <target_root>/<schema>_<table>/manifest/m-<v>.json  {base, folded}
+    <target_root>/<schema>_<table>/base_g<v>/           base generation
+    <target_root>/<schema>_<table>/delta/_batch=N/      appended change parts
 
+- The manifest commits through commit.py, the protocol the text index
+  uses: a record names the base generation dir and `folded`, the
+  highest delta batch id folded into that base. snapshot() and
+  compact() are its writers (writer lease, new generation dir, one
+  compare-and-swap commit, one-cycle retention), so a published base
+  is never renamed or deleted under a reader of the current record.
 - foreachBatch writes each raw micro-batch (several versions of a key
   included) to its own delta part dir in one job, overwriting that dir
   alone → re-running a failed batch is idempotent (exactly-once per
   batch on top of checkpointed offsets, O-C8). As with
   ReplacingMergeTree inserts, dedup happens at read and compaction.
-- read_target() merges on read: base ∪ delta → max-version-wins,
-  deletes filtered (operators.cdc.merge_changes) — the FINAL-query
-  analog. One shuffle on the key, the unavoidable minimum for keyed
-  upsert; AQE handles key skew.
-- compact() folds delta into a new base (the MergeTree background
-  merge analog) so read amplification stays bounded.
+- read_target() merges on read: the record's base ∪ the delta batches
+  above its folded id → max-version-wins, deletes filtered
+  (operators.cdc.merge_changes) — the FINAL-query analog. One shuffle
+  on the key, the unavoidable minimum for keyed upsert; AQE handles
+  key skew. A re-run of a batch at or below `folded` is ignored: its
+  events are already in the base.
+- compact() folds the delta into a new base generation (the MergeTree
+  background merge analog) so read amplification stays bounded.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -42,9 +49,30 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import change_event_schema
+from ..commit import (
+    _commit_manifest,
+    _read_manifest,
+    _writer_lease,
+    kept_manifests,
+)
 from ..operators.cdc import BASE_VERSION, merge_changes, target_table_name
 from ..operators.metrics import sync_status
+from ..session import hadoop_fs
 from ..sources.changes import read_changes_stream
+
+
+def _listed_ids(spark: SparkSession, path: str, prefix: str) -> list[int]:
+    """Ascending ids N of the entries named `<prefix>N` directly under
+    `path` ([] when it is absent). The listing crosses py4j as ONE
+    string (a Scala ArraySeq's mkString) rather than three calls per
+    entry: every read lists delta/."""
+    fs, p, jvm = hadoop_fs(spark, path)
+    if not fs.exists(p):
+        return []
+    paths = jvm.org.apache.hadoop.fs.FileUtil.stat2Paths(fs.listStatus(p))
+    listing = jvm.scala.collection.mutable.ArraySeq.make(paths).mkString("\n")
+    names = [q.rsplit("/", 1)[-1][len(prefix):] for q in listing.split("\n")]
+    return sorted(int(n) for n in names if n.isdigit())
 
 
 class Mirror:
@@ -81,19 +109,65 @@ class Mirror:
         Catalyst folds to a constant in the scan's PartitionFilters."""
         return F.pmod(F.hash(*keys), F.lit(self.n_buckets))
 
+    # -- commit protocol (commit.py) ---------------------------------------
+    def _manifest(self) -> dict:
+        """The current commit record. Before the first commit there is
+        no base and nothing is folded."""
+        return _read_manifest(self.spark, self.target_dir) or {"v": 0, "folded": -1}
+
+    def _commit_base(self, df: DataFrame, m: dict, folded: int) -> None:
+        """Write `df` as the next base generation, commit a record
+        naming it with `folded`, then prune. Caller holds the writer
+        lease; the next writer overwrites or prunes an orphan left by a
+        crash before the commit."""
+        gen = f"base_g{int(m['v']) + 1}"
+        self._write_base(df, f"{self.target_dir}/{gen}")
+        _commit_manifest(
+            self.spark, self.target_dir, dict(m, base=gen, folded=folded)
+        )
+        self._prune()
+
+    def _prune(self) -> None:
+        """Delete the base generations and the delta batches that
+        neither of the two newest records reads: a batch is retired
+        once the OLDER kept record has folded it, so a reader holding
+        that record still finds every dir it reads."""
+        kept = kept_manifests(self.spark, self.target_dir)
+        if not kept:
+            return
+        keep = {r["base"] for r in kept}
+        retired = int(kept[0]["folded"]) if len(kept) == 2 else -1
+        fs, root, jvm = hadoop_fs(self.spark, self.target_dir)
+        for st in fs.listStatus(root):
+            name = st.getPath().getName()
+            if name.startswith("base_g") and name not in keep:
+                fs.delete(st.getPath(), True)
+        for n in self._delta_batches():
+            if n <= retired:
+                d = f"{self.target_dir}/delta/_batch={n}"
+                fs.delete(jvm.org.apache.hadoop.fs.Path(d), True)
+
+    def _delta_batches(self) -> list[int]:
+        """The batch ids that have a dir under delta/, ascending."""
+        return _listed_ids(self.spark, f"{self.target_dir}/delta", "_batch=")
+
     # -- O-C1 snapshot -----------------------------------------------------
     def snapshot(self, source: DataFrame) -> None:
-        """Initial full copy (flow-snapshot-worker analog). Overwrite =
-        idempotent re-snapshot; goes to base/, leaving delta intact.
+        """Initial full copy (flow-snapshot-worker analog): commits the
+        source as a new base generation, leaving delta and the folded
+        id as they are, so a re-snapshot is an idempotent overwrite.
         Snapshot rows carry the BASE_VERSION sentinel: every change
         event (which by mirror contract postdates the snapshot point)
         beats them."""
-        self._write_base(
-            source.select(*self._data_cols).withColumn(
-                "_version", F.lit(BASE_VERSION).cast("long")
-            ),
-            f"{self.target_dir}/base",
-        )
+        with _writer_lease(self.spark, self.target_dir):
+            m = self._manifest()
+            self._commit_base(
+                source.select(*self._data_cols).withColumn(
+                    "_version", F.lit(BASE_VERSION).cast("long")
+                ),
+                m,
+                int(m["folded"]),
+            )
 
     def _write_base(self, df: DataFrame, path: str) -> None:
         if self.n_buckets:
@@ -144,7 +218,21 @@ class Mirror:
         idempotent (deterministic path, per-dir overwrite) and the
         hook must be idempotent the same way (index apply is:
         tombstone + generation-ranked re-insert converges on
-        replay)."""
+        replay).
+
+        Raises RuntimeError when compaction has folded a batch id the
+        checkpoint has not reached (a deleted or replaced checkpoint):
+        the stream would restart at batch 0, and readers ignore every
+        batch id at or below the folded one. resync() is the way back."""
+        folded = int(self._manifest()["folded"])
+        offsets = _listed_ids(self.spark, f"{self.checkpoint}/offsets", "")
+        reached = max(offsets, default=-1)
+        if folded > reached:
+            raise RuntimeError(
+                f"mirror {self.name!r} has folded delta batch {folded} but "
+                f"its checkpoint has reached batch {reached}; its new "
+                "batches would be ignored — run resync()"
+            )
         stream = read_changes_stream(
             self.spark,
             changes_dir,
@@ -185,13 +273,12 @@ class Mirror:
         sweeps stamp their synthetic events above it (and above their
         shared stamp floor) so they beat every already-applied row
         under max-version-wins."""
-        parts = []
-        base = self._read_base()
-        if base is not None:
-            parts.append(base.select("_version"))
-        delta = self._read_delta()
-        if delta is not None:
-            parts.append(delta.select("_version"))
+        m = self._manifest()
+        parts = [
+            df.select("_version")
+            for df in (self._read_base(m), self._read_delta(m))
+            if df is not None
+        ]
         if not parts:
             return int(BASE_VERSION)
         allv = parts[0]
@@ -208,18 +295,21 @@ class Mirror:
     def _read_merged(
         self,
         key_values: dict | None = None,
-        batch_dirs: Sequence[str] | None = None,
+        m: dict | None = None,
+        through: int | None = None,
     ) -> DataFrame:
         """The one read path behind read_target, lookup and compact:
-        base ∪ delta under operators.cdc.merge_changes, rows WITH their
-        winning _version. key_values filters both sides to one key
-        (and the base to its bucket dir); batch_dirs pins the delta to
-        an explicit set of batch dirs."""
+        the base and unfolded delta of ONE commit record (the current
+        one unless `m` is given) under operators.cdc.merge_changes,
+        rows WITH their winning _version. key_values filters both sides
+        to one key (and the base to its bucket dir); `through` caps the
+        delta at a batch id."""
+        m = m or self._manifest()
         cond = None
         for k, v in (key_values or {}).items():
             c = F.col(k) == self._typed_lit(k, v)
             cond = c if cond is None else cond & c
-        base = self._read_base()
+        base = self._read_base(m)
         if base is not None and cond is not None:
             if self.n_buckets:
                 keys = [self._typed_lit(c, key_values[c]) for c in self.key_cols]
@@ -227,7 +317,7 @@ class Mirror:
             base = base.filter(cond)
         if base is not None:
             base = base.select(*self._data_cols, "_version")
-        delta = self._read_delta(batch_dirs)
+        delta = self._read_delta(m, through)
         if delta is None:
             if base is not None:
                 return base
@@ -264,8 +354,9 @@ class Mirror:
         much of it predates the new snapshot. Refuses while the apply
         stream is active."""
         self._refuse_while_active("resync")
-        shutil.rmtree(self.target_dir, ignore_errors=True)
-        shutil.rmtree(self.checkpoint, ignore_errors=True)
+        for d in (self.target_dir, self.checkpoint):
+            fs, p, _jvm = hadoop_fs(self.spark, d)
+            fs.delete(p, True)
         self.snapshot(source)
 
     def evolve(self, new_row_schema: T.StructType) -> None:
@@ -327,47 +418,23 @@ class Mirror:
         self._data_cols = [f.name for f in new_row_schema.fields]
 
     def compact(self) -> None:
-        """Fold delta into base (MergeTree background-merge analog).
-
-        Safe against concurrent writers/readers:
-        - refuses to run while this mirror's streaming apply is active
-          (a delta batch landing after the merge materialized would be
-          deleted even though checkpoint offsets say it was applied);
-        - snapshots the set of _batch dirs FIRST and merges/deletes
-          exactly those, so a batch racing in between is preserved
-          (re-applying it over the new base is idempotent under
-          max-version-wins);
-        - swaps base via two renames instead of rmtree+move, so the
-          window where a reader sees no base is microseconds, not an
-          O(files) delete. Leftover batch dirs merged into the new
-          base remain correct to re-read until deleted. A crash
-          between the two renames is repaired by _recover_base, here
-          and on the next reader that finds no base;
-        - deletes folded dirs in ascending batch id, so a crash leaves
-          a suffix of batches that, for a feed whose versions rise with
-          batch id, still holds every tombstone outranking a survivor
-          (replaying a folded batch over the new base is not covered).
-        """
-        import glob
-
+        """Fold the delta into a new base generation (MergeTree
+        background-merge analog). Refuses while this mirror's apply
+        stream runs (a batch mid-write would be folded partially, and
+        its completion ignored). Under the writer lease it lists the delta batch
+        ids FIRST and folds exactly those up to the highest, so a batch
+        landing later stays above `folded`. The new base keeps each
+        row's winning _version, and one manifest commit publishes
+        {base, folded}: readers see the old record or the new one. A
+        crash at any step leaves a state the current record reads
+        correctly; the next compact() finishes the prune."""
         self._refuse_while_active("compact")
-        self._recover_base()
-        batch_dirs = glob.glob(f"{self.target_dir}/delta/_batch=*")
-        batch_dirs.sort(key=lambda d: int(d.rsplit("=", 1)[1]))
-        merged = self._read_merged(batch_dirs=batch_dirs)
-        tmp = f"{self.target_dir}/base_compacting"
-        # persist the winning _version per row: replaying an old delta
-        # batch over the new base must stay a no-op
-        self._write_base(merged, tmp)
-        base = f"{self.target_dir}/base"
-        retired = f"{self.target_dir}/base_retired"
-        shutil.rmtree(retired, ignore_errors=True)
-        if os.path.exists(base):
-            os.rename(base, retired)
-        os.rename(tmp, base)
-        shutil.rmtree(retired, ignore_errors=True)
-        for d in batch_dirs:
-            shutil.rmtree(d, ignore_errors=True)
+        with _writer_lease(self.spark, self.target_dir):
+            m = self._manifest()
+            folded = max([int(m["folded"]), *self._delta_batches()])
+            self._commit_base(
+                self._read_merged(m=m, through=folded), m, folded
+            )
 
     # -- content-checksum parity (beyond-reference hardening) ---------------
     def checksum_parity(self, source: DataFrame) -> DataFrame:
@@ -423,65 +490,44 @@ class Mirror:
             )
         )
 
-    def _recover_base(self) -> bool:
-        """Repair a compaction cut between its two renames (base moved
-        to base_retired, base_compacting not yet moved to base): finish
-        the swap when base_compacting is a complete write (_SUCCESS),
-        else put base_retired back. Without this, readers would serve
-        the delta-only state and the next compact() would fold delta
-        alone and delete the retired base. True when it moved a dir."""
-        base = f"{self.target_dir}/base"
-        if os.path.exists(base):
-            return False
-        tmp = f"{self.target_dir}/base_compacting"
-        retired = f"{self.target_dir}/base_retired"
-        if os.path.exists(f"{tmp}/_SUCCESS"):
-            os.rename(tmp, base)
-        elif os.path.exists(retired):
-            os.rename(retired, base)
-        else:
-            return False
-        return True
-
-    def _read_base(self) -> DataFrame | None:
+    def _read_base(self, m: dict) -> DataFrame | None:
+        if "base" not in m:
+            return None
         fields = list(self.row_schema.fields) + [
             # per-row winning version (BASE_VERSION for snapshot rows)
             T.StructField("_version", T.LongType())
         ]
         if self.n_buckets:
             fields.append(T.StructField("_bucket", T.IntegerType()))
-        reader = self.spark.read.schema(T.StructType(fields))
-        try:
-            return reader.parquet(f"{self.target_dir}/base")
-        except Exception:
-            # only a reader that finds no base pays the recovery probe
-            if not self._recover_base():
-                return None
-        return reader.parquet(f"{self.target_dir}/base")
+        return self.spark.read.schema(T.StructType(fields)).parquet(
+            f"{self.target_dir}/{m['base']}"
+        )
 
     def _read_delta(
-        self, paths: Sequence[str] | None = None
+        self, m: dict | None = None, through: int | None = None
     ) -> DataFrame | None:
-        targets = (
-            list(paths)
-            if paths is not None
-            else [f"{self.target_dir}/delta/_batch=*"]
+        """The delta batches above the record's folded id (and at or
+        below `through`), or None when there are none. delta/ is read
+        as one dir partitioned by _batch, so the bounds are partition
+        filters and folded batches are never opened. _batch is in the
+        schema so the filter resolves even while the only batch dir is
+        still being written. A read error raises."""
+        m = m or self._manifest()
+        lo = int(m["folded"])
+        if not any(
+            lo < n and (through is None or n <= through)
+            for n in self._delta_batches()
+        ):
+            return None
+        batch = F.col("_batch")
+        keep = batch > lo if through is None else (batch > lo) & (batch <= through)
+        schema = change_event_schema(self.row_schema).add("_batch", T.LongType())
+        return (
+            self.spark.read.schema(schema)
+            .parquet(f"{self.target_dir}/delta")
+            .filter(keep)
+            .drop("_batch")
         )
-        if not targets:
-            return None
-        try:
-            return self.spark.read.schema(
-                change_event_schema(self.row_schema)
-            ).parquet(*targets)
-        except Exception:
-            # Explicit paths come from compact(), which deletes these
-            # dirs right after the merged base lands. Swallowing a
-            # transient read error there would compact WITHOUT the
-            # delta and then destroy it — let it propagate. For the
-            # glob probe, no delta dir yet is an expected state.
-            if paths is not None:
-                raise
-            return None
 
 
 class MirrorSet:

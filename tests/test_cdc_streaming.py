@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from peerdb_cdc_psql_clickhouse_spark.catalog import change_event_schema
+from peerdb_cdc_psql_clickhouse_spark.commit import _read_manifest, kept_manifests
 from tests.conftest import stagger_mtimes
 from peerdb_cdc_psql_clickhouse_spark.operators.cdc import (
     latest_state,
@@ -320,8 +321,9 @@ def test_compact_after_evolve_preserves_widened_state(
 
     mirror.evolve(WIDE_SCHEMA)
     mirror.compact()
+    base = _read_manifest(spark, mirror.target_dir)["base"]
     base_cols = set(
-        spark.read.parquet(f"{mirror.target_dir}/base").columns
+        spark.read.parquet(f"{mirror.target_dir}/{base}").columns
     )
     assert {"id", "val", "note", "_version"} <= base_cols
 
@@ -518,61 +520,85 @@ def test_mirror_compact_preserves_state(spark, tmp_path, mirror):
     assert mirror._read_delta() is None
 
 
-def test_compact_crash_between_renames_keeps_base(
-    spark, tmp_path, mirror, monkeypatch
-):
-    """compact() swaps base by two renames (base -> base_retired,
-    base_compacting -> base). A crash between them leaves no base/;
-    a fresh Mirror must still read the pre-crash state (finishing the
-    swap from the complete base_compacting), and a second compact()
-    must keep it instead of folding the delta alone."""
+def _crash_on_delete(monkeypatch, suffix):
+    """Make the Mirror's filesystem delete of the path ending in
+    `suffix` raise, as a process dying at that step would."""
+    import peerdb_cdc_psql_clickhouse_spark.streaming.mirror as mirror_mod
+
+    real = mirror_mod.hadoop_fs
+
+    class CrashingFs:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+        def delete(self, p, recursive):
+            if p.toString().endswith(suffix):
+                raise OSError(f"simulated crash deleting {suffix}")
+            return self._fs.delete(p, recursive)
+
+    def crashing_hadoop_fs(spark, path):
+        fs, p, jvm = real(spark, path)
+        return CrashingFs(fs), p, jvm
+
+    monkeypatch.setattr(mirror_mod, "hadoop_fs", crashing_hadoop_fs)
+
+
+def _on_disk(m):
+    """(base generation dirs, delta batch dirs) under the mirror."""
     import os
 
+    names = os.listdir(m.target_dir)
+    delta = f"{m.target_dir}/delta"
+    batches = os.listdir(delta) if os.path.exists(delta) else []
+    return sorted(n for n in names if n.startswith("base_g")), sorted(batches)
+
+
+@pytest.mark.parametrize("crash", ["before_commit", "before_prune", "mid_prune"])
+def test_compact_crash_at_each_commit_step_keeps_state(
+    spark, tmp_path, mirror, monkeypatch, crash
+):
+    """A crash at each step of compaction's commit: after the new base
+    generation is written and before the manifest commit; after the
+    commit and before the prune; partway through the prune (after
+    base_g1 and delta batch 0 are deleted). A fresh Mirror reads the
+    pre-crash state, and the next compact() converges and leaves only
+    what the two kept records reference."""
+    import peerdb_cdc_psql_clickhouse_spark.streaming.mirror as mirror_mod
+
     mirror.snapshot(
-        spark.createDataFrame(
-            [(i, f"s{i}") for i in range(10, 19)], ROW_SCHEMA
-        )
+        spark.createDataFrame([(i, f"s{i}") for i in range(10, 19)], ROW_SCHEMA)
     )
     changes_dir = str(tmp_path / "changes")
     write_change_batches(_mk_changes(spark, EVENTS), changes_dir, 3)
     mirror.start(changes_dir, available_now=True).awaitTermination(120)
     before = _as_dict(mirror.read_target())
     assert len(before) > len(_naive_replay(EVENTS))
+    mirror.compact()  # folds batches 0-3; the next compact retires them
 
-    real_rename = os.rename
+    def boom(*a, **kw):
+        raise OSError("simulated crash")
 
-    def crash_on_swap(src, dst):
-        if str(src).endswith("base_compacting"):
-            raise OSError("simulated crash between the compaction renames")
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(os, "rename", crash_on_swap)
+    if crash == "before_commit":
+        monkeypatch.setattr(mirror_mod, "_commit_manifest", boom)
+    elif crash == "before_prune":
+        monkeypatch.setattr(mirror_mod, "kept_manifests", boom)
+    else:
+        _crash_on_delete(monkeypatch, "/delta/_batch=1")
     with pytest.raises(OSError, match="simulated crash"):
         mirror.compact()
-    monkeypatch.setattr(os, "rename", real_rename)
-    assert not os.path.exists(f"{mirror.target_dir}/base")
+    monkeypatch.undo()
+    gens, _batches = _on_disk(mirror)
+    assert "base_g3" in gens  # the crashed compaction wrote its generation
 
     fresh = _mirror_t(spark, tmp_path)
     assert _as_dict(fresh.read_target()) == before
     fresh.compact()
     assert _as_dict(fresh.read_target()) == before
-    assert not os.path.exists(f"{fresh.target_dir}/base_retired")
-
-
-def test_compact_crash_restores_retired_base_without_complete_rewrite(
-    spark, tmp_path, mirror
-):
-    """The other recovery branch: no base/ and a base_compacting
-    without _SUCCESS (an interrupted rewrite) puts base_retired back,
-    so compact() starts from the last complete base."""
-    import os
-
-    mirror.snapshot(spark.createDataFrame([(1, "a"), (2, "b")], ROW_SCHEMA))
-    base = f"{mirror.target_dir}/base"
-    os.rename(base, f"{mirror.target_dir}/base_retired")
-    os.makedirs(f"{mirror.target_dir}/base_compacting")
-    mirror.compact()
-    assert _as_dict(mirror.read_target()) == {1: "a", 2: "b"}
+    kept = kept_manifests(spark, fresh.target_dir)
+    assert _on_disk(fresh) == (sorted(r["base"] for r in kept), [])
 
 
 def test_compact_refuses_while_apply_is_active(spark, tmp_path, mirror):
@@ -617,13 +643,11 @@ def test_compact_tolerates_replayed_delta_batch(spark, tmp_path, mirror):
 def test_compact_crash_in_fold_loop_keeps_later_tombstones(
     spark, tmp_path, mirror, monkeypatch
 ):
-    """compact() deletes the folded dirs in ascending batch id, so a
-    crash partway leaves a suffix of the batches. Here batch 2 updates
-    key 2 and batch 11 deletes it; a lexicographic order (_batch=10
-    and _batch=11 before _batch=2) would delete the tombstone first and
-    a crash at _batch=2 would bring key 2 back as 'b2'."""
-    import shutil
-
+    """The folded delta batches are deleted by the prune of the
+    compaction AFTER the one that folded them. Batch 2 updates key 2
+    and batch 11 deletes it; a crash while the second compaction
+    deletes _batch=2 leaves batches 2-11 on disk, and they must stay
+    folded rather than bring key 2 back as 'b2'."""
     events = (
         [("insert", 0, 1, "a0"), ("insert", 1, 2, "b1"), ("update", 2, 2, "b2")]
         + [("update", v, 1, f"a{v}") for v in range(3, 11)]
@@ -634,21 +658,72 @@ def test_compact_crash_in_fold_loop_keeps_later_tombstones(
     stagger_mtimes(*[f"{changes_dir}/_batch={v}" for v in range(12)])
     mirror.start(changes_dir, available_now=True).awaitTermination(120)
     assert _as_dict(mirror.read_target()) == {1: "a10"}
+    mirror.compact()
 
-    real_rmtree = shutil.rmtree
-
-    def crash_at_batch_2(path, *args, **kw):
-        if str(path).endswith("/delta/_batch=2"):
-            raise OSError("simulated crash in the fold loop")
-        return real_rmtree(path, *args, **kw)
-
-    monkeypatch.setattr(shutil, "rmtree", crash_at_batch_2)
+    _crash_on_delete(monkeypatch, "/delta/_batch=2")
     with pytest.raises(OSError, match="simulated crash"):
         mirror.compact()
-    monkeypatch.setattr(shutil, "rmtree", real_rmtree)
+    monkeypatch.undo()
 
     fresh = _mirror_t(spark, tmp_path)
     assert sorted(map(tuple, fresh.read_target().collect())) == [(1, "a10")]
+
+
+def test_rerun_of_folded_batch_is_ignored(spark, tmp_path, mirror):
+    """Structured Streaming re-runs a batch under its id. Once
+    compaction has folded that id, the re-run's part is not read: here
+    batch 0 updates key 2, batch 1 deletes it, and re-running batch 0
+    after the compaction must not bring key 2 back."""
+    mirror.snapshot(spark.createDataFrame([(1, "a"), (2, "b")], ROW_SCHEMA))
+    batch0 = _mk_changes(spark, [("update", 5, 1, "a5"), ("update", 6, 2, "b6")])
+    batch1 = _mk_changes(spark, [("update", 9, 1, "a9"), ("delete", 10, 2, None)])
+    mirror._apply_batch(batch0, 0)
+    mirror._apply_batch(batch1, 1)
+    mirror.compact()
+    mirror._apply_batch(batch0, 0)
+    assert sorted(map(tuple, mirror.read_target().collect())) == [(1, "a9")]
+
+
+def test_frame_read_before_compact_collects_after_it(spark, tmp_path, mirror):
+    """Snapshot isolation: a read_target() frame built before compact()
+    still collects the same rows after it, because the compaction
+    writes a new base generation and retires nothing the previous
+    record reads until the next compaction."""
+    mirror.snapshot(spark.createDataFrame([(10, "s10")], ROW_SCHEMA))
+    changes_dir = str(tmp_path / "changes")
+    write_change_batches(_mk_changes(spark, EVENTS), changes_dir, 3)
+    mirror.start(changes_dir, available_now=True).awaitTermination(120)
+    rows = sorted(map(tuple, mirror.read_target().collect()))
+    # not collected before the compaction: a second collect of one
+    # frame would reuse its shuffle output instead of reading files
+    frame = mirror.read_target()
+    mirror.compact()
+    assert sorted(map(tuple, frame.collect())) == rows
+
+
+def test_start_refuses_checkpoint_behind_folded_batch(spark, tmp_path, mirror):
+    """A checkpoint deleted after a compaction would restart the stream
+    at batch 0, below the folded id, so its batches would be ignored.
+    start() raises and names resync(); resync() then converges."""
+    import shutil
+
+    changes_dir = str(tmp_path / "changes")
+    write_change_batches(_mk_changes(spark, EVENTS), changes_dir, 3)
+    mirror.snapshot(spark.createDataFrame([(50, "seed")], ROW_SCHEMA))
+    mirror.start(changes_dir, available_now=True).awaitTermination(120)
+    mirror.compact()
+    expect = _naive_replay(EVENTS, base={50: "seed"})
+    assert _as_dict(mirror.read_target()) == expect
+
+    shutil.rmtree(mirror.checkpoint)
+    with pytest.raises(RuntimeError, match="resync"):
+        mirror.start(changes_dir, available_now=True, max_files_per_trigger=None)
+
+    mirror.resync(spark.createDataFrame([(50, "seed")], ROW_SCHEMA))
+    mirror.start(
+        changes_dir, available_now=True, max_files_per_trigger=None
+    ).awaitTermination(120)
+    assert _as_dict(mirror.read_target()) == expect
 
 
 def test_raw_batches_with_several_versions_per_key_converge(spark, tmp_path):

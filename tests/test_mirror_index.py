@@ -174,10 +174,12 @@ def test_second_writer_rejected_during_mirror_maintenance(
     version chain stays gap-free (no torn or skipped commit)."""
     import threading
 
-    from peerdb_cdc_psql_clickhouse_spark.operators.search import (
+    from peerdb_cdc_psql_clickhouse_spark.commit import (
         ConcurrentWriterError,
         _manifest_versions,
         _writer_lease,
+    )
+    from peerdb_cdc_psql_clickhouse_spark.operators.search import (
         text_index_insert,
     )
 

@@ -186,7 +186,7 @@ def test_delete_then_search_excludes_doc_exactly(spark, tmp_path):
 
 
 def test_compact_equals_rebuild_and_clears_markers(spark, tmp_path):
-    from peerdb_cdc_psql_clickhouse_spark.operators.search import (
+    from peerdb_cdc_psql_clickhouse_spark.commit import (
         _read_manifest,
     )
 
@@ -216,8 +216,10 @@ def test_compact_crash_before_commit_leaves_old_snapshot(spark, tmp_path):
     names them), readers see exactly the tombstone-filtered old
     snapshot, recovery prunes the orphans, and a re-run compact
     converges — no stats arithmetic exists to drift."""
-    from peerdb_cdc_psql_clickhouse_spark.operators.search import (
+    from peerdb_cdc_psql_clickhouse_spark.commit import (
         _read_manifest,
+    )
+    from peerdb_cdc_psql_clickhouse_spark.operators.search import (
         open_text_index as _open,
         text_index_recover,
     )
@@ -323,7 +325,7 @@ def test_writer_lease_blocks_second_writer(spark, tmp_path):
     write proceeds; the lease is released on success AND on failure."""
     import pytest
 
-    from peerdb_cdc_psql_clickhouse_spark.operators.search import (
+    from peerdb_cdc_psql_clickhouse_spark.commit import (
         _LOCK,
         ConcurrentWriterError,
     )
@@ -358,7 +360,7 @@ def test_manifest_commit_is_cas(spark, tmp_path):
     intact."""
     import pytest
 
-    from peerdb_cdc_psql_clickhouse_spark.operators.search import (
+    from peerdb_cdc_psql_clickhouse_spark.commit import (
         ConcurrentWriterError,
         _commit_manifest,
         _read_manifest,
@@ -429,8 +431,10 @@ def test_lifecycle_index_equals_one_pass_build_on_corpus(spark):
     # compaction really ran: the manifest lists no tombstone batches
     # and points at compacted generation dirs
     from peerdb_cdc_psql_clickhouse_spark.artifacts import _persistent_slot
-    from peerdb_cdc_psql_clickhouse_spark.operators.search import (
+    from peerdb_cdc_psql_clickhouse_spark.commit import (
         _read_manifest,
+    )
+    from peerdb_cdc_psql_clickhouse_spark.operators.search import (
         _text_index_key,
     )
 
@@ -542,7 +546,7 @@ def test_lease_release_is_token_checked(spark, tmp_path):
 
     import pytest
 
-    from peerdb_cdc_psql_clickhouse_spark.operators.search import (
+    from peerdb_cdc_psql_clickhouse_spark.commit import (
         _LOCK,
         ConcurrentWriterError,
         _writer_lease,
@@ -576,7 +580,7 @@ def test_lease_release_does_not_mask_body_error(spark, tmp_path):
 
     import pytest
 
-    from peerdb_cdc_psql_clickhouse_spark.operators.search import (
+    from peerdb_cdc_psql_clickhouse_spark.commit import (
         _LOCK,
         _writer_lease,
     )
@@ -604,13 +608,13 @@ def test_lease_heartbeat_keeps_long_writer_alive(spark, tmp_path, monkeypatch):
 
     import pytest
 
-    import peerdb_cdc_psql_clickhouse_spark.operators.search as search_mod
-    from peerdb_cdc_psql_clickhouse_spark.operators.search import (
+    import peerdb_cdc_psql_clickhouse_spark.commit as commit
+    from peerdb_cdc_psql_clickhouse_spark.commit import (
         ConcurrentWriterError,
         _writer_lease,
     )
 
-    monkeypatch.setattr(search_mod, "WRITER_LEASE_TIMEOUT_SEC", 0.4)
+    monkeypatch.setattr(commit, "WRITER_LEASE_TIMEOUT_SEC", 0.4)
     root = str(tmp_path / "idx")
     os.makedirs(root)
     with _writer_lease(spark, root):
@@ -627,7 +631,7 @@ def test_break_stale_lease_single_winner(spark, tmp_path):
     """ADVICE r9: breaking a stale lease is an atomic rename-claim —
     exactly ONE of two racers observes success, so the loser can never
     delete the winner's fresh lease out from under it."""
-    from peerdb_cdc_psql_clickhouse_spark.operators.search import (
+    from peerdb_cdc_psql_clickhouse_spark.commit import (
         _LOCK,
         _break_stale_lease,
         _lease_token,
@@ -661,7 +665,7 @@ def test_break_stale_lease_spares_replaced_fresh_lease(spark, tmp_path):
     lease."""
     import json
 
-    from peerdb_cdc_psql_clickhouse_spark.operators.search import (
+    from peerdb_cdc_psql_clickhouse_spark.commit import (
         _LOCK,
         _break_stale_lease,
         _lease_token,
@@ -701,8 +705,8 @@ def test_lease_stamp_failure_leaves_no_orphan(spark, tmp_path, monkeypatch):
     block the retry loop (it would read as a fresh held lease with no
     live heartbeat — a self-inflicted ConcurrentWriterError for the
     full timeout)."""
-    import peerdb_cdc_psql_clickhouse_spark.operators.search as search_mod
-    from peerdb_cdc_psql_clickhouse_spark.operators.search import (
+    import peerdb_cdc_psql_clickhouse_spark.commit as commit
+    from peerdb_cdc_psql_clickhouse_spark.commit import (
         _LOCK,
         _writer_lease,
     )
@@ -711,7 +715,7 @@ def test_lease_stamp_failure_leaves_no_orphan(spark, tmp_path, monkeypatch):
     os.makedirs(root)
     lock = f"{root}/{_LOCK}"
 
-    real_stamp = search_mod._stamp_lease
+    real_stamp = commit._stamp_lease
     fails = {"n": 1}
 
     def flaky_stamp(fs, p, token):
@@ -720,7 +724,7 @@ def test_lease_stamp_failure_leaves_no_orphan(spark, tmp_path, monkeypatch):
             raise IOError("injected stamp failure")
         real_stamp(fs, p, token)
 
-    monkeypatch.setattr(search_mod, "_stamp_lease", flaky_stamp)
+    monkeypatch.setattr(commit, "_stamp_lease", flaky_stamp)
     # first attempt's stamp fails -> its orphan is cleaned up -> the
     # retry acquires normally instead of raising against the orphan
     with _writer_lease(spark, root):
@@ -736,8 +740,8 @@ def test_lease_release_retries_transient_read_errors(
     as 'lease lost' — the release retries; with the lease still ours
     it is deleted and NO spurious ConcurrentWriterError fires after a
     successful body."""
-    import peerdb_cdc_psql_clickhouse_spark.operators.search as search_mod
-    from peerdb_cdc_psql_clickhouse_spark.operators.search import (
+    import peerdb_cdc_psql_clickhouse_spark.commit as commit
+    from peerdb_cdc_psql_clickhouse_spark.commit import (
         _LOCK,
         _writer_lease,
     )
@@ -746,7 +750,7 @@ def test_lease_release_retries_transient_read_errors(
     os.makedirs(root)
     lock = f"{root}/{_LOCK}"
 
-    real_read = search_mod._fs_read_text
+    real_read = commit._fs_read_text
     state = {"arm": False, "fails": 0}
 
     def flaky_read(fs, jvm, path_str):
@@ -755,7 +759,7 @@ def test_lease_release_retries_transient_read_errors(
             raise IOError("injected transient read failure")
         return real_read(fs, jvm, path_str)
 
-    monkeypatch.setattr(search_mod, "_fs_read_text", flaky_read)
+    monkeypatch.setattr(commit, "_fs_read_text", flaky_read)
     with _writer_lease(spark, root):
         state["arm"] = True  # fail the first two release-time reads
     assert state["fails"] == 2  # the injected errors were hit ...
@@ -798,19 +802,19 @@ def test_lease_heartbeat_survives_transient_read_errors(
 
     import pytest
 
-    import peerdb_cdc_psql_clickhouse_spark.operators.search as search_mod
-    from peerdb_cdc_psql_clickhouse_spark.operators.search import (
+    import peerdb_cdc_psql_clickhouse_spark.commit as commit
+    from peerdb_cdc_psql_clickhouse_spark.commit import (
         _LOCK,
         ConcurrentWriterError,
         _writer_lease,
     )
 
-    monkeypatch.setattr(search_mod, "WRITER_LEASE_TIMEOUT_SEC", 0.6)
+    monkeypatch.setattr(commit, "WRITER_LEASE_TIMEOUT_SEC", 0.6)
     root = str(tmp_path / "idx")
     os.makedirs(root)
     lock = f"{root}/{_LOCK}"
 
-    real_read = search_mod._fs_read_text
+    real_read = commit._fs_read_text
     state = {"fail": False, "fails": 0}
 
     def flaky_read(fs, jvm, path_str):
@@ -819,7 +823,7 @@ def test_lease_heartbeat_survives_transient_read_errors(
             raise IOError("injected transient read failure")
         return real_read(fs, jvm, path_str)
 
-    monkeypatch.setattr(search_mod, "_fs_read_text", flaky_read)
+    monkeypatch.setattr(commit, "_fs_read_text", flaky_read)
     with _writer_lease(spark, root):
         state["fail"] = True  # every heartbeat read now errs
         time.sleep(1.4)  # > 2 timeout periods; beats ~every 0.2s
@@ -855,8 +859,8 @@ def test_lease_acquire_verify_survives_transient_read_errors(
     it used to leave the freshly stamped lease stranded and raise
     'held' against our own file. With retried provable reads the
     acquire succeeds through two failing verify reads."""
-    import peerdb_cdc_psql_clickhouse_spark.operators.search as search_mod
-    from peerdb_cdc_psql_clickhouse_spark.operators.search import (
+    import peerdb_cdc_psql_clickhouse_spark.commit as commit
+    from peerdb_cdc_psql_clickhouse_spark.commit import (
         _LOCK,
         _writer_lease,
     )
@@ -865,7 +869,7 @@ def test_lease_acquire_verify_survives_transient_read_errors(
     os.makedirs(root)
     lock = f"{root}/{_LOCK}"
 
-    real_read = search_mod._fs_read_text
+    real_read = commit._fs_read_text
     state = {"fails": 0, "arm": False}
 
     def flaky_read(fs, jvm, path_str):
@@ -874,14 +878,14 @@ def test_lease_acquire_verify_survives_transient_read_errors(
             raise IOError("injected transient read failure")
         return real_read(fs, jvm, path_str)
 
-    real_stamp = search_mod._stamp_lease
+    real_stamp = commit._stamp_lease
 
     def arming_stamp(fs, p, token):
         real_stamp(fs, p, token)
         state["arm"] = True  # fail the verify reads that follow
 
-    monkeypatch.setattr(search_mod, "_fs_read_text", flaky_read)
-    monkeypatch.setattr(search_mod, "_stamp_lease", arming_stamp)
+    monkeypatch.setattr(commit, "_fs_read_text", flaky_read)
+    monkeypatch.setattr(commit, "_stamp_lease", arming_stamp)
     with _writer_lease(spark, root):
         state["arm"] = False  # stop injecting for heartbeat/release
         assert os.path.exists(lock)
@@ -918,7 +922,7 @@ def test_break_stale_lease_retries_transient_restore_failure(
     the victim keeps its lease."""
     import json
 
-    from peerdb_cdc_psql_clickhouse_spark.operators.search import (
+    from peerdb_cdc_psql_clickhouse_spark.commit import (
         _LOCK,
         _break_stale_lease,
         _lease_token,
@@ -960,7 +964,7 @@ def test_break_stale_lease_surfaces_stolen_lease(spark, tmp_path, caplog):
     import json
     import logging
 
-    from peerdb_cdc_psql_clickhouse_spark.operators.search import (
+    from peerdb_cdc_psql_clickhouse_spark.commit import (
         _LOCK,
         _break_stale_lease,
         _lease_token,
@@ -1025,7 +1029,7 @@ def test_break_stale_lease_detects_landed_but_thrown_restore(
     import json
     import logging
 
-    from peerdb_cdc_psql_clickhouse_spark.operators.search import (
+    from peerdb_cdc_psql_clickhouse_spark.commit import (
         _LOCK,
         _break_stale_lease,
         _lease_token,
@@ -1099,7 +1103,7 @@ def test_break_stale_lease_tokenless_landed_restore_confirmed(
     import json
     import logging
 
-    from peerdb_cdc_psql_clickhouse_spark.operators.search import (
+    from peerdb_cdc_psql_clickhouse_spark.commit import (
         _LOCK,
         _break_stale_lease,
         _lease_token,
